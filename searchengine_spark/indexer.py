@@ -31,7 +31,6 @@ Scale design (the part that must survive 1000 executors / 100 TB):
 
 from __future__ import annotations
 
-import math
 import os
 from collections.abc import Iterator
 
@@ -42,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import catalog, checkpoint
-from .bm25 import B, K1
+from .bm25 import tf_norm
 from .compress import (
     block_byte_offsets,
     encode_position_lists,
@@ -168,7 +167,7 @@ def term_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> dict[
     XXH64 replica (xxh64.py). This used to run a tiny Spark job to keep
     the hash in the JVM, but that job cost ~0.4 s of scheduling per
     request — the largest slice of the solo-serving plan phase
-    (tools/solo_serve_profile.py). The replica is bit-pinned against
+    (perfbench's traced serve workload). The replica is bit-pinned against
     `F.xxhash64` by tests/test_ids.py; the build side (`_bucket`) stays
     JVM-evaluated, so any drift would break rank identity loudly.
     Python's % on a positive modulus is exactly Spark's pmod."""
@@ -345,7 +344,7 @@ def _postings_kernel(avgdl: float):
         doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
         tfs = pdf["tf"].to_numpy(dtype=np.int64)
         dls = pdf["doc_len"].to_numpy(dtype=np.int64)
-        tf_norms = tfs / (tfs + K1 * (1.0 - B + B * dls / avgdl))
+        tf_norms = tf_norm(tfs, dls, avgdl)
         doc_blob, tf_blob, block_last, block_max, (doc_boff, tf_boff) = (
             encode_postings(doc_ids, tfs, tf_norms)
         )

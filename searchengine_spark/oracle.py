@@ -7,21 +7,22 @@ to 1e-9, tie-break blended DESC then doc_id ASC).
 
 Shares only the *scalar* definitions with the engine (textprep extraction
 / stemming — themselves verified byte-identical against the compiled
-reference Java — and the bm25 constants); everything distributed
-(shuffles, joins, aggregation order) is re-derived independently.
+reference Java — the bm25 formulas, and PageRank's fixed-point constants);
+everything distributed (shuffles, joins, aggregation order) is re-derived
+independently.
 
 Float determinism: per-(query,doc) BM25 folds per-term scores in sorted-
 term order — the exact summation sequence the engine's sort_array +
-aggregate fold performs — so equality is bitwise up to Spark's partial-sum
-ordering in PageRank (tolerance 1e-9 there).
+aggregate fold performs. PageRank runs the engine's exact int64 fixed-point
+rule, so its ranks equal the engine's bit for bit (``==``).
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
-from .bm25 import B, K1, W_PAGERANK, W_RELEVANCE, W_TITLE
+from .bm25 import W_PAGERANK, W_RELEVANCE, W_TITLE, bm25
+from .pagerank import PR_BASE_U, PR_ONE_U, PR_SCALE
 from .query import parse_query
 from .textprep import (
     doc_term_stats,
@@ -98,37 +99,39 @@ def build_oracle_index(
 def oracle_pagerank(
     idx: OracleIndex, threshold: float = 1e-4, max_iter: int = 200
 ) -> dict[int, float]:
-    """Reference math (jobs/PageRank.java): init 1.0; per iteration each
-    node transfers 0.85*rank/outdeg to each out-link (duplicates count);
-    new = sum(incoming from corpus nodes) + 0.15; stop at L-inf <= threshold.
-    Contributions to docs outside the corpus are dropped (the reference's
-    join against the state table, PageRank.java:99-100)."""
-    ranks = {d: 1.0 for d in idx.doc_url}
+    """Reference math (jobs/PageRank.java) in the engine's int64 fixed
+    point (u = rank * PR_SCALE): init 1.0; per iteration each node passes
+    floor(17*u / (20*outdeg)) to each out-link (duplicates count);
+    new = sum(incoming from corpus nodes) + 0.15; stop at integer
+    L-inf <= threshold * PR_SCALE. Contributions to docs outside the
+    corpus are dropped (the reference's join against the state table,
+    PageRank.java:99-100). Python ints never overflow, so this is also
+    the reference for the engine's overflow-free share spelling."""
+    u = dict.fromkeys(idx.doc_url, PR_ONE_U)
     for _ in range(max_iter):
-        incoming: dict[int, float] = {d: 0.0 for d in ranks}
+        new = dict.fromkeys(u, PR_BASE_U)
         for src, dsts in idx.links.items():
             if not dsts:
                 continue
-            share = 0.85 * ranks[src] / len(dsts)
+            share = 17 * u[src] // (20 * len(dsts))
             for dst in dsts:
-                if dst in incoming:
-                    incoming[dst] += share
-        new_ranks = {d: incoming[d] + 0.15 for d in ranks}
-        delta = max(abs(new_ranks[d] - ranks[d]) for d in ranks)
-        ranks = new_ranks
-        if delta <= threshold:
+                new[dst] += share
+        delta = max(abs(new[d] - u[d]) for d in u)
+        u = new
+        if delta <= threshold * PR_SCALE:
             break
-    idx.pagerank = ranks
-    return ranks
+    idx.pagerank = {d: float(v) / float(PR_SCALE) for d, v in u.items()}
+    return idx.pagerank
 
 
 def _bm25_term(idx: OracleIndex, term: str, doc_id: int) -> float:
-    tf = idx.postings[term][doc_id]
-    df = len(idx.postings[term])
-    idf = math.log(1.0 + (idx.n_docs - df + 0.5) / (df + 0.5))
-    dl = idx.doc_len[doc_id]
-    tf_norm = tf / (tf + K1 * (1.0 - B + B * dl / idx.avgdl))
-    return idf * (K1 + 1.0) * tf_norm
+    return bm25(
+        idx.postings[term][doc_id],
+        idx.doc_len[doc_id],
+        idx.avgdl,
+        idx.n_docs,
+        len(idx.postings[term]),
+    )
 
 
 def oracle_topk(

@@ -15,10 +15,18 @@ join-aggregate with the reference's exact math (SURVEY.md §3.3):
   dropped (the join against the state table, ``PageRank.java:99-100``);
 * convergence: L-inf max |new - old| <= threshold (``PageRank.java:120-142``).
 
-Scale notes: edges and ranks are both keyed by doc_id; the join is a
-shuffle hash/sort-merge join that AQE handles, ranks are checkpointed
-every CHECKPOINT_EVERY iterations to cut lineage (SURVEY.md §7.3), and
-out-degrees are precomputed once.
+Arithmetic is exact int64 fixed point, so ranks are bit-identical at any
+parallelism and ``==`` ``oracle.oracle_pagerank``, which runs the same
+integer rule. ``power_iteration`` is the only PageRank round in the Spark
+code: the engine and the registry's variants (personalized, TrustRank,
+host-weighted, convergence audit, warm restart) call it with their own
+edges, teleport vector and start.
+
+Scale notes: each edge gets its source's weighted out-degree once (a
+window over the edges); a round is one shuffle join of ranks to those
+edges plus one per-node integer sum. The convergence stop materializes the
+weighted edges and each round (localCheckpoint, which also cuts lineage)
+and collects one integer L-inf per round.
 """
 
 from __future__ import annotations
@@ -28,7 +36,7 @@ from collections.abc import Iterator
 from urllib.parse import urljoin
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -168,6 +176,146 @@ def extract_edges(spark: SparkSession, pages: DataFrame) -> DataFrame:
     return pages.select("url", "html").mapInPandas(kernel, EDGES_SCHEMA)
 
 
+# Exact int64 fixed point: u = rank * PR_SCALE. 0.85 is exactly 17/20, so a
+# round is pure integer arithmetic: bit-identical at any parallelism and in
+# any engine. u < 2^53 keeps the final u / PR_SCALE one correctly rounded
+# IEEE division.
+PR_SCALE = 10**12
+PR_ONE_U = PR_SCALE  # initial rank 1.0
+PR_BASE_U = 3 * PR_SCALE // 20  # the +0.15 teleport
+# Version of the pagerank stage's output; the stage fingerprint and the
+# tests' cached-fixture marker key on it.
+STAGE_VERSION = 2
+
+
+def share(u: str) -> Column:
+    """floor(17*u / d), what a source passes per unit of out-weight
+    (d = 20 * weighted out-degree), spelled 17*(u div d) + (17*(u mod d))
+    div d. The two agree for u, d >= 0 (u = q*d + r), but this one never
+    forms 17*u, which overflows int64 once a rank passes ~5.4*10^5; it
+    only needs 17*d < 2^63 (weighted out-degree below ~2.7*10^16)."""
+    return F.expr(f"17 * ({u} div d) + (17 * ({u} % d)) div d")
+
+
+def to_rank(u: str) -> Column:
+    """The fixed-point column ``u`` as a double rank."""
+    return F.col(u).cast("double") / F.lit(float(PR_SCALE))
+
+
+def _weighted_edges(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(src, dst, w, d): each edge with d = 20 * its source's weighted
+    out-degree, plus one w=0 self row per node that carries the node's
+    rank through a round. ``w`` defaults to 1, so each duplicate link
+    counts."""
+    w = F.col("w") if "w" in edges.columns else F.lit(1)
+    # a window, not an aggregate joined back: the edges (in the engine,
+    # HTML link extraction) are read once
+    e = edges.select("src", "dst", w.cast("long").alias("w")).withColumn(
+        "d", 20 * F.sum("w").over(Window.partitionBy("src"))
+    )
+    carry = nodes.select(
+        F.col("node").alias("src"),
+        F.col("node").alias("dst"),
+        F.lit(0).cast("long").alias("w"),
+        F.lit(20).cast("long").alias("d"),
+    )
+    return e.unionAll(carry)
+
+
+def _round(
+    pw: DataFrame, ranks: DataFrame, teleport: dict[str, int | Column]
+) -> DataFrame:
+    """One round: ONE join of the ranks to the weighted edges and ONE
+    per-node integer sum. The self rows carry each node's old rank into
+    ``prev_<chain>``, so a convergence delta needs no second join."""
+    carried = F.col("w") == 0
+    return (
+        pw.join(ranks.select(F.col("node").alias("src"), *teleport), "src")
+        .groupBy(F.col("dst").alias("node"))
+        .agg(
+            *[F.sum(F.col("w") * share(c)).alias(f"in_{c}") for c in teleport],
+            *[F.max(F.when(carried, F.col(c))).alias(f"prev_{c}") for c in teleport],
+        )
+        .select(
+            "node",
+            *[
+                (F.lit(t) + F.col(f"in_{c}")).cast("long").alias(c)
+                for c, t in teleport.items()
+            ],
+            *[f"prev_{c}" for c in teleport],
+        )
+    )
+
+
+def power_rounds(
+    edges: DataFrame,
+    nodes: DataFrame,
+    teleport: dict[str, int | Column],
+    *,
+    init: dict[str, int | Column] | None = None,
+    threshold: float | None = None,
+) -> Iterator[DataFrame]:
+    """The PageRank power iteration, one (node, <chain>..., prev_<chain>...)
+    frame per round.
+
+    ``nodes`` is the distinct (node, ...) set and ``edges`` its
+    (src, dst[, w > 0]) links; every dst must be a node. Each chain is a rank
+    vector in int64 fixed point. It teleports ``teleport[chain]``, a
+    constant or a Column over ``node`` (personalized and trusted-seed
+    variants), and starts at ``init[chain]``, a constant or a Column over
+    ``nodes`` (default PR_ONE_U; a warm start passes the old ranks). Per
+    round each source floors ``share`` once and each edge adds
+    ``w * share``, so chains that share the edges share the join and the
+    sum.
+
+    Without ``threshold`` the rounds are one lazy plan and no job runs
+    (Spark reuses the weighted edges' exchanges across rounds). With it
+    the weighted edges and every round are materialized, and the sequence
+    ends after the first round whose integer L-inf delta over all chains
+    is <= threshold * PR_SCALE.
+    """
+    pw = _weighted_edges(edges, nodes)
+    if threshold is not None:
+        pw = pw.localCheckpoint(eager=False)
+    init = init or {}
+    ranks = nodes.select(
+        "node",
+        *[F.lit(init.get(c, PR_ONE_U)).cast("long").alias(c) for c in teleport],
+    )
+    while True:
+        ranks = _round(pw, ranks, teleport)
+        if threshold is None:
+            yield ranks
+            continue
+        ranks = ranks.localCheckpoint(eager=False)
+        linf = ranks.agg(
+            F.greatest(
+                F.lit(0),
+                *[F.max(F.abs(F.col(c) - F.col(f"prev_{c}"))) for c in teleport],
+            )
+        ).first()[0]
+        yield ranks
+        if linf <= threshold * PR_SCALE:
+            return
+
+
+def power_iteration(
+    edges: DataFrame,
+    nodes: DataFrame,
+    teleport: dict[str, int | Column],
+    *,
+    init: dict[str, int | Column] | None = None,
+    rounds: int,
+    threshold: float | None = None,
+) -> DataFrame:
+    """The last frame of ``power_rounds``: after exactly ``rounds``
+    rounds, or with ``threshold`` at convergence (``rounds`` caps it)."""
+    it = power_rounds(edges, nodes, teleport, init=init, threshold=threshold)
+    for _, ranks in zip(range(rounds), it):
+        pass
+    return ranks
+
+
 def pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -175,55 +323,18 @@ def pagerank(
     threshold: float = 1e-4,
     max_iter: int = 200,
 ) -> DataFrame:
-    """(doc_id, rank) for every doc in ``docs`` (column doc_id)."""
-    docs = docs.select("doc_id").distinct().cache()
-    # keep only edges whose target is in the corpus (the reference's join
-    # against the state table drops foreign targets) — src is by
-    # construction in the corpus.
-    edges = (
-        edges.join(docs.withColumnRenamed("doc_id", "dst"), "dst")
-        .select("src", "dst")
-        .cache()
+    """(doc_id, rank) for every doc in ``docs`` (column doc_id). Links to
+    targets outside the corpus are dropped before out-degrees are counted
+    (the reference's join against the state table, PageRank.java:99-100)."""
+    nodes = docs.select(F.col("doc_id").alias("node")).distinct()
+    ranks = power_iteration(
+        edges.join(nodes.withColumnRenamed("node", "dst"), "dst", "left_semi"),
+        nodes,
+        {"u": PR_BASE_U},
+        rounds=max_iter,
+        threshold=threshold,
     )
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).cache()
-    edges.count()
-
-    ranks = docs.select("doc_id", F.lit(1.0).alias("rank"))
-    for it in range(max_iter):
-        contribs = (
-            edges.join(ranks.withColumnRenamed("doc_id", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("doc_id"),
-                (F.lit(0.85) * F.col("rank") / F.col("outdeg")).alias("c"),
-            )
-        )
-        new_ranks = (
-            docs.join(
-                contribs.groupBy("doc_id").agg(F.sum("c").alias("in_sum")),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                (F.coalesce(F.col("in_sum"), F.lit(0.0)) + F.lit(0.15)).alias(
-                    "rank"
-                ),
-            )
-        )
-        # localCheckpoint cuts lineage AND materializes new_ranks, which is
-        # consumed twice (delta check + next iteration's contribs).
-        new_ranks = new_ranks.localCheckpoint()
-        delta_df = (
-            new_ranks.withColumnRenamed("rank", "new_rank")
-            .join(ranks, "doc_id")
-            .agg(F.max(F.abs(F.col("new_rank") - F.col("rank"))).alias("d"))
-        )
-        delta = delta_df.collect()[0]["d"]
-        ranks = new_ranks
-        if delta is not None and delta <= threshold:
-            break
-    return ranks
+    return ranks.select(F.col("node").alias("doc_id"), to_rank("u").alias("rank"))
 
 
 def build_pagerank_stage(
@@ -235,7 +346,7 @@ def build_pagerank_stage(
 ) -> None:
     from .indexer import ingest
 
-    fp = checkpoint.fingerprint(stage="pagerank", pages=pages_path, threshold=threshold, v=1)
+    fp = checkpoint.fingerprint(stage="pagerank", pages=pages_path, threshold=threshold, v=STAGE_VERSION)
 
     def run(_pid: int) -> tuple[str, int, int]:
         pages = ingest(spark, pages_path)

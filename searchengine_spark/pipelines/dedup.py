@@ -1221,6 +1221,44 @@ walk(u, lbl) AS (
 comp AS (SELECT u AS doc_id, min(lbl) AS cluster_id FROM walk GROUP BY u),
 sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM comp GROUP BY cluster_id)"""
 
+# q32's candidate generation: SimHash per doc, its MAX_HAMMING+1 bands,
+# and every same-band pair as `cand` (doc_a, doc_b, ha, hb). Shared by the
+# q32 and q214 oracles so their candidate semantics cannot drift.
+_SIMHASH_CAND_SQL = f"""
+WITH tf AS (
+  SELECT doc_id, term, count(*) AS tf
+  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
+  WHERE term <> ''
+  GROUP BY doc_id, term
+),
+th AS (SELECT doc_id, tf, {_H} AS h FROM tf),
+bits AS (SELECT i AS j FROM generate_series(0, {SIMHASH_BITS - 1}) t(i)),
+contrib AS (
+  SELECT doc_id, j, tf * (((h >> j) & 1) * 2 - 1) AS v
+  FROM th CROSS JOIN bits
+),
+bitvals AS (
+  SELECT doc_id, j, CASE WHEN sum(v) > 0 THEN 1 ELSE 0 END AS bit
+  FROM contrib GROUP BY doc_id, j
+),
+sh AS (
+  SELECT doc_id, sum(bit * (1::BIGINT << j))::BIGINT AS simhash
+  FROM bitvals GROUP BY doc_id
+),
+banded AS (
+{" UNION ALL ".join(
+    f"SELECT doc_id, simhash, {j} AS band, "
+    f"(simhash >> {SIMHASH_BAND_LO[j]}) & {(1 << (SIMHASH_BAND_LO[j + 1] - SIMHASH_BAND_LO[j])) - 1} AS band_val FROM sh"
+    for j in range(SIMHASH_MAX_HAMMING + 1)
+)}
+),
+cand AS (
+  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
+         l.simhash AS ha, r.simhash AS hb
+  FROM banded l JOIN banded r
+    ON l.band = r.band AND l.band_val = r.band_val AND l.doc_id < r.doc_id
+)"""
+
 ORACLE = {
     "q15_dedup_exact": """
 WITH d AS (SELECT doc_id, md5(text) AS h FROM documents),
@@ -1297,40 +1335,8 @@ ORDER BY doc_a, doc_b
     # (pigeonhole over MAX_HAMMING+1 bands), so the oracle replicates the
     # banded candidate generation to prove the equi-join path — and a
     # pytest asserts q32 == q18 exactly.
-    "q32_simhash_banded": f"""
-WITH tf AS (
-  SELECT doc_id, term, count(*) AS tf
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-  WHERE term <> ''
-  GROUP BY doc_id, term
-),
-th AS (SELECT doc_id, tf, {_H} AS h FROM tf),
-bits AS (SELECT i AS j FROM generate_series(0, {SIMHASH_BITS - 1}) t(i)),
-contrib AS (
-  SELECT doc_id, j, tf * (((h >> j) & 1) * 2 - 1) AS v
-  FROM th CROSS JOIN bits
-),
-bitvals AS (
-  SELECT doc_id, j, CASE WHEN sum(v) > 0 THEN 1 ELSE 0 END AS bit
-  FROM contrib GROUP BY doc_id, j
-),
-sh AS (
-  SELECT doc_id, sum(bit * (1::BIGINT << j))::BIGINT AS simhash
-  FROM bitvals GROUP BY doc_id
-),
-banded AS (
-{" UNION ALL ".join(
-    f"SELECT doc_id, simhash, {j} AS band, "
-    f"(simhash >> {SIMHASH_BAND_LO[j]}) & {(1 << (SIMHASH_BAND_LO[j + 1] - SIMHASH_BAND_LO[j])) - 1} AS band_val FROM sh"
-    for j in range(SIMHASH_MAX_HAMMING + 1)
-)}
-),
-cand AS (
-  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-         l.simhash AS ha, r.simhash AS hb
-  FROM banded l JOIN banded r
-    ON l.band = r.band AND l.band_val = r.band_val AND l.doc_id < r.doc_id
-)
+    "q32_simhash_banded": _SIMHASH_CAND_SQL
+    + f"""
 SELECT doc_a, doc_b, bit_count(xor(ha, hb))::INT AS hamming
 FROM cand
 WHERE bit_count(xor(ha, hb)) <= {SIMHASH_MAX_HAMMING}
@@ -2326,15 +2332,11 @@ def q214_simhash_histogram(
 
 QUERIES["q214_simhash_histogram"] = q214_simhash_histogram
 
-# q214 oracle: q32's CTE chain up to `cand` (reused verbatim so the
-# candidate semantics cannot drift), then the distance census.
-_Q32_SQL = ORACLE["q32_simhash_banded"]
-_Q214_PREFIX = _Q32_SQL[: _Q32_SQL.index("SELECT doc_a, doc_b")].rstrip()
-
+# q214 oracle: q32's candidate pairs, then the distance census.
 ORACLE["q214_simhash_histogram"] = (
-    _Q214_PREFIX
-    + f"""
-, dist AS (
+    _SIMHASH_CAND_SQL
+    + f""",
+dist AS (
   SELECT bit_count(xor(ha, hb))::INT AS hamming FROM cand
 ),
 tot AS (SELECT count(*)::BIGINT AS n_pairs FROM dist)

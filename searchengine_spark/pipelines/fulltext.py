@@ -23,10 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..bm25 import B, K1
 from . import _tables
-
-K1 = 1.2
-B = 0.75
 
 BM25_QUERY_TERMS = ["spark", "query", "table"]
 
@@ -1914,6 +1912,8 @@ def q166_textrank_keywords(
     wsum = e.groupBy("src").agg(F.sum("w").cast("long").alias("wsum"))
     ranks = nodes.withColumn("u", F.lit(TR_SCALE).cast("long"))
     base_u = 3 * TR_SCALE // 20  # 0.15 in fixed point
+    # not pagerank.power_iteration: that floors once per source, this
+    # floors per edge ((17·u·w) div (20·wsum)), which gives other values
     for _ in range(TR_ITERS):
         contrib = (
             e.join(ranks, e.src == ranks.node)

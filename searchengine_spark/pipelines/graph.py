@@ -3,10 +3,11 @@
 The engine's real PageRank (``searchengine_spark/pagerank.py``) runs the
 reference math (0.85 transfer, +0.15 base, L∞ stop —
 jobs/PageRank.java:75,107,120-142) over the crawled link graph and is
-validated against the committed oracle goldens. This entry demonstrates
-the same iteration shape over a graph derived from the driver tables —
-the bipartite part↔supplier graph of ``lineitem`` — with a DuckDB
-oracle (iterations unrolled as CTEs).
+validated against the committed oracle goldens. The PageRank entries here
+(q27, and the q112/q133/q143/q145/q185 variants) run that same kernel,
+``pagerank.power_iteration``, over a graph derived from the TPC-H-shaped
+tables — the bipartite part↔supplier graph of ``lineitem`` — with a
+DuckDB oracle (iterations unrolled as CTEs).
 
 Determinism across parallelism AND across engines: ranks are carried as
 exact int64 fixed-point at 1e-12 (``u`` = rank × 10^12) and per-edge
@@ -24,28 +25,29 @@ division has no boundary to disagree on.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pagerank import (
+    PR_BASE_U,
+    PR_ONE_U,
+    PR_SCALE,
+    power_iteration,
+    power_rounds,
+    to_rank,
+)
 from . import _tables
 
 N_ITERS = 3
-DAMPING = 0.85
-BASE = 0.15
 SUPP_OFFSET = 1_000_000  # supplier node ids, disjoint from part ids
 QDEC = "decimal(28,12)"
 
-# int64 fixed-point scale for the PageRank iterations: rank 1.0 = 10^12.
-# Headroom: ranks are bounded by base + damping·(max in-degree)·... and
-# measure ~15 at sf0.1; 17·u stays far below 2^63 for any rank < 5·10^5,
-# and u < 2^53 keeps the final u/10^12 double conversion exact.
-PR_SCALE = 10**12
-PR_BASE_U = int(round(BASE * PR_SCALE))  # 0.15 -> 150_000_000_000
-PR_ONE_U = PR_SCALE
-# 0.85·u/outdeg as exact integer floor division: 17/20 == 0.85 exactly
-_PR_CONTRIB = "(17 * u) div (20 * outdeg)"
+# The oracles' spelling of pagerank.share: 0.85·u/outdeg as exact integer
+# floor division (17/20 == 0.85 exactly).
 _PR_CONTRIB_SQL = "(17 * r.u) // (20 * o.outdeg)"
+_TELEPORT = {"u": PR_BASE_U}
 
 
 def edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,40 +61,19 @@ def edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fwd.unionAll(rev)
 
 
-def q27_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edges(spark, sf_dir).localCheckpoint(eager=False)
-    nodes = (
+def endpoints(e: DataFrame) -> DataFrame:
+    """Distinct (node) over both edge endpoints."""
+    return (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ranks = nodes.withColumn("u", F.lit(PR_ONE_U).cast("long"))
-    for _ in range(N_ITERS):
-        # exact integer fixed-point contribution (see module docstring):
-        # floor((17·u)/(20·outdeg)) — `div` is Spark's integral division,
-        # floor for the non-negative operands here, matching DuckDB's //
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .join(outdeg, "src")
-            .select("dst", F.expr(_PR_CONTRIB).alias("c"))
-        )
-        incoming = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = nodes.join(
-            incoming, nodes.node == incoming.dst, "left"
-        ).select(
-            "node",
-            (
-                F.lit(PR_BASE_U) + F.coalesce(F.col("s"), F.lit(0))
-            ).cast("long").alias("u"),
-        )
-    # u < 2^53, 10^12 < 2^53: both conversions are exact and the single
-    # IEEE division is correctly rounded in every engine — no round()
-    # (whose .5-tie handling differs between Spark and DuckDB) anywhere.
-    return ranks.select(
-        "node",
-        (F.col("u").cast("double") / F.lit(float(PR_SCALE))).alias("rank"),
-    ).orderBy("node")
+
+
+def q27_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = edges(spark, sf_dir).localCheckpoint(eager=False)
+    ranks = power_iteration(e, endpoints(e), _TELEPORT, rounds=N_ITERS)
+    return ranks.select("node", to_rank("u").alias("rank")).orderBy("node")
 
 
 # --------------------------------------------------------------------------
@@ -114,42 +95,24 @@ def q27_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 PPR_SEED_MOD = 10
 
 
+def _ppr_seed() -> Column:
+    return (F.col("node") < SUPP_OFFSET) & (F.col("node") % PPR_SEED_MOD == 0)
+
+
 def q112_personalized_pagerank(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     e = edges(spark, sf_dir).localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
+    seed = _ppr_seed()
+    ranks = power_iteration(
+        e,
+        endpoints(e),
+        {"u": F.when(seed, F.lit(PR_BASE_U)).otherwise(0)},
+        init={"u": F.when(seed, F.lit(PR_ONE_U)).otherwise(0)},
+        rounds=N_ITERS,
     )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    seed = (F.col("node") < SUPP_OFFSET) & (
-        F.col("node") % PPR_SEED_MOD == 0
-    )
-    base_u = F.when(seed, F.lit(PR_BASE_U)).otherwise(F.lit(0))
-    ranks = nodes.withColumn(
-        "u", F.when(seed, F.lit(PR_ONE_U)).otherwise(F.lit(0)).cast("long")
-    )
-    for _ in range(N_ITERS):
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .join(outdeg, "src")
-            .select("dst", F.expr(_PR_CONTRIB).alias("c"))
-        )
-        incoming = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = nodes.join(
-            incoming, nodes.node == incoming.dst, "left"
-        ).select(
-            "node",
-            (base_u + F.coalesce(F.col("s"), F.lit(0)))
-            .cast("long")
-            .alias("u"),
-        )
     return ranks.select(
-        "node",
-        seed.cast("int").alias("is_seed"),
-        (F.col("u").cast("double") / F.lit(float(PR_SCALE))).alias("ppr"),
+        "node", seed.cast("int").alias("is_seed"), to_rank("u").alias("ppr")
     ).orderBy("node")
 
 
@@ -796,32 +759,14 @@ def q133_hostrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("hdst").alias("hsrc"), F.col("hsrc").alias("hdst"), "w"
         )
     ).localCheckpoint(eager=False)
-    hnodes = he.select(F.col("hsrc").alias("host")).distinct()
-    wdeg = he.groupBy("hsrc").agg(F.sum("w").alias("wdeg"))
-    ranks = hnodes.withColumn("u", F.lit(PR_ONE_U).cast("long"))
-    for _ in range(N_ITERS):
-        contrib = (
-            he.join(ranks, he.hsrc == ranks.host)
-            .join(wdeg, "hsrc")
-            .select(
-                "hdst",
-                F.expr("w * ((17 * u) div (20 * wdeg))").alias("c"),
-            )
-        )
-        incoming = contrib.groupBy("hdst").agg(F.sum("c").alias("s"))
-        ranks = hnodes.join(
-            incoming, hnodes.host == incoming.hdst, "left"
-        ).select(
-            "host",
-            (F.lit(PR_BASE_U) + F.coalesce(F.col("s"), F.lit(0)))
-            .cast("long")
-            .alias("u"),
-        )
+    ranks = power_iteration(
+        he.select(F.col("hsrc").alias("src"), F.col("hdst").alias("dst"), "w"),
+        he.select(F.col("hsrc").alias("node")).distinct(),
+        _TELEPORT,
+        rounds=N_ITERS,
+    )
     hostrank = ranks.select(
-        "host",
-        (F.col("u").cast("double") / F.lit(float(PR_SCALE))).alias(
-            "host_rank"
-        ),
+        F.col("node").alias("host"), to_rank("u").alias("host_rank")
     )
     # member join-back: every graph node inherits its host's authority —
     # a broadcast join of |hosts| rows against the member list
@@ -1478,9 +1423,10 @@ ORDER BY node
 # Exactness: ranks are q27's exact int64 fixed-point, so deltas are
 # exact integer |u_r − u_{r−1}| sums/maxes — bit-identical anywhere,
 # order-insensitive at any parallelism. Output is N_ITERS rows.
-# Scale shape: q27's per-round join-agg plus one extra |nodes|-row
-# equi-join per round for the delta; the audit rides the iteration it
-# monitors instead of re-running it.
+# Scale shape: q27's per-round join-agg and nothing more — each round
+# carries the previous u (prev_u), so a delta is a 1-row agg with no
+# join; the audit rides the iteration it monitors instead of re-running
+# it.
 # --------------------------------------------------------------------------
 
 
@@ -1488,44 +1434,18 @@ def q143_pagerank_convergence(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     e = edges(spark, sf_dir).localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    ranks = nodes.withColumn("u", F.lit(PR_ONE_U).cast("long"))
-    deltas: list[DataFrame] = []
-    for i in range(N_ITERS):
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .join(outdeg, "src")
-            .select("dst", F.expr(_PR_CONTRIB).alias("c"))
+    d = F.abs(F.col("u") - F.col("prev_u"))
+    deltas = [
+        ranks.agg(
+            F.lit(i).cast("long").alias("iteration"),
+            F.sum(d).cast("long").alias("l1_delta_u"),
+            F.max(d).cast("long").alias("linf_delta_u"),
         )
-        incoming = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        nxt = nodes.join(
-            incoming, nodes.node == incoming.dst, "left"
-        ).select(
-            "node",
-            (
-                F.lit(PR_BASE_U) + F.coalesce(F.col("s"), F.lit(0))
-            ).cast("long").alias("u"),
-        ).localCheckpoint(eager=False)
-        d = ranks.select("node", F.col("u").alias("up")).join(
-            nxt, "node"
-        ).select(F.abs(F.col("u") - F.col("up")).alias("d"))
-        deltas.append(
-            d.agg(
-                F.lit(i + 1).cast("long").alias("iteration"),
-                F.sum("d").cast("long").alias("l1_delta_u"),
-                F.max("d").cast("long").alias("linf_delta_u"),
-            )
+        for i, ranks in zip(
+            range(1, N_ITERS + 1), power_rounds(e, endpoints(e), _TELEPORT)
         )
-        ranks = nxt
-    out = deltas[0]
-    for x in deltas[1:]:
-        out = out.unionAll(x)
-    return out.orderBy("iteration")
+    ]
+    return reduce(DataFrame.unionAll, deltas).orderBy("iteration")
 
 
 QUERIES["q143_pagerank_convergence"] = q143_pagerank_convergence
@@ -1584,55 +1504,19 @@ SPAM_PCT = 60  # flag when the untrusted share of rank reaches 60%
 
 def q145_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = edges(spark, sf_dir).localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
+    seed = _ppr_seed()
+    ranks = power_iteration(
+        e,
+        endpoints(e),
+        {"u": PR_BASE_U, "v": F.when(seed, F.lit(PR_BASE_U)).otherwise(0)},
+        init={"v": F.when(seed, F.lit(PR_ONE_U)).otherwise(0)},
+        rounds=N_ITERS,
     )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    seed = (F.col("node") < SUPP_OFFSET) & (
-        F.col("node") % PPR_SEED_MOD == 0
-    )
-    ranks = nodes.select(
-        "node",
-        F.lit(PR_ONE_U).cast("long").alias("u"),
-        F.when(seed, F.lit(PR_ONE_U))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("v"),
-    )
-    for _ in range(N_ITERS):
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .join(outdeg, "src")
-            .select(
-                "dst",
-                F.expr(_PR_CONTRIB).alias("cu"),
-                F.expr("(17 * v) div (20 * outdeg)").alias("cv"),
-            )
-        )
-        incoming = contrib.groupBy("dst").agg(
-            F.sum("cu").alias("su"), F.sum("cv").alias("sv")
-        )
-        ranks = nodes.join(
-            incoming, nodes.node == incoming.dst, "left"
-        ).select(
-            "node",
-            (F.lit(PR_BASE_U) + F.coalesce(F.col("su"), F.lit(0)))
-            .cast("long")
-            .alias("u"),
-            (
-                F.when(seed, F.lit(PR_BASE_U)).otherwise(F.lit(0))
-                + F.coalesce(F.col("sv"), F.lit(0))
-            )
-            .cast("long")
-            .alias("v"),
-        )
     return ranks.select(
         "node",
         seed.cast("int").alias("is_seed"),
-        (F.col("u").cast("double") / F.lit(float(PR_SCALE))).alias("pr"),
-        (F.col("v").cast("double") / F.lit(float(PR_SCALE))).alias("tr"),
+        to_rank("u").alias("pr"),
+        to_rank("v").alias("tr"),
         (F.col("u") - F.col("v")).cast("long").alias("mass_u"),
         (
             (F.col("u") - F.col("v")).cast("double")
@@ -2474,51 +2358,21 @@ def q185_pagerank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     e_base = sym(
         li.filter(F.col("ok") % 2 == 0).select("part", "supp").distinct()
     ).localCheckpoint(eager=False)
-    nodes = (
-        e_full.select(F.col("src").alias("node"))
-        .unionAll(e_full.select(F.col("dst").alias("node")))
-        .distinct()
+    base = power_iteration(e_base, endpoints(e_full), _TELEPORT, rounds=N_ITERS)
+    warm = power_iteration(
+        e_full, base.select("node", "u"), _TELEPORT,
+        init={"u": F.col("u")}, rounds=1,
     )
-    out_b = e_base.groupBy("src").agg(F.count("*").alias("outdeg"))
-    out_f = e_full.groupBy("src").agg(F.count("*").alias("outdeg"))
-
-    def one_round(ranks: DataFrame, e: DataFrame, out: DataFrame) -> DataFrame:
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .join(out, "src")
-            .select("dst", F.expr(_PR_CONTRIB).alias("c"))
-        )
-        incoming = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        return (
-            nodes.join(incoming, nodes.node == incoming.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(PR_BASE_U)
-                    + F.coalesce(F.col("s"), F.lit(0))
-                ).cast("long").alias("u"),
-            )
-            .localCheckpoint(eager=False)
-        )
-
-    ranks = nodes.withColumn("u", F.lit(PR_ONE_U).cast("long"))
-    for _ in range(N_ITERS):
-        ranks = one_round(ranks, e_base, out_b)
-    old = ranks.select("node", F.col("u").alias("u_old"))
-    warm = one_round(ranks, e_full, out_f).select(
-        "node", F.col("u").alias("u_new")
-    )
-    delta = F.col("u_new") - F.col("u_old")
+    delta = F.col("u") - F.col("prev_u")
     return (
-        old.join(warm, "node")
-        .select(
+        warm.select(
             "node",
-            "u_old",
-            "u_new",
+            F.col("prev_u").alias("u_old"),
+            F.col("u").alias("u_new"),
             delta.cast("long").alias("delta_u"),
-            (
-                delta.cast("double") / F.lit(float(PR_SCALE))
-            ).alias("delta_rank"),
+            (delta.cast("double") / F.lit(float(PR_SCALE))).alias(
+                "delta_rank"
+            ),
         )
         .orderBy(F.desc(F.abs(F.col("delta_u"))), F.asc("node"))
         .limit(PRD_TOP)

@@ -1646,8 +1646,6 @@ _NDCG_IDCG = 0.0
 for _i in range(1, TOP_K + 1):
     _NDCG_IDCG += (TOP_K - _i + 1) * _NDCG_DISC[_i - 1]
 
-_QDEC = "decimal(28,12)"
-
 
 def q126_ann_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both lists are <= |queries|*k rows — materialize them (q38/q59's

@@ -25,7 +25,6 @@ north_rule. The blend weights 0.3 (pagerank) / 0.5 (title hit) /
 
 from __future__ import annotations
 
-import math
 import os
 from collections.abc import Iterator
 
@@ -36,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import catalog
-from .bm25 import B, K1, W_PAGERANK, W_RELEVANCE, W_TITLE
+from .bm25 import K1, W_PAGERANK, W_RELEVANCE, W_TITLE, idf, tf_norm
 from .compress import decode_postings, to_signed, varbyte_decode
 from .indexer import term_buckets
 from .porter import porter_stem
@@ -76,9 +75,10 @@ def parse_exclusions(q: dict) -> list[str]:
 
 # per-postings-root cache of the INFERRED segment schema: inference
 # re-reads parquet footers on every request (~0.1-0.7 s of the solo
-# plan phase, tools/solo_serve_profile.py) for a schema that is fixed
-# by the code version (catalog.INDEX_FORMAT) — within one process it
-# cannot change, so infer once and pass it explicitly thereafter.
+# plan phase, inside perfbench's traced serving.search span) for a
+# schema that is fixed by the code version (catalog.INDEX_FORMAT) —
+# within one process it cannot change, so infer once and pass it
+# explicitly thereafter.
 _SEGMENT_SCHEMA_CACHE: dict[str, "T.StructType"] = {}
 
 
@@ -261,10 +261,7 @@ def term_idfs(spark: SparkSession, root: str, terms: list[str], n_docs: int) -> 
     dict_root = catalog.path(root, "dictionary")
     df = spark.read.option("basePath", dict_root).parquet(dict_root)
     rows = df.filter(F.col("term").isin(terms)).select("term", "df").collect()
-    return {
-        r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in rows
-    }
+    return {r["term"]: idf(n_docs, r["df"]) for r in rows}
 
 
 def _query_terms_df(
@@ -345,14 +342,7 @@ def score_exhaustive(
         (
             F.col("idf")
             * F.lit(K1 + 1.0)
-            * (
-                F.col("tf")
-                / (
-                    F.col("tf")
-                    + F.lit(K1)
-                    * (F.lit(1.0 - B) + F.lit(B) * F.col("doc_len") / F.lit(avgdl))
-                )
-            )
+            * tf_norm(F.col("tf"), F.col("doc_len"), avgdl)
         ).alias("score"),
         F.col("n_terms"),
         F.col("mode"),

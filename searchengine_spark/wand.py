@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .bm25 import B, K1
+from .bm25 import K1, tf_norm
 from .compress import decode_block, to_signed, varbyte_decode
 from .query import (
     all_query_terms,
@@ -220,9 +220,7 @@ class _LazyTermList:
             dl = decode_block(bytes(r["dl_blob"]), r["dl_boff"], lb).astype(
                 np.float64
             )
-            self._norms = tf / (
-                tf + K1 * (1.0 - B + B * dl / self._avgdl)
-            )
+            self._norms = tf_norm(tf, dl, self._avgdl)
             self.decoded_blocks += 1
 
     def cur_doc(self) -> int:

@@ -29,10 +29,13 @@ def tiny_pages_path():
 def tiny_index(spark, tiny_pages_path):
     """Full index build (postings + title + pagerank when available)."""
     from searchengine_spark.catalog import INDEX_FORMAT
+    from searchengine_spark.pagerank import STAGE_VERSION
 
     root = os.path.join(FIXDIR, "index_tiny")
     marker = os.path.join(root, "_TEST_BUILD_OK")
-    fmt = f"ok-v{INDEX_FORMAT}"
+    # a cached fixture built by older index or PageRank code must not
+    # be reused
+    fmt = f"ok-v{INDEX_FORMAT}-pr{STAGE_VERSION}"
     if not (os.path.exists(marker) and open(marker).read() == fmt):
         shutil.rmtree(root, ignore_errors=True)
         from searchengine_spark.indexer import build_index

@@ -5,7 +5,13 @@ from pyspark.sql import functions as F
 
 from searchengine_spark import corpus
 from searchengine_spark.oracle import build_oracle_index, oracle_pagerank
-from searchengine_spark.pagerank import extract_edges, normalize_url, pagerank
+from searchengine_spark.pagerank import (
+    EDGES_SCHEMA,
+    extract_edges,
+    normalize_url,
+    pagerank,
+    share,
+)
 from searchengine_spark.xxhash64 import spark_xxhash64_str
 
 BASE = "https://site1.example:443/p/3.html"
@@ -53,8 +59,43 @@ def test_pagerank_parity(spark, tiny_pages_path):
     plist = pq.read_table(tiny_pages_path).to_pylist()
     idx = build_oracle_index(plist, edges=corpus.expected_edges(len(plist)))
     oranks = oracle_pagerank(idx, threshold=1e-4)
-    assert set(ranks) == set(oranks)
-    assert max(abs(ranks[d] - oranks[d]) for d in oranks) < 1e-9
+    assert ranks == oranks
+
+
+def test_pagerank_is_bit_stable_across_parallelism(spark, tiny_pages_path):
+    """Exact integer ranks: the same bits at any shuffle-partition count
+    and any partitioning of the edge input, and equal to the oracle."""
+    pages = spark.read.parquet(tiny_pages_path)
+    docs = pages.select(F.xxhash64("url").alias("doc_id"))
+    edge_rows = extract_edges(spark, pages).collect()
+    plist = pq.read_table(tiny_pages_path).to_pylist()
+    idx = build_oracle_index(plist, edges=corpus.expected_edges(len(plist)))
+    oranks = oracle_pagerank(idx, threshold=1e-4)
+    try:
+        for shuffle_parts, edge_parts in ((1, 1), (2, 3), (8, 7)):
+            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_parts))
+            edges = spark.createDataFrame(edge_rows, EDGES_SCHEMA).repartition(
+                edge_parts
+            )
+            ranks = pagerank(spark, edges, docs, threshold=1e-4).collect()
+            assert {r["doc_id"]: r["rank"] for r in ranks} == oranks
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+
+
+def test_share_does_not_overflow(spark):
+    """floor(17*u / d) without forming 17*u: exact against Python's
+    big-int floor division where 17*u is far past 2^63."""
+    cases = [
+        (10**18, d)
+        for d in (20, 60, 20 * 7, 20 * 999_983, 20 * (2**40 + 1))
+    ] + [(2**63 - 1, 20), (0, 20), (150_000_000_000, 20 * 3)]
+    got = (
+        spark.createDataFrame(cases, "u long, d long")
+        .select(share("u").alias("s"))
+        .collect()
+    )
+    assert [r["s"] for r in got] == [17 * u // d for u, d in cases]
 
 
 def test_pagerank_structure(spark, tiny_pages_path):

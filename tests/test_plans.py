@@ -435,3 +435,23 @@ def test_q121_bm25f_plan(spark):
     assert "BroadcastExchange" in p, p
     assert "ExistingRDD" in p, p
     assert "CartesianProduct" not in p, p
+
+
+def test_pagerank_round_is_one_join_and_one_sum(spark):
+    """A power-iteration round joins the ranks to the pre-weighted edges
+    once and sums once per node: no per-round out-degree join, and the
+    old rank rides through the round (prev_u), so the convergence delta
+    needs no separate join either."""
+    from searchengine_spark.pagerank import PR_BASE_U, _round, _weighted_edges
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 1)], "src long, dst long"
+    )
+    nodes = spark.createDataFrame([(1,), (2,), (3,)], "node long")
+    pw = _weighted_edges(edges, nodes).localCheckpoint()
+    ranks = nodes.selectExpr("node", "1000000000000L AS u")
+    r = _round(pw, ranks, {"u": PR_BASE_U})
+    lp = r._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"^[ :+|-]*Join ", lp, re.M)) == 1, lp
+    assert len(re.findall(r"^[ :+|-]*Aggregate ", lp, re.M)) == 1, lp
+    assert r.columns == ["node", "u", "prev_u"]

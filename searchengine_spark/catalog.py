@@ -8,13 +8,19 @@ bucket directory becomes a bucket partition spec).
 
 Layout under an index root:
 
-    tokens/chunk=<c>/      staged tokenized corpus (resume unit: chunk)
-    docstats/              (doc_id, url, doc_len) + corpus scalars in stats/
-    stats/                 single-row (n_docs, avgdl)
-    postings/bucket=<b>/   compressed posting segments (resume unit: bucket)
-    title_index/           (term, doc_id) pairs from the title pipeline
-    pageranks/             (doc_id, rank)
-    _lineage/              per-partition completion records (checkpoint.py)
+    tokens/chunk=<c>/bucket=<b>/    tokenized corpus (resume unit: chunk)
+    docstats/                       (doc_id, url, doc_len)
+    stats/                          single-row (n_docs, avgdl)
+    postings/group=<g>/bucket=<b>/  posting segments, format in compress.py
+                                    (resume unit: group of buckets)
+    dictionary/group=<g>/           (bucket, term, df, cf, n_salts)
+    title_index/                    (term, doc_id) from the title pipeline
+    anchor_index/                   optional (term, doc_id) anchor text
+    pageranks/                      (doc_id, rank)
+    docstore/                       doc_id-sorted (url, title, snippet)
+    _lineage/                       per-partition completion records
+    _meta.json                      n_buckets, group_size, target_postings,
+                                    tokens_manifest, ... (source of truth)
 """
 
 from __future__ import annotations

@@ -7,9 +7,9 @@ every row; corruption surfaces as wrong query results) — this job makes
 the invariants the query path RELIES on checkable ahead of time:
 
 Per segment row (distributed, one decode pass over the blobs):
-  * ``n_postings`` equals the decoded length of doc/tf/dl blobs,
-    and sum(tf) + n_postings equals the decoded length of pos_blob
-    (layout ``[n, delta1..deltan]`` per posting, n = tf);
+  * ``n_postings`` equals the decoded length of doc/tf/dl blobs, and
+    pos_blob (layout ``[n, delta1..deltan]`` per posting) stores n = tf
+    for every posting (``compress.decode_segment`` checks both);
   * doc_ids strictly increasing (delta decode yields a sorted list);
   * block metadata arrays all ceil(n/BLOCK) long, ``block_last``
     matches the decoded block boundaries, ``max_norm`` equals
@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import catalog, checkpoint
-from .compress import BLOCK, to_signed, varbyte_decode
+from .compress import BLOCK, PositionCountError, decode_segment
 
 FINDINGS_SCHEMA = T.StructType(
     [
@@ -83,12 +83,14 @@ def _segment_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             def bad(check: str, detail: str) -> None:
                 out.append(("error", check, b, term, salt, detail))
 
+            blobs = (bytes(row.doc_blob), bytes(row.tf_blob), bytes(row.dl_blob))
+            pos_err = None
             try:
-                deltas = varbyte_decode(bytes(row.doc_blob))
-                docs = to_signed(np.cumsum(deltas, dtype=np.uint64))
-                tfs = varbyte_decode(bytes(row.tf_blob)).astype(np.int64)
-                dls = varbyte_decode(bytes(row.dl_blob))
-                pos = varbyte_decode(bytes(row.pos_blob))
+                try:
+                    docs, tfs, dls, _, _ = decode_segment(*blobs, bytes(row.pos_blob))
+                except PositionCountError as e:
+                    pos_err = str(e)
+                    docs, tfs, dls, _, _ = decode_segment(*blobs)
             except Exception as e:  # truncated/garbage blob
                 bad("blob_decode", repr(e))
                 continue
@@ -99,10 +101,10 @@ def _segment_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             if n == 0:
                 bad("empty_segment", "segment with zero postings")
                 continue
-            if n > 1 and not (deltas[1:] > 0).all():
+            if n > 1 and not (docs[1:] > docs[:-1]).all():
                 bad("doc_order", "doc_ids not strictly increasing")
-            if int(tfs.sum()) + n != len(pos):
-                bad("pos_blob", f"pos values {len(pos)} != sum(tf)+n {int(tfs.sum()) + n}")
+            if pos_err is not None:
+                bad("pos_blob", pos_err)
             n_blocks = (n + BLOCK - 1) // BLOCK
             bl = np.asarray(row.block_last, dtype=np.int64)
             bm = np.asarray(row.block_max_norm, dtype=np.float32)

@@ -42,13 +42,7 @@ from pyspark.sql import types as T
 
 from . import catalog, checkpoint
 from .bm25 import tf_norm
-from .compress import (
-    block_byte_offsets,
-    encode_position_lists,
-    encode_postings,
-    varbyte_encode,
-    varbyte_nbytes,
-)
+from .compress import encode_segment
 from .textprep import (
     extract_titlep_lower_series,
     java_tokens,
@@ -341,44 +335,56 @@ def _postings_kernel(avgdl: float):
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id", kind="mergesort")
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
         tfs = pdf["tf"].to_numpy(dtype=np.int64)
         dls = pdf["doc_len"].to_numpy(dtype=np.int64)
-        tf_norms = tf_norm(tfs, dls, avgdl)
-        doc_blob, tf_blob, block_last, block_max, (doc_boff, tf_boff) = (
-            encode_postings(doc_ids, tfs, tf_norms)
+        seg = encode_segment(
+            pdf["doc_id"].to_numpy(dtype=np.int64), tfs, dls,
+            pdf["positions"].to_numpy(), tf_norm(tfs, dls, avgdl),
         )
-        dl_u = dls.astype(np.uint64)
-        dl_blob = varbyte_encode(dl_u)
-        dl_boff = block_byte_offsets(varbyte_nbytes(dl_u))
-        # positions: per doc, [n, delta1, delta2, ...] concatenated.
-        # Vectorized over the whole group (one Python iteration per
-        # posting here was ~40% of build CPU at 13M postings; this is
-        # byte-identical and ~4x faster — tests/test_compress.py pins
-        # the equivalence against the scalar reference).
-        pos_blob = encode_position_lists(pdf["positions"].to_numpy())
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "term": [pdf["term"].iloc[0]],
-                "salt": [int(pdf["salt"].iloc[0])],
-                "n_salts": [int(pdf["n_salts"].iloc[0])],
-                "n_postings": [len(doc_ids)],
-                "doc_blob": [doc_blob],
-                "tf_blob": [tf_blob],
-                "dl_blob": [dl_blob],
-                "pos_blob": [pos_blob],
-                "block_last": [block_last.tolist()],
-                "block_max_norm": [block_max.tolist()],
-                "doc_boff": [doc_boff.tolist()],
-                "tf_boff": [tf_boff.tolist()],
-                "dl_boff": [dl_boff.tolist()],
-                "avgdl_ref": [float(avgdl)],
-                "max_norm": [float(block_max.max())],
-            }
-        )
+        first = pdf.iloc[0]
+        return pd.DataFrame([{
+            "bucket": int(first["bucket"]),
+            "term": first["term"],
+            "salt": int(first["salt"]),
+            "n_salts": int(first["n_salts"]),
+            **seg,
+            "avgdl_ref": float(avgdl),
+        }])
 
     return build
+
+
+def encode_segments(
+    spark: SparkSession,
+    toks: DataFrame,
+    target_postings: int,
+    avgdl: float,
+    plan_path: str,
+) -> DataFrame:
+    """Token rows (bucket, term, doc_id, tf, positions, doc_len) -> one
+    ``POSTINGS_SCHEMA`` row per (bucket, term, salt) — the one segment
+    writer of the batch build and the merge.
+
+    The salt plan (bucket, term, df, cf, n_salts) is written to
+    ``plan_path`` FIRST and re-read: the segments job then broadcasts the
+    small re-read instead of re-running the token scan + (bucket, term)
+    aggregation, and nothing downstream re-runs a lineage that may point
+    at files the caller is about to swap (the merge's pre-merge
+    segments). The build keeps the plan as ``dictionary/group=<g>``."""
+    term_stats = toks.groupBy("bucket", "term").agg(
+        F.count("*").alias("df"), F.sum("tf").alias("cf")
+    )
+    term_stats.select(
+        "bucket", "term", "df", "cf",
+        F.ceil(F.col("df") / F.lit(target_postings)).cast("int").alias("n_salts"),
+    ).write.mode("overwrite").parquet(plan_path)
+    salt_plan = spark.read.parquet(plan_path)
+    salted = toks.join(
+        F.broadcast(salt_plan.select("term", "n_salts")), "term"
+    ).withColumn("salt", salt_expr(F.col("n_salts")))
+    return salted.groupBy("bucket", "term", "salt").applyInPandas(
+        _postings_kernel(avgdl), POSTINGS_SCHEMA
+    )
 
 
 def postings_fingerprint(
@@ -438,30 +444,9 @@ def build_postings_stage(
     def run_group(g: int) -> tuple[str, int, int]:
         bs = list(range(g * group_size, min((g + 1) * group_size, n_buckets)))
         toks = read_tokens(spark, root).filter(F.col("bucket").isin(bs))
-        term_stats = toks.groupBy("bucket", "term").agg(
-            F.count("*").alias("df"), F.sum("tf").alias("cf")
-        )
-        salt_plan = term_stats.select(
-            "bucket",
-            "term",
-            "df",
-            "cf",
-            F.ceil(F.col("df") / F.lit(target_postings)).cast("int").alias("n_salts"),
-        )
-        # dictionary FIRST, then broadcast the re-read: the segments job
-        # and the dictionary otherwise each materialize the same token
-        # scan + (bucket, term) aggregation — one redundant full pass
-        # over the group's tokens per group (merge.py already plans this
-        # way for a different reason: its downstream must never re-run a
-        # lineage that points at pre-swap segment files)
-        dict_out = os.path.join(dict_root, f"group={g}")
-        salt_plan.write.mode("overwrite").parquet(dict_out)
-        salt_plan = spark.read.parquet(dict_out)
-        salted = toks.join(
-            F.broadcast(salt_plan.select("term", "n_salts")), "term"
-        ).withColumn("salt", salt_expr(F.col("n_salts")))
-        segments = salted.groupBy("bucket", "term", "salt").applyInPandas(
-            _postings_kernel(avgdl), POSTINGS_SCHEMA
+        segments = encode_segments(
+            spark, toks, target_postings, avgdl,
+            os.path.join(dict_root, f"group={g}"),
         )
         out = os.path.join(postings_root, f"group={g}")
         segments.write.mode("overwrite").partitionBy("bucket").parquet(out)

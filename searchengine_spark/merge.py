@@ -10,11 +10,11 @@ posting segments WITHOUT rebuilding untouched buckets:
    live in — every other bucket's segments are byte-identical to what a
    from-scratch rebuild over the new tokens would produce (no new
    postings, deterministic salting/encoding), so they are left alone;
-3. per affected bucket-group: decode the existing segments back to
-   token-shaped rows (term, doc_id, tf, positions, doc_len), union the
-   delta rows, recompute the salt plan from the merged df, and re-encode
-   with the exact kernel the batch build uses — merged buckets are
-   byte-identical to a rebuild;
+3. per affected bucket: decode the existing segments back to
+   token-shaped rows (term, doc_id, tf, positions, doc_len) with
+   ``query.decode_segments``, union the delta rows, and hand them to
+   ``indexer.encode_segments`` — the salt plan and segment writer the
+   batch build uses — so merged buckets are byte-identical to a rebuild;
 4. docstats/stats are recomputed (pass ``pages_path`` for exact urls —
    e.g. the directory the stream ingested from plus the original corpus
    — otherwise doc_len is recovered from the delta tokens and streamed
@@ -39,76 +39,19 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import catalog, checkpoint
-from .compress import to_signed, varbyte_decode
 from .indexer import (
-    POSTINGS_SCHEMA,
-    TOKENS_SCHEMA,
-    _postings_kernel,
     build_docstats_stage,
     build_title_index_stage,
+    encode_segments,
     postings_fingerprint,
     read_stats,
-    salt_expr,
 )
-
-_DECODE_SCHEMA = T.StructType(
-    [T.StructField("bucket", T.IntegerType())] + TOKENS_SCHEMA.fields[:-1]
-)
-
-
-def _decode_segments_to_tokens(segments: DataFrame) -> DataFrame:
-    """Segments -> token-shaped rows (bucket, doc_id, term, tf,
-    positions, doc_len); max_tf is not stored per posting and is not
-    needed by the postings kernel."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "bucket": [], "doc_id": [], "term": [], "tf": [],
-                "positions": [], "doc_len": [],
-            }
-            for r in pdf.to_dict("records"):
-                docs = to_signed(
-                    np.cumsum(varbyte_decode(bytes(r["doc_blob"])),
-                              dtype=np.uint64)
-                )
-                tfs = varbyte_decode(bytes(r["tf_blob"])).astype(np.int64)
-                dls = varbyte_decode(bytes(r["dl_blob"])).astype(np.int64)
-                flat = varbyte_decode(bytes(r["pos_blob"])).astype(np.int64)
-                i = 0
-                poss: list[list[int]] = []
-                for _ in range(len(docs)):
-                    n = int(flat[i])
-                    deltas = flat[i + 1: i + 1 + n]
-                    i += 1 + n
-                    poss.append(np.cumsum(deltas).astype(int).tolist())
-                out["bucket"].extend([int(r["bucket"])] * len(docs))
-                out["doc_id"].extend(docs.tolist())
-                out["term"].extend([r["term"]] * len(docs))
-                out["tf"].extend(tfs.tolist())
-                out["positions"].extend(poss)
-                out["doc_len"].extend(dls.tolist())
-            yield pd.DataFrame(
-                {
-                    "bucket": pd.Series(out["bucket"], dtype="int32"),
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "term": pd.Series(out["term"], dtype="object"),
-                    "tf": pd.Series(out["tf"], dtype="int32"),
-                    "positions": pd.Series(out["positions"], dtype="object"),
-                    "doc_len": pd.Series(out["doc_len"], dtype="int32"),
-                }
-            )
-
-    return segments.mapInPandas(kernel, _DECODE_SCHEMA)
+from .query import decode_segments
 
 
 def merge_tokens_stage(
@@ -353,16 +296,6 @@ def merge_tokens_stage(
         shutil.rmtree(stage_dir, ignore_errors=True)
         shutil.rmtree(old_dir, ignore_errors=True)
         # ---- normal path ----
-        old_segments = (
-            spark.read.option("basePath", postings_root).parquet(bucket_dir)
-            if os.path.exists(bucket_dir)
-            else None
-        )
-        old_tokens = (
-            _decode_segments_to_tokens(old_segments)
-            if old_segments is not None
-            else spark.createDataFrame([], _DECODE_SCHEMA)
-        )
         # delta token files of THIS bucket (partition col comes from the
         # path, which we filter ourselves since we read files directly)
         b_paths = [p for p in delta_paths if f"bucket={b}" in p.split(os.sep)]
@@ -384,30 +317,26 @@ def merge_tokens_stage(
                 "writer used a mismatched n_buckets; re-ingest with the "
                 "index's _meta.json value"
             )
+        toks = new_tokens
+        if os.path.exists(bucket_dir):
+            old_segments = spark.read.option("basePath", postings_root).parquet(
+                bucket_dir
+            )
+            toks = (
+                decode_segments(old_segments, positions=True)
+                .withColumn("bucket", F.lit(b).cast("int"))
+                .unionByName(new_tokens)
+            )
         # persist: the union is materialized twice below (salt plan +
         # segments) and each action would otherwise re-decode every old
         # blob through the Python kernel — the dominant per-bucket cost
-        toks = old_tokens.unionByName(new_tokens).persist()
+        toks = toks.persist()
         try:
-            term_stats = toks.groupBy("bucket", "term").agg(
-                F.count("*").alias("df"), F.sum("tf").alias("cf")
-            )
-            salt_plan = term_stats.select(
-                "bucket", "term", "df", "cf",
-                F.ceil(F.col("df") / F.lit(target)).cast("int").alias("n_salts"),
-            )
-            # persist the salt plan FIRST: everything downstream (segments
-            # AND the dictionary update) must read it from disk, not re-run
-            # a lineage that still points at the pre-swap segment files
-            shutil.rmtree(plan_tmp, ignore_errors=True)
-            salt_plan.write.mode("overwrite").parquet(plan_tmp)
-            salt_plan = spark.read.parquet(plan_tmp)
-            salted = toks.join(
-                F.broadcast(salt_plan.select("term", "n_salts")), "term"
-            ).withColumn("salt", salt_expr(F.col("n_salts")))
-            segments = salted.groupBy("bucket", "term", "salt").applyInPandas(
-                _postings_kernel(avgdl), POSTINGS_SCHEMA
-            )
+            # the salt plan is persisted to plan_tmp FIRST: everything
+            # downstream (segments AND the dictionary update) reads it
+            # from disk, not a lineage that still points at the pre-swap
+            # segment files
+            segments = encode_segments(spark, toks, target, avgdl, plan_tmp)
             # stage + swap so a killed merge never leaves a half bucket;
             # the marker inside the staged data makes the swap+record pair
             # crash-recoverable (see recovery preamble above)
@@ -512,8 +441,6 @@ def vacuum_tokens(root: str, build_id: str = "vacuum") -> dict:
     deletion second, lineage re-record last; a re-run completes any
     unfinished step. Refuses while deltas are pending (merge first) or
     while the postings lineage is incomplete (mid-build index)."""
-    from .indexer import postings_fingerprint
-
     meta = catalog.read_meta(root)
     n_buckets = int(meta["n_buckets"])
     target = int(meta.get("target_postings", catalog.TARGET_POSTINGS))

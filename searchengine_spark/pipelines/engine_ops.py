@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 
 from . import _tables
 
-from ..compress import encode_postings, varbyte_decode, to_signed
+from ..compress import decode_postings, encode_postings
 from ..porter import porter_stem
 
 def _scratch_tag(sf_dir: str) -> str:
@@ -86,8 +86,7 @@ def q28_postings_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # decode back from the physical blobs — the values below come
         # from the codec, not the input frame
-        d = to_signed(np.cumsum(varbyte_decode(bytes(doc_blob)), dtype=np.uint64))
-        t = varbyte_decode(bytes(tf_blob)).astype(np.int64)
+        d, t = decode_postings(doc_blob, tf_blob)
         return pd.DataFrame(
             {
                 "term": [pdf["term"].iloc[0]],

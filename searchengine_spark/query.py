@@ -3,13 +3,18 @@
 Two physical strategies, one semantics:
 
 * ``score_exhaustive`` — the fully-distributed DataFrame path: bucket-
-  pruned segment scan -> Arrow decode -> broadcast-join of the (tiny)
+  pruned segment scan -> ``decode_segments`` -> broadcast-join of the (tiny)
   query-term table -> deterministic fold-sum per (query, doc) ->
   window top-k. This is the scale path: no per-group memory beyond one
   segment blob, every join against query terms is a broadcast, the scan
   touches only the buckets holding query terms.
 * ``wand.py`` — per-query block-max WAND over the same segments for
   low-latency serving (validated equal to the exhaustive path).
+
+``decode_segments`` is the one Spark-side segment reader: scoring and
+exclusions decode doc/tf/dl only, phrase matching and the merge
+(``merge.py``) also decode positions; the bytes themselves are
+``compress.decode_segment``'s.
 
 Determinism contract (rank-identity across parallelism — SURVEY.md §7.3):
 per-term idf is computed once, driver-side, in Python float64; per-posting
@@ -29,14 +34,14 @@ import os
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import catalog
 from .bm25 import K1, W_PAGERANK, W_RELEVANCE, W_TITLE, idf, tf_norm
-from .compress import decode_postings, to_signed, varbyte_decode
+from .compress import decode_segment
 from .indexer import term_buckets
 from .porter import porter_stem
 from .textprep import java_tokens
@@ -124,94 +129,53 @@ def _n_buckets(root: str) -> int:
     return int(meta["n_buckets"])
 
 
-def decode_segments(segments: DataFrame) -> DataFrame:
-    """Arrow-vectorized decode: segment blobs -> (term, doc_id, tf, doc_len)."""
-    # project BEFORE mapInPandas: Spark cannot column-prune through an
-    # opaque Python kernel, and an unprojected pass would drag pos_blob
-    # (the largest column) through the parquet scan and Arrow transfer
-    segments = segments.select("term", "doc_blob", "tf_blob", "dl_blob")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms: list[np.ndarray] = []
-            docs: list[np.ndarray] = []
-            tfs: list[np.ndarray] = []
-            dls: list[np.ndarray] = []
-            for term, doc_blob, tf_blob, dl_blob in zip(
-                pdf["term"], pdf["doc_blob"], pdf["tf_blob"], pdf["dl_blob"]
-            ):
-                d, t = decode_postings(bytes(doc_blob), bytes(tf_blob))
-                l = varbyte_decode(bytes(dl_blob)).astype(np.int64)
-                terms.append(np.full(len(d), term, dtype=object))
-                docs.append(d)
-                tfs.append(t)
-                dls.append(l)
-            if docs:
-                yield pd.DataFrame(
-                    {
-                        "term": np.concatenate(terms),
-                        "doc_id": np.concatenate(docs),
-                        "tf": np.concatenate(tfs).astype(np.int32),
-                        "doc_len": np.concatenate(dls).astype(np.int32),
-                    }
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "term": pd.Series([], dtype="object"),
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "tf": pd.Series([], dtype="int32"),
-                        "doc_len": pd.Series([], dtype="int32"),
-                    }
-                )
-
-    return segments.mapInPandas(kernel, MATCH_SCHEMA)
+_POSITIONS_FIELD = T.StructField("positions", T.ArrayType(T.IntegerType()))
 
 
-POS_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("positions", T.ArrayType(T.IntegerType())),
-    ]
-)
+def decode_segments(segments: DataFrame, positions: bool) -> DataFrame:
+    """The one Spark-side segment reader: one row per posting, (term,
+    doc_id, tf, doc_len) plus ``positions`` when asked (phrase matching,
+    merge). Arrow in, Arrow out: ``compress.decode_segment`` per segment
+    row, and the positions array column is built from its flat values
+    and offsets with no per-posting Python object."""
+    blobs = ["doc_blob", "tf_blob", "dl_blob"] + (["pos_blob"] if positions else [])
+    # project BEFORE the kernel: Spark cannot column-prune through an
+    # opaque Python kernel, and scoring must never drag pos_blob (the
+    # largest column) through the parquet scan and Arrow transfer
+    segments = segments.select("term", *blobs)
+    schema = T.StructType(
+        MATCH_SCHEMA.fields + ([_POSITIONS_FIELD] if positions else [])
+    )
 
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            segs = [
+                decode_segment(*row)
+                for row in zip(*(rb.column(c).to_pylist() for c in blobs))
+            ]
 
-def decode_positions(segments: DataFrame) -> DataFrame:
-    """Arrow-vectorized decode of the per-posting position lists:
-    pos_blob holds, per doc in blob order, [n, delta1..deltan]
-    varbyte-encoded (``indexer._postings_kernel``)."""
-    segments = segments.select("term", "doc_blob", "pos_blob")
+            def flat(field: str, dtype) -> np.ndarray:
+                arrays = [getattr(s, field) for s in segs]
+                return np.concatenate(arrays + [np.empty(0, dtype)]).astype(dtype)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_t: list[str] = []
-            out_d: list[int] = []
-            out_p: list[list[int]] = []
-            for term, doc_blob, pos_blob in zip(
-                pdf["term"], pdf["doc_blob"], pdf["pos_blob"]
-            ):
-                docs = to_signed(
-                    np.cumsum(varbyte_decode(bytes(doc_blob)), dtype=np.uint64)
-                )
-                flat = varbyte_decode(bytes(pos_blob)).astype(np.int64)
-                i = 0
-                for d in docs:
-                    n = int(flat[i])
-                    deltas = flat[i + 1 : i + 1 + n]
-                    i += 1 + n
-                    out_t.append(term)
-                    out_d.append(int(d))
-                    out_p.append(np.cumsum(deltas).astype(int).tolist())
-            yield pd.DataFrame(
-                {
-                    "term": pd.Series(out_t, dtype="object"),
-                    "doc_id": pd.Series(out_d, dtype="int64"),
-                    "positions": pd.Series(out_p, dtype="object"),
-                }
-            )
+            tfs = flat("tfs", np.int32)
+            counts = np.array([len(s.tfs) for s in segs], np.int64)
+            row_of = np.repeat(np.arange(len(segs)), counts)
+            cols = [
+                rb.column("term").take(row_of),
+                pa.array(flat("doc_ids", np.int64)),
+                pa.array(tfs),
+                pa.array(flat("dls", np.int32)),
+            ]
+            if positions:
+                offsets = np.zeros(len(tfs) + 1, np.int32)
+                np.cumsum(tfs, out=offsets[1:])
+                cols.append(pa.ListArray.from_arrays(
+                    offsets, pa.array(flat("positions", np.int32))
+                ))
+            yield pa.RecordBatch.from_arrays(cols, names=schema.fieldNames())
 
-    return segments.mapInPandas(kernel, POS_SCHEMA)
+    return segments.mapInArrow(kernel, schema)
 
 
 def phrase_match(spark: SparkSession, root: str, phrase: list[str]) -> DataFrame:
@@ -233,7 +197,7 @@ def phrase_match(spark: SparkSession, root: str, phrase: list[str]) -> DataFrame
     slots = spark.createDataFrame(
         [(t, i) for i, t in enumerate(stemmed)], "term string, slot int"
     )
-    pos = decode_positions(load_segments(spark, root, stemmed))
+    pos = decode_segments(load_segments(spark, root, stemmed), positions=True)
     shifted = pos.join(F.broadcast(slots), "term").select(
         "doc_id",
         F.transform("positions", lambda pp: pp - F.col("slot")).alias("sp"),
@@ -334,7 +298,7 @@ def score_exhaustive(
     idfs = term_idfs(spark, root, terms, n_docs)
     qt = _query_terms_df(spark, queries, idfs)
 
-    matches = decode_segments(load_segments(spark, root, terms))
+    matches = decode_segments(load_segments(spark, root, terms), positions=False)
     scored = matches.join(F.broadcast(qt), "term").select(
         "query_id",
         "doc_id",
@@ -435,7 +399,7 @@ def score_exhaustive(
         ex_terms = sorted({t for _, t in ex_rows})
         eqt = spark.createDataFrame(ex_rows, "query_id int, term string")
         deny = (
-            decode_segments(load_segments(spark, root, ex_terms))
+            decode_segments(load_segments(spark, root, ex_terms), positions=False)
             .join(F.broadcast(eqt), "term")
             .select("query_id", "doc_id")
             .distinct()

@@ -14,11 +14,12 @@ arrival immediately surfaces its overlap with a batch-0 document —
 the property a plagiarism/near-dup monitor needs and a per-batch-local
 run cannot have.
 
-Replay idempotence: per-batch overwrite directories keyed by batch id
-(same checkpoint ⇒ same batch id ⇒ same dir — the CLAUDE.md stream-
-chunk rule; this dir layout embeds only the batch id because each
-fingerprint dir is 1:1 with its checkpoint, wiped together, per the
-anchors convention).
+Replay idempotence: per-batch overwrite directories
+``batch=stream-<ckpt-hash>-<id>`` (same checkpoint ⇒ same batch id ⇒
+same dir — the CLAUDE.md stream-chunk rule). The checkpoint hash is in
+the name because batch ids are only unique within one checkpoint: a
+second run with a fresh checkpoint into the same fp_dir restarts at
+batch 0 and must not overwrite the first run's batch 0.
 
 Scale shape: partials carry (doc_id, selkey) int64 pairs — ~2/(W+1)
 of the k-gram count per doc, never text; the pair join keys on the
@@ -29,6 +30,7 @@ q83's stop-shingle argument.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,18 +56,17 @@ def stream_winnow_fingerprints(
     schema: T.StructType = DOCS_SCHEMA,
 ):
     """availableNow stream over a documents directory: write each
-    micro-batch's winnowing partials to ``fp_dir/{nk,sel}/batch=<id>``
-    (overwrite — replay-idempotent). Returns the StreamingQuery."""
+    micro-batch's winnowing partials to
+    ``fp_dir/{nk,sel}/batch=stream-<ckpt-hash>-<id>`` (overwrite —
+    replay-idempotent). Returns the StreamingQuery."""
     s = spark.readStream.schema(schema).parquet(docs_dir)
+    ck_tag = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         nk, sel = winnow_parts(batch_df)
-        nk.write.mode("overwrite").parquet(
-            os.path.join(fp_dir, "nk", f"batch={batch_id:08d}")
-        )
-        sel.write.mode("overwrite").parquet(
-            os.path.join(fp_dir, "sel", f"batch={batch_id:08d}")
-        )
+        name = f"batch=stream-{ck_tag}-{batch_id:08d}"
+        nk.write.mode("overwrite").parquet(os.path.join(fp_dir, "nk", name))
+        sel.write.mode("overwrite").parquet(os.path.join(fp_dir, "sel", name))
 
     return (
         s.writeStream.foreachBatch(write_batch)

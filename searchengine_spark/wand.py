@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .bm25 import K1, tf_norm
-from .compress import decode_block, to_signed, varbyte_decode
+from .compress import decode_segment_block
 from .query import (
     all_query_terms,
     load_segments,
@@ -200,26 +200,7 @@ class _LazyTermList:
     def _ensure(self) -> None:
         if self._docs is None:
             r = self._rows[self._row_of[self._cb]]
-            lb = self._loc_of[self._cb]
-            deltas = decode_block(
-                bytes(r["doc_blob"]), r["doc_boff"], lb
-            )
-            if lb == 0:
-                base = np.uint64(0)
-            else:
-                # unsigned (order-preserving) image of the previous
-                # block's last doc — the delta chain's re-base point;
-                # Python-int math so the int64->u64 bias wrap is explicit
-                base = np.uint64(
-                    (int(r["block_last"][lb - 1]) + (1 << 63)) & ((1 << 64) - 1)
-                )
-            self._docs = to_signed(base + np.cumsum(deltas, dtype=np.uint64))
-            tf = decode_block(bytes(r["tf_blob"]), r["tf_boff"], lb).astype(
-                np.float64
-            )
-            dl = decode_block(bytes(r["dl_blob"]), r["dl_boff"], lb).astype(
-                np.float64
-            )
+            self._docs, tf, dl = decode_segment_block(r, self._loc_of[self._cb])
             self._norms = tf_norm(tf, dl, self._avgdl)
             self.decoded_blocks += 1
 

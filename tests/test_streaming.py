@@ -815,3 +815,51 @@ def test_stream_winnowing_matches_batch(spark):
     stream_winnow_fingerprints(spark, docs_dir, fp_dir, ckpt).awaitTermination()
     again = [tuple(r) for r in read_winnow_census(spark, fp_dir).collect()]
     assert again == streamed
+
+
+def test_stream_winnowing_fresh_checkpoints_share_fp_dir(spark):
+    """Two fingerprint streams over disjoint doc dirs, each with its own
+    checkpoint, into ONE fp_dir: both start at batch 0, and the census
+    must cover both runs' docs (bare batch=<id> dirs let the second
+    run's batch 0 overwrite the first's)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from searchengine_spark.pipelines.textstats import (
+        winnow_census,
+        winnow_parts,
+    )
+    from searchengine_spark.streaming.fingerprints import (
+        read_winnow_census,
+        stream_winnow_fingerprints,
+    )
+    from searchengine_spark.streaming.sketch import DOCS_SCHEMA
+
+    base = os.path.join(STREAMDIR, "winnow_two_runs")
+    shutil.rmtree(base, ignore_errors=True)
+    fp_dir = os.path.join(base, "fp")
+    arrow_schema = spark.createDataFrame([], DOCS_SCHEMA).toArrow().schema
+    n_docs = 40
+    for run in range(2):
+        docs = [
+            {
+                "doc_id": i, "url": f"u{i}", "source": "s", "lang": "en",
+                "text": " ".join(f"w{(i * 7 + j * j) % 97}" for j in range(30)),
+                "embedding": [0.0],
+            }
+            for i in range(run * n_docs // 2, (run + 1) * n_docs // 2)
+        ]
+        docs_dir = os.path.join(base, f"docs{run}")
+        os.makedirs(docs_dir)
+        pq.write_table(
+            pa.Table.from_pylist(docs, schema=arrow_schema),
+            os.path.join(docs_dir, "part.parquet"),
+        )
+        stream_winnow_fingerprints(
+            spark, docs_dir, fp_dir, os.path.join(base, f"ckpt{run}")
+        ).awaitTermination()
+
+    streamed = [tuple(r) for r in read_winnow_census(spark, fp_dir).collect()]
+    nk, sel = winnow_parts(spark.read.parquet(os.path.join(base, "docs*")))
+    assert streamed == [tuple(r) for r in winnow_census(nk, sel).collect()]
+    assert [r[0] for r in streamed] == list(range(n_docs))

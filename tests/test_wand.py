@@ -149,13 +149,8 @@ def test_wand_randomized_vs_bruteforce(mode, full_range):
 
 def _encode_rows(docs, tfs, dls, avgdl, n_salts):
     """Build salted segment rows exactly as indexer._postings_kernel does
-    (range salting, per-block byte offsets), for driver-local tests."""
-    from searchengine_spark.compress import (
-        block_byte_offsets,
-        encode_postings,
-        varbyte_encode,
-        varbyte_nbytes,
-    )
+    (range salting, compress.encode_segment), for tests without Spark."""
+    from searchengine_spark.compress import encode_segment
     from searchengine_spark.indexer import salt_of
 
     salts = salt_of(docs, n_salts)
@@ -164,24 +159,9 @@ def _encode_rows(docs, tfs, dls, avgdl, n_salts):
         m = salts == s
         d, t, l = docs[m], tfs[m], dls[m]
         norms = t / (t + K1 * (1.0 - B + B * l / avgdl))
-        doc_blob, tf_blob, bl, bm, (doc_boff, tf_boff) = encode_postings(
-            d, t, norms
-        )
-        dl_u = l.astype(np.uint64)
-        rows.append(
-            {
-                "salt": int(s),
-                "n_postings": len(d),
-                "doc_blob": doc_blob,
-                "tf_blob": tf_blob,
-                "dl_blob": varbyte_encode(dl_u),
-                "block_last": bl,
-                "block_max_norm": bm,  # float32, as stored
-                "doc_boff": doc_boff,
-                "tf_boff": tf_boff,
-                "dl_boff": block_byte_offsets(varbyte_nbytes(dl_u)),
-            }
-        )
+        positions = np.empty(len(t), dtype=object)
+        positions[:] = [np.arange(x, dtype=np.int64) for x in t]
+        rows.append({"salt": int(s), **encode_segment(d, t, l, positions, norms)})
     return rows
 
 

@@ -199,3 +199,57 @@ def restore_aside(live: str) -> None:
     aside = live + ".swap-old"
     if not os.path.exists(live) and os.path.exists(aside):
         os.replace(aside, live)
+
+
+# ---------------------------------------------------------------------------
+# Spark access on the request path — a search request's fixed cost is
+# dominated by Spark jobs that do no query work, so the two kinds of
+# table every request touches are built here without them.
+# ---------------------------------------------------------------------------
+
+def local_df(spark, rows, schema):
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order;
+    ``schema`` a StructType or DDL string). Built from an Arrow table it
+    plans as a LocalRelation: no Python-worker task per core to unpickle
+    a few rows (``createDataFrame(<list>)`` plans a LogicalRDD over a
+    PythonRDD), and joins against it broadcast from the driver."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+# inferred schema per table path: inference runs a one-task footer job
+# per read, and a table's schema is fixed by the code version
+# (INDEX_FORMAT), so it is inferred once per process — a table must
+# never be rewritten with another schema under the same path. Only the
+# schema is cached — the file listing stays live, so appended docstore
+# files and merged segments are still seen.
+_SCHEMAS: dict = {}
+
+
+def read_table(spark, table_path, base_path: str | None = None):
+    """Parquet read of an index table with its schema inferred once.
+    ``table_path`` is a path or a list of paths; a list is a partition
+    subset of ``base_path`` (required then), and every subset of one
+    base path shares its schema."""
+    paths = [table_path] if isinstance(table_path, str) else list(table_path)
+    key = base_path or table_path
+    reader = spark.read
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return reader.schema(schema).parquet(*paths)
+    df = reader.parquet(*paths)
+    _SCHEMAS[key] = df.schema
+    return df

@@ -194,8 +194,8 @@ def _salt_range_findings(rangestats: DataFrame) -> DataFrame:
 
 
 def _finding(spark, severity, check, detail, bucket=None, term=None, salt=None):
-    return spark.createDataFrame(
-        [(severity, check, bucket, term, salt, detail)], FINDINGS_SCHEMA
+    return catalog.local_df(
+        spark, [(severity, check, bucket, term, salt, detail)], FINDINGS_SCHEMA
     )
 
 
@@ -205,7 +205,7 @@ def fsck(
     """Verify the index at ``root``; returns the findings DataFrame
     (empty = healthy). Blob checks run distributed; catalog checks are
     driver-side over row-count-sized aggregates only."""
-    findings = spark.createDataFrame([], FINDINGS_SCHEMA)
+    findings = catalog.local_df(spark, [], FINDINGS_SCHEMA)
     meta = catalog.read_meta(root)
     postings_root = catalog.path(root, catalog.POSTINGS)
     if "n_buckets" not in meta:

@@ -321,7 +321,7 @@ def build_docstats_stage(
 
 
 def read_stats(spark: SparkSession, root: str) -> tuple[int, float]:
-    row = spark.read.parquet(catalog.path(root, catalog.STATS)).collect()[0]
+    row = catalog.read_table(spark, catalog.path(root, catalog.STATS)).collect()[0]
     return int(row["n_docs"]), float(row["avgdl"])
 
 

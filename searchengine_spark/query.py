@@ -78,19 +78,13 @@ def parse_exclusions(q: dict) -> list[str]:
     return parse_query(raw)
 
 
-# per-postings-root cache of the INFERRED segment schema: inference
-# re-reads parquet footers on every request (~0.1-0.7 s of the solo
-# plan phase, inside perfbench's traced serving.search span) for a
-# schema that is fixed by the code version (catalog.INDEX_FORMAT) —
-# within one process it cannot change, so infer once and pass it
-# explicitly thereafter.
-_SEGMENT_SCHEMA_CACHE: dict[str, "T.StructType"] = {}
-
-
 def load_segments(spark: SparkSession, root: str, terms: list[str]) -> DataFrame:
     """Bucket-pruned read of posting segments for the given terms.
     Layout: postings/group=<g>/bucket=<b>/ (group = build resume unit,
-    bucket = term-hash pruning unit)."""
+    bucket = term-hash pruning unit). Every bucket subset shares the
+    postings root's schema, inferred once by ``catalog.read_table``;
+    the bucket directories are listed per request, so merged segments
+    are seen."""
     postings_root = catalog.path(root, catalog.POSTINGS)
     buckets = sorted(set(term_buckets(spark, terms, _n_buckets(root)).values()))
     paths = [
@@ -101,15 +95,12 @@ def load_segments(spark: SparkSession, root: str, terms: list[str]) -> DataFrame
         )
     ]
     if not paths:
-        return spark.read.parquet(postings_root).filter(F.lit(False))
-    reader = spark.read.option("basePath", postings_root)
-    cached = _SEGMENT_SCHEMA_CACHE.get(postings_root)
-    if cached is not None:
-        df = reader.schema(cached).parquet(*paths)
-    else:
-        df = reader.parquet(*paths)
-        _SEGMENT_SCHEMA_CACHE[postings_root] = df.schema
-    return df.filter(F.col("term").isin(terms))
+        return catalog.read_table(
+            spark, postings_root, base_path=postings_root
+        ).filter(F.lit(False))
+    return catalog.read_table(spark, paths, base_path=postings_root).filter(
+        F.col("term").isin(terms)
+    )
 
 
 def _n_buckets(root: str) -> int:
@@ -185,7 +176,7 @@ def phrase_match(spark: SparkSession, root: str, phrase: list[str]) -> DataFrame
     (arrays_overlap of shifted positions via higher-order functions)."""
     stemmed = [porter_stem(t) for t in phrase]
     if not stemmed:
-        return spark.createDataFrame([], "doc_id long, n_hits int")
+        return catalog.local_df(spark, [], "doc_id long, n_hits int")
     # ONE decode pass: the previous per-term join chain re-ran the
     # bucket-pruned segment scan and the Python position decode once per
     # phrase term. Each (term, slot) of the phrase is a row of a tiny
@@ -194,8 +185,8 @@ def phrase_match(spark: SparkSession, root: str, phrase: list[str]) -> DataFrame
     # and a phrase occurrence = one position present in EVERY slot's
     # shifted set — an order-insensitive array-intersection fold, so the
     # collect_list ordering cannot affect n_hits.
-    slots = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(stemmed)], "term string, slot int"
+    slots = catalog.local_df(
+        spark, [(t, i) for i, t in enumerate(stemmed)], "term string, slot int"
     )
     pos = decode_segments(load_segments(spark, root, stemmed), positions=True)
     shifted = pos.join(F.broadcast(slots), "term").select(
@@ -223,7 +214,7 @@ def term_idfs(spark: SparkSession, root: str, terms: list[str], n_docs: int) -> 
     """Per-term idf from the dictionary, computed driver-side in Python
     float64 (one ln definition for engine + oracle)."""
     dict_root = catalog.path(root, "dictionary")
-    df = spark.read.option("basePath", dict_root).parquet(dict_root)
+    df = catalog.read_table(spark, dict_root, base_path=dict_root)
     rows = df.filter(F.col("term").isin(terms)).select("term", "df").collect()
     return {r["term"]: idf(n_docs, r["df"]) for r in rows}
 
@@ -253,7 +244,7 @@ def _query_terms_df(
                 )
             )
     schema = "query_id int, term string, idf double, n_terms int, mode string, k int"
-    return spark.createDataFrame(rows, schema)
+    return catalog.local_df(spark, rows, schema)
 
 
 def all_query_terms(queries: list[dict]) -> list[str]:
@@ -324,7 +315,7 @@ def score_exhaustive(
     if use_anchor:
         scored = scored.withColumn("anchor", F.lit(0.0))
     if os.path.exists(title_path):
-        title = spark.read.parquet(title_path)
+        title = catalog.read_table(spark, title_path)
         th = title.join(
             F.broadcast(qt.select("query_id", "term").distinct()), "term"
         ).select(
@@ -344,7 +335,7 @@ def score_exhaustive(
     if use_anchor:
         # anchor hits ride the same aggregation with score 0.0 exactly
         # like title rows — the bm25 fold stays bit-identical
-        anchor = spark.read.parquet(anchor_path)
+        anchor = catalog.read_table(spark, anchor_path)
         ah = anchor.join(
             F.broadcast(qt.select("query_id", "term").distinct()), "term"
         ).select(
@@ -397,7 +388,7 @@ def score_exhaustive(
     ex_rows = [(qid, t) for qid, ts in ex_by_q.items() for t in ts]
     if ex_rows:
         ex_terms = sorted({t for _, t in ex_rows})
-        eqt = spark.createDataFrame(ex_rows, "query_id int, term string")
+        eqt = catalog.local_df(spark, ex_rows, "query_id int, term string")
         deny = (
             decode_segments(load_segments(spark, root, ex_terms), positions=False)
             .join(F.broadcast(eqt), "term")
@@ -411,7 +402,9 @@ def score_exhaustive(
     # blend: pagerank
     pr_path = catalog.path(root, catalog.PAGERANKS)
     if os.path.exists(pr_path):
-        pr = spark.read.parquet(pr_path).select("doc_id", F.col("rank").alias("pagerank"))
+        pr = catalog.read_table(spark, pr_path).select(
+            "doc_id", F.col("rank").alias("pagerank")
+        )
         candidates = candidates.join(pr, "doc_id", "left").fillna({"pagerank": 0.0})
     else:
         candidates = candidates.withColumn("pagerank", F.lit(0.0))

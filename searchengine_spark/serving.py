@@ -10,9 +10,11 @@ Reference parity:
               limit=15 (``Mainpage.java:48-51,121-132``)
 
 Physical shape: with a docstore built (``build_docstore``), the ranked
-top-k is looked up in a doc-id-sorted forward index via a pushed
-``In(doc_id)`` filter — O(k) row groups, the Spark analog of the
-reference's per-URL KVS point GET. Without one, the fallback joins the
+top-k is collected and looked up in a doc-id-sorted forward index via a
+pushed ``In(doc_id)`` filter — O(k) row groups, the Spark analog of the
+reference's per-URL KVS point GET — in one job whose rows come back as
+a local table; ranked docs the store does not hold yet take the
+fallback. Without a docstore, the fallback joins the
 pages corpus on url — a broadcast of the *results*, so the corpus-side
 lookup is a semi-join pruned scan, never a full-corpus shuffle; title/
 snippet extraction then runs as one Arrow-vectorized pandas UDF over
@@ -26,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import catalog
 from .query import phrase_match, score_exhaustive
 from .textprep import _RE_P, _RE_TITLE, java_tokens
 
@@ -83,8 +86,6 @@ def build_docstore(
     paid ONCE here over the corpus (Arrow-vectorized), instead of per
     query at serve time. At 100 TB the docstore is the one corpus-sized
     serving artifact, and it is only ever read k rows at a time."""
-    from . import catalog
-
     docstats = spark.read.parquet(
         catalog.path(root, catalog.DOCSTATS)
     ).select("doc_id", "url")
@@ -118,8 +119,6 @@ def refresh_docstore(
     docs appended. The ingest model is append-only by doc_id
     (= xxhash64(url)), so existing rows are never stale.
     """
-    from . import catalog
-
     if not catalog.exists(root, catalog.DOCSTORE):
         build_docstore(spark, root, pages_path)
         return -1  # full build, not an append
@@ -172,7 +171,7 @@ def _topk_df(
 ) -> DataFrame:
     """(query_id, rank, doc_id, bm25, blended) for a list of request
     dicts ``{query, mode, k, offset}``; query_id = list index; rank
-    spans [1, offset+k] (the caller applies the per-query offset cut).
+    spans [offset+1, offset+k] (absolute ranks, one page per request).
 
     PHRASE requests score in a separate ``score_exhaustive`` call:
     its ``restrict`` allow-list must cover every query_id it scores
@@ -222,7 +221,22 @@ def _topk_df(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionAll(p)
-    return out
+    offs = catalog.local_df(
+        spark,
+        [(i, int(r.get("offset", 0) or 0)) for i, r in enumerate(reqs)],
+        "query_id int, off int",
+    )
+    return (
+        out.join(F.broadcast(offs), "query_id")
+        .filter(F.col("rank") > F.col("off"))
+        .drop("off")
+    )
+
+
+ATTACHED_SCHEMA = (
+    "query_id int, rank int, url string, title string, snippet string, "
+    "bm25 double, blended double"
+)
 
 
 def _attach_docs(
@@ -230,47 +244,49 @@ def _attach_docs(
 ) -> DataFrame:
     """(query_id, rank, url, title, snippet, bm25, blended) for a
     ranked (query_id, rank, doc_id, bm25, blended) frame."""
-    from . import catalog
+    if not catalog.exists(root, catalog.DOCSTORE):
+        return _attach_docs_corpus(spark, root, pages_path, topk)
+    # fast path: the ranked k rows are materialized (the sanctioned
+    # k-row serving fetch), ONE job reads their docstore rows, and the
+    # k-row join happens here on the driver — the attached rows come
+    # back as a local table, so the caller's collect runs no job.
+    rows = topk.collect()
+    docs: dict[int, list] = {}
+    for d in _docstore_fetch(spark, root, {r["doc_id"] for r in rows}).collect():
+        docs.setdefault(d["doc_id"], []).append(d)
+    attached = catalog.local_df(
+        spark,
+        [
+            (r["query_id"], r["rank"], d["url"], d["title"], d["snippet"],
+             r["bm25"], r["blended"])
+            for r in rows
+            for d in docs.get(r["doc_id"], [])
+        ],
+        ATTACHED_SCHEMA,
+    )
+    # Docs in the post-merge lag window (ranked from docstats but not
+    # yet appended to the docstore — fsck flags these as a warning)
+    # must not leave rank gaps: the ranked rows the fetch did not cover
+    # go through the corpus-scan fallback, so serving degrades to
+    # slower, never to missing results.
+    missed = [r for r in rows if r["doc_id"] not in docs]
+    if not missed:
+        return attached
+    miss_df = catalog.local_df(spark, missed, topk.schema)
+    return attached.unionAll(
+        _attach_docs_corpus(spark, root, pages_path, miss_df)
+    )
 
-    if catalog.exists(root, catalog.DOCSTORE):
-        # fast path: the ranked k rows are materialized (the sanctioned
-        # k-row serving fetch), then looked up in the doc-id-sorted
-        # docstore via a pushed In(doc_id) filter — O(k) row groups
-        # decoded, no corpus scan, no re-run of the scoring job on the
-        # lookup side.
-        rows = topk.collect()
-        local = spark.createDataFrame(rows, schema=topk.schema)
-        store = spark.read.parquet(catalog.path(root, catalog.DOCSTORE))
-        if rows:
-            store = store.filter(
-                F.col("doc_id").isin(
-                    sorted({r["doc_id"] for r in rows})
-                )
-            )
-        else:
-            store = store.filter(F.lit(False))
-        fast_df = store.join(F.broadcast(local), "doc_id").select(
-            "query_id", "rank", "url", "title", "snippet", "bm25", "blended"
-        )
-        # Docs in the post-merge lag window (ranked from docstats but
-        # not yet appended to the docstore — fsck flags these as a
-        # warning) must not leave rank gaps. Precheck coverage with a
-        # doc_id-only probe — column-pruned and In-pushed, it decodes
-        # the SAME O(k) row groups the fetch will (cache-warm, one tiny
-        # job per batch) — and route misses through the corpus-scan
-        # fallback, so serving degrades to slower, never to missing
-        # results. The common covered case returns the lazy pushed-In
-        # plan unchanged.
-        have = {r["doc_id"] for r in store.select("doc_id").collect()}
-        missed = [r for r in rows if r["doc_id"] not in have]
-        if not missed:
-            return fast_df
-        miss_df = spark.createDataFrame(missed, schema=topk.schema)
-        return fast_df.unionAll(
-            _attach_docs_corpus(spark, root, pages_path, miss_df)
-        )
 
-    return _attach_docs_corpus(spark, root, pages_path, topk)
+def _docstore_fetch(
+    spark: SparkSession, root: str, doc_ids: set[int]
+) -> DataFrame:
+    """(doc_id, url, title, snippet) of ``doc_ids`` from the
+    doc-id-sorted docstore, read through a pushed In(doc_id) filter —
+    O(k) row groups decoded, no corpus scan."""
+    store = catalog.read_table(spark, catalog.path(root, catalog.DOCSTORE))
+    keep = F.col("doc_id").isin(sorted(doc_ids)) if doc_ids else F.lit(False)
+    return store.filter(keep).select("doc_id", "url", "title", "snippet")
 
 
 def _attach_docs_corpus(
@@ -278,11 +294,9 @@ def _attach_docs_corpus(
 ) -> DataFrame:
     """Slow-path doc attach: join the ranked rows back through docstats
     and the raw corpus, extracting title/snippet per request."""
-    from . import catalog
-
-    docstats = spark.read.parquet(catalog.path(root, catalog.DOCSTATS)).select(
-        "doc_id", "url"
-    )
+    docstats = catalog.read_table(
+        spark, catalog.path(root, catalog.DOCSTATS)
+    ).select("doc_id", "url")
     pages = spark.read.parquet(pages_path).select("url", "html")
     # broadcast the k ranked rows into both lookups — the corpus and
     # docstats sides stream, nothing big ever shuffles
@@ -321,9 +335,7 @@ def search(
     from survivors. Exclusions compose with every mode (in PHRASE they
     apply on top of the positional restriction)."""
     req = {"query": query, "mode": mode, "k": k, "offset": offset}
-    topk = _topk_df(spark, root, [req], w_anchor=w_anchor).filter(
-        F.col("rank") > offset
-    )
+    topk = _topk_df(spark, root, [req], w_anchor=w_anchor)
     return (
         _attach_docs(spark, root, pages_path, topk)
         .select("rank", "url", "title", "snippet", "bm25", "blended")
@@ -344,16 +356,7 @@ def search_many(
     requests sharing it."""
     if not reqs:
         return []
-    offs = spark.createDataFrame(
-        [(i, int(r.get("offset", 0) or 0)) for i, r in enumerate(reqs)],
-        "query_id int, off int",
-    )
-    topk = (
-        _topk_df(spark, root, reqs, w_anchor=w_anchor)
-        .join(F.broadcast(offs), "query_id")
-        .filter(F.col("rank") > F.col("off"))
-        .drop("off")
-    )
+    topk = _topk_df(spark, root, reqs, w_anchor=w_anchor)
     rows = _attach_docs(spark, root, pages_path, topk).collect()
     by_q: dict[int, list] = {i: [] for i in range(len(reqs))}
     for r in rows:
@@ -368,10 +371,11 @@ class QueryBatcher:
 
     The reference serves from a 100-thread pool over one shared backend
     (``webserver/Server.java:17``); the Spark analog is sharing one
-    *job* — a single request pays ~2 s of fixed per-job cost (stage
-    scheduling, segment reads, python decode spin-up) while the
-    marginal cost of adding a query to a batch is ~0.2-0.35 s. The
-    batcher needs no artificial time window: the in-flight job IS the
+    *job*. On perfbench's ``serve`` index (4,000 pages, 4-vCPU VM) a
+    lone request takes ~2.3 s, most of it fixed cost (job scheduling,
+    segment reads, python decode spin-up), while a batch of four
+    answers in ~3.2 s: ~0.3 s per added query. The batcher needs no
+    artificial time window: the in-flight job IS the
     window — requests arriving while a batch executes queue up and all
     ship in the next one, so an idle server still answers a lone
     request at single-query latency.

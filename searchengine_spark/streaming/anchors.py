@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..anchors import anchor_occurrences
+from . import batch_dir
 from .ingest import PAGES_SPARK_SCHEMA
 
 
@@ -59,17 +60,9 @@ def stream_anchor_occurrences(
     over at-least-once)."""
     s = spark.readStream.schema(schema).parquet(pages_dir)
 
-    import hashlib
-
-    ck_tag = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:8]
-
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         anchor_occurrences(batch_df).write.mode("overwrite").parquet(
-            os.path.join(
-                anchors_dir, "occ", f"batch=stream-{ck_tag}-{batch_id:08d}"
-            )
+            os.path.join(anchors_dir, "occ", batch_dir(checkpoint_dir, batch_id))
         )
 
     return (

@@ -30,7 +30,6 @@ q83's stop-shingle argument.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +41,7 @@ from ..pipelines.textstats import (
     winnow_census,
     winnow_parts,
 )
+from . import batch_dir
 from .sketch import DOCS_SCHEMA
 
 FP_PAIR_MIN_SHARED = 2   # report doc pairs sharing >= this many prints
@@ -60,11 +60,10 @@ def stream_winnow_fingerprints(
     ``fp_dir/{nk,sel}/batch=stream-<ckpt-hash>-<id>`` (overwrite —
     replay-idempotent). Returns the StreamingQuery."""
     s = spark.readStream.schema(schema).parquet(docs_dir)
-    ck_tag = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         nk, sel = winnow_parts(batch_df)
-        name = f"batch=stream-{ck_tag}-{batch_id:08d}"
+        name = batch_dir(checkpoint_dir, batch_id)
         nk.write.mode("overwrite").parquet(os.path.join(fp_dir, "nk", name))
         sel.write.mode("overwrite").parquet(os.path.join(fp_dir, "sel", name))
 
@@ -93,10 +92,14 @@ def read_shared_pairs(spark: SparkSession, fp_dir: str) -> DataFrame:
         "doc_id",
         F.shiftright("selkey", WIN_POS_BITS).alias("fp"),
     ).distinct()
-    dfc = fp.groupBy("fp").agg(F.count("*").alias("df"))
-    live = fp.join(
-        F.broadcast(dfc.filter(F.col("df") <= FP_PAIR_MAX_DF)), "fp"
+    # broadcast only the over-cap stop set (at most |fp rows| / cap
+    # rows); the full fingerprint -> df table grows with the corpus
+    stop = (
+        fp.groupBy("fp").agg(F.count("*").alias("df"))
+        .filter(F.col("df") > FP_PAIR_MAX_DF)
+        .select("fp")
     )
+    live = fp.join(F.broadcast(stop), "fp", "left_anti")
     a = live.select(F.col("doc_id").alias("doc_a"), "fp")
     b = live.select(F.col("doc_id").alias("doc_b"), "fp")
     return (

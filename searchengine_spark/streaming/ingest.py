@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from .. import catalog
 from ..indexer import _bucket, _ingest_filter, docs_with_scoring_text, tokenize
+from . import batch_dir
 
 PAGES_SPARK_SCHEMA = T.StructType(
     [
@@ -72,12 +73,6 @@ def stream_tokenize(
         .parquet(pages_dir)
     )
 
-    import hashlib
-
-    ck_tag = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:8]
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         docs = docs_with_scoring_text(_ingest_filter(batch_df))
         toks = tokenize(docs).withColumn("bucket", _bucket("term", n_buckets))
@@ -87,7 +82,7 @@ def stream_tokenize(
         # directory (no cross-run clobber), and the chunk= layout matches
         # the batch build's, so read_tokens and merge_tokens_stage see
         # stream chunks like any other chunk
-        out = os.path.join(tokens_out, f"chunk=stream-{ck_tag}-{batch_id:08d}")
+        out = os.path.join(tokens_out, batch_dir(checkpoint_dir, batch_id, "chunk"))
         (
             toks.write.mode("overwrite")
             .partitionBy("bucket")

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from ..pipelines.curation import ngram_novelty_from, novelty_occurrences
 from ..pipelines.dedup import portable_hash
+from . import batch_dir
 from .sketch import DOCS_SCHEMA
 
 
@@ -45,7 +46,7 @@ def stream_novelty_occurrences(
 ):
     """availableNow stream over a documents directory: write each
     micro-batch's hashed occurrence partial to
-    ``novelty_dir/occ/batch=<id>`` (overwrite — replay-idempotent).
+    ``novelty_dir/occ/batch=stream-<ckpt-hash>-<id>`` (overwrite — replay-idempotent).
     Returns the StreamingQuery."""
     s = spark.readStream.schema(schema).parquet(docs_dir)
 
@@ -54,7 +55,7 @@ def stream_novelty_occurrences(
             "doc_id", "source", portable_hash(F.col("s")).alias("sh")
         )
         occ.write.mode("overwrite").parquet(
-            os.path.join(novelty_dir, "occ", f"batch={batch_id:08d}")
+            os.path.join(novelty_dir, "occ", batch_dir(checkpoint_dir, batch_id))
         )
 
     return (

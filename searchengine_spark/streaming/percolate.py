@@ -25,13 +25,13 @@ dedup twin, whose state grows with distinct keys).
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..pipelines.fulltext import percolate_alerts
+from . import batch_dir
 from .dedup import DOCS_SCHEMA
 
 
@@ -50,15 +50,10 @@ def stream_percolate(
     stream starts — rules must not drift mid-stream). Returns the
     StreamingQuery."""
     s = spark.readStream.schema(schema).parquet(docs_dir)
-    ck_tag = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:8]
 
     def match_batch(batch_df: DataFrame, batch_id: int) -> None:
         percolate_alerts(batch_df, rules).write.mode("overwrite").parquet(
-            os.path.join(
-                alerts_dir, f"batch=stream-{ck_tag}-{batch_id:08d}"
-            )
+            os.path.join(alerts_dir, batch_dir(checkpoint_dir, batch_id))
         )
 
     return (

@@ -15,8 +15,10 @@ MAX — commutative, associative, and idempotent — so
 * a 1000-executor deployment merges per-segment register tables of
   k·m rows (m=1024) — kilobytes per key, independent of input size.
 
-Layout: ``registers_dir/batch=<id>/`` holds each micro-batch's PARTIAL
-register table (key, bucket, mrho); readers fold all partials with one
+Layout: ``registers_dir/batch=stream-<ckpt-hash>-<id>/`` holds each
+micro-batch's PARTIAL register table (key, bucket, mrho) — the
+checkpoint hash keeps a second run with a fresh checkpoint from
+overwriting the first run's batches; readers fold all partials with one
 groupBy-MAX (k·m·n_batches tiny rows). A compactor would just rewrite
 the folded table; at register scale it is never needed.
 
@@ -33,6 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import batch_dir
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -56,14 +60,14 @@ def stream_hll(
     schema: T.StructType = EVENTS_SCHEMA,
 ):
     """availableNow stream: write each micro-batch's partial HLL
-    register table to ``registers_dir/batch=<id>`` (overwrite —
+    register table to ``registers_dir/batch=stream-<ckpt-hash>-<id>`` (overwrite —
     replay-idempotent). Returns the StreamingQuery."""
     from ..pipelines.relational import hll_registers
 
     s = spark.readStream.schema(schema).parquet(events_dir)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(registers_dir, f"batch={batch_id:08d}")
+        out = os.path.join(registers_dir, batch_dir(checkpoint_dir, batch_id))
         hll_registers(batch_df, key, value).write.mode("overwrite").parquet(out)
 
     return (
@@ -94,7 +98,7 @@ def stream_cms(
     schema: T.StructType = DOCS_SCHEMA,
 ):
     """availableNow stream over a documents directory: write each
-    micro-batch's partial count-min grid to ``sketch_dir/batch=<id>``
+    micro-batch's partial count-min grid to ``sketch_dir/batch=stream-<ckpt-hash>-<id>``
     (overwrite — a replayed batch rewrites the same partial rather than
     double-counting; the SUM fold then sees each batch exactly once).
     Unlike HLL's MAX, SUM is not idempotent, so the per-batch-directory
@@ -104,7 +108,7 @@ def stream_cms(
     s = spark.readStream.schema(schema).parquet(docs_dir)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = os.path.join(sketch_dir, f"batch={batch_id:08d}")
+        out = os.path.join(sketch_dir, batch_dir(checkpoint_dir, batch_id))
         toks = batch_df.select(F.explode(_tok_arr()).alias("tok"))
         cms_sketch(toks).write.mode("overwrite").parquet(out)
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..pipelines.dedup import dup_spans_from, span_doc_base, span_occurrences
+from . import batch_dir
 from .sketch import DOCS_SCHEMA
 
 
@@ -39,18 +40,19 @@ def stream_span_occurrences(
     schema: T.StructType = DOCS_SCHEMA,
 ):
     """availableNow stream over a documents directory: write each
-    micro-batch's occurrence partial to ``spans_dir/occ/batch=<id>`` and
-    its (doc_id, n_toks) base to ``spans_dir/docs/batch=<id>`` (both
-    overwrite — replay-idempotent). Returns the StreamingQuery."""
+    micro-batch's occurrence partial to ``spans_dir/occ/<batch>`` and
+    its (doc_id, n_toks) base to ``spans_dir/docs/<batch>``, with
+    <batch> = ``batch=stream-<ckpt-hash>-<id>`` (both overwrite —
+    replay-idempotent). Returns the StreamingQuery."""
     s = spark.readStream.schema(schema).parquet(docs_dir)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         base = span_doc_base(batch_df)
         base.select("doc_id", "n_toks").write.mode("overwrite").parquet(
-            os.path.join(spans_dir, "docs", f"batch={batch_id:08d}")
+            os.path.join(spans_dir, "docs", batch_dir(checkpoint_dir, batch_id))
         )
         span_occurrences(base).write.mode("overwrite").parquet(
-            os.path.join(spans_dir, "occ", f"batch={batch_id:08d}")
+            os.path.join(spans_dir, "occ", batch_dir(checkpoint_dir, batch_id))
         )
 
     return (

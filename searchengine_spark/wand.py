@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import catalog
 from .bm25 import K1, tf_norm
 from .compress import decode_segment_block
 from .query import (
@@ -492,8 +493,8 @@ def score_wand(
         for t in dict.fromkeys(qm["terms"] + qm["exclude"])
     ]
     if not qt_rows:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    qt = spark.createDataFrame(qt_rows, "query_id int, term string")
+        return catalog.local_df(spark, [], TOPK_SCHEMA)
+    qt = catalog.local_df(spark, qt_rows, "query_id int, term string")
     joined = segs.join(F.broadcast(qt), "term")
 
     ranged = n_ranges > 1
@@ -568,8 +569,8 @@ def score_wand(
     if ranged:
         # merge range-local top-ks: global top-k under the same total
         # tie-break; k varies per query, so re-join the per-query k
-        kdf = spark.createDataFrame(
-            [(m["query_id"], m["k"]) for m in qmeta], "query_id int, k int"
+        kdf = catalog.local_df(
+            spark, [(m["query_id"], m["k"]) for m in qmeta], "query_id int, k int"
         )
         w = Window.partitionBy("query_id").orderBy(
             F.desc("bm25"), F.asc("doc_id")

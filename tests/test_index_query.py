@@ -280,14 +280,20 @@ def test_serving_search(spark, tiny_index, tiny_pages_path):
 def test_docstore_fast_path(spark, tiny_index, tiny_pages_path):
     """Docstore serving: identical rows to the pages-scan path, pushed
     In(doc_id) filter on the store scan (O(k) row groups, no corpus
-    scan), and no crash on a zero-hit query."""
+    scan), and no crash on a zero-hit query. The attached rows come
+    back as a local table, so the fetch job is the last one."""
     import contextlib
     import io
     import shutil
 
     from searchengine_spark import catalog
     from searchengine_spark.corpus import VOCAB
-    from searchengine_spark.serving import build_docstore, search
+    from searchengine_spark.serving import (
+        _docstore_fetch,
+        _topk_df,
+        build_docstore,
+        search,
+    )
 
     q = f"{VOCAB[0]} {VOCAB[1]}"
     slow_rows = [
@@ -299,9 +305,15 @@ def test_docstore_fast_path(spark, tiny_index, tiny_pages_path):
     try:
         fast = search(spark, tiny_index, tiny_pages_path, q, k=5)
         assert [r.asDict() for r in fast.collect()] == slow_rows
+        lp = fast._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in lp and "LogicalRDD" not in lp, lp
+        topk = _topk_df(spark, tiny_index, [{"query": q, "k": 5}])
+        fetch = _docstore_fetch(
+            spark, tiny_index, {r["doc_id"] for r in topk.collect()}
+        )
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            fast.explain(mode="formatted")
+            fetch.explain(mode="formatted")
         p = buf.getvalue()
         assert "docstore" in p and "In(doc_id" in p, p
         assert "html" not in p  # never reads the corpus html column

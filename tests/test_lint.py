@@ -63,3 +63,31 @@ def test_segment_codec_stays_in_compress():
             rel = path.relative_to(pkg)
             offenders += [f"{rel}: {n}" for n in sorted(names & CODEC_INTERNALS)]
     assert not offenders, offenders
+
+
+def _calls(tree: ast.AST, attr: str):
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == attr:
+            yield node
+
+
+def test_one_way_to_build_a_driver_table_and_read_an_index_table():
+    """Driver-built tables go through catalog.local_df (a LocalRelation:
+    no Python-worker task per core, as createDataFrame of a list
+    plans); the query path reads index tables only through
+    catalog.read_table, whose schema is inferred once per path. The
+    pipelines registry is out of scope."""
+    pkg = pathlib.Path(__file__).parent.parent / "searchengine_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "catalog.py" and "pipelines" not in path.parts
+        for node in _calls(ast.parse(path.read_text()), "createDataFrame")
+    ]
+    assert not offenders, offenders
+    reads = [
+        node.lineno
+        for node in _calls(ast.parse((pkg / "query.py").read_text()), "read")
+        if isinstance(node.value, ast.Name) and node.value.id == "spark"
+    ]
+    assert not reads, f"query.py reads with spark.read at lines {reads}"

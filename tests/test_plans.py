@@ -455,3 +455,68 @@ def test_pagerank_round_is_one_join_and_one_sum(spark):
     assert len(re.findall(r"^[ :+|-]*Join ", lp, re.M)) == 1, lp
     assert len(re.findall(r"^[ :+|-]*Aggregate ", lp, re.M)) == 1, lp
     assert r.columns == ["node", "u", "prev_u"]
+
+
+@pytest.fixture
+def tiny_docstore(spark, tiny_index, tiny_pages_path):
+    import shutil
+
+    from searchengine_spark import catalog
+    from searchengine_spark.serving import build_docstore
+
+    build_docstore(spark, tiny_index, tiny_pages_path, n_files=2)
+    yield tiny_index
+    shutil.rmtree(catalog.path(tiny_index, catalog.DOCSTORE), ignore_errors=True)
+
+
+def test_request_tables_are_local_relations(
+    spark, tiny_docstore, tiny_pages_path
+):
+    """Driver-built tables on the request path — the query-term table,
+    the phrase slots and exclusion table, the offsets table and the
+    attached ranked rows — plan as LocalRelations. A LogicalRDD over a
+    PythonRDD (createDataFrame of a list) starts a Python-worker task
+    per core to unpickle a few rows."""
+    from searchengine_spark.corpus import VOCAB
+    from searchengine_spark.query import _query_terms_df
+    from searchengine_spark.serving import _attach_docs, _topk_df
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    qt = _query_terms_df(
+        spark, [{"query_id": 0, "query": f"{VOCAB[0]} {VOCAB[1]}"}], {}
+    )
+    assert optimized(qt).lstrip().startswith("LocalRelation"), optimized(qt)
+    reqs = [
+        {"query": f"{VOCAB[0]} -{VOCAB[3]}", "mode": "OR", "k": 5, "offset": 2},
+        {"query": f"{VOCAB[0]} {VOCAB[1]}", "mode": "PHRASE", "k": 3},
+    ]
+    topk = _topk_df(spark, tiny_docstore, reqs)
+    lp = optimized(topk)
+    # query terms, offsets, phrase slots, exclusion terms
+    assert lp.count("LocalRelation") >= 4, lp
+    assert "LogicalRDD" not in lp, lp
+    attached = _attach_docs(spark, tiny_docstore, tiny_pages_path, topk)
+    assert optimized(attached).lstrip().startswith("LocalRelation")
+
+
+def test_search_many_job_count(spark, tiny_docstore, tiny_pages_path):
+    """A warm one-query search_many with a docstore runs a pinned number
+    of Spark jobs: no schema-inference footer job per index table, no
+    Python-worker job per driver-built table, and one docstore fetch
+    whose rows come back as a local table (18 jobs before)."""
+    from searchengine_spark.corpus import VOCAB
+    from searchengine_spark.serving import search_many
+
+    reqs = [{"query": f"{VOCAB[0]} {VOCAB[1]}", "mode": "OR", "k": 5}]
+    warm = search_many(spark, tiny_docstore, tiny_pages_path, reqs)
+    group = "search-many-job-count"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "one warm search_many")
+    try:
+        got = search_many(spark, tiny_docstore, tiny_pages_path, reqs)
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == warm and got[0]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11

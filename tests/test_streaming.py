@@ -354,6 +354,48 @@ def test_stream_cms_matches_batch(spark):
     assert again == streamed
 
 
+def test_stream_cms_fresh_checkpoints_share_sketch_dir(spark):
+    """Two count-min streams over disjoint halves of the documents, each
+    with its own checkpoint, into ONE sketch dir: both start at batch
+    0, and the SUM fold must equal the batch grid over both halves
+    (bare batch=<id> dirs let the second run's batch 0 overwrite the
+    first's)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.pipelines.textstats import _tok_arr, cms_sketch
+    from searchengine_spark.streaming.sketch import (
+        read_cms_sketch,
+        stream_cms,
+    )
+
+    base = os.path.join(STREAMDIR, "cms_two_runs")
+    shutil.rmtree(base, ignore_errors=True)
+    sketch_dir = os.path.join(base, "grid")
+    src = "/root/testdata/sf0.001/documents.parquet"
+    tbl = pq.read_table(src)
+    half = tbl.num_rows // 2
+    for run, part in enumerate((tbl.slice(0, half), tbl.slice(half))):
+        docs_dir = os.path.join(base, f"docs{run}")
+        os.makedirs(docs_dir)
+        pq.write_table(part, os.path.join(docs_dir, "part.parquet"))
+        stream_cms(
+            spark, docs_dir, sketch_dir, os.path.join(base, f"ckpt{run}")
+        ).awaitTermination()
+
+    streamed = {
+        (r["row"], r["bucket"]): r["cnt"]
+        for r in read_cms_sketch(spark, sketch_dir).collect()
+    }
+    batch = {
+        (r["row"], r["bucket"]): r["cnt"]
+        for r in cms_sketch(
+            spark.read.parquet(src).select(F.explode(_tok_arr()).alias("tok"))
+        ).collect()
+    }
+    assert streamed == batch
+
+
 def test_stream_range_join_matches_batch(spark):
     """Stream-stream interval join (purchases x clicks within the
     preceding hour, both sides in two arbitrary micro-batches) must emit

@@ -10,17 +10,18 @@ Layout under an index root:
 
     tokens/chunk=<c>/bucket=<b>/    tokenized corpus (resume unit: chunk)
     docstats/                       (doc_id, url, doc_len)
-    stats/                          single-row (n_docs, avgdl)
     postings/group=<g>/bucket=<b>/  posting segments, format in compress.py
-                                    (resume unit: group of buckets)
-    dictionary/group=<g>/           (bucket, term, df, cf, n_salts)
+                                    (resume unit: group of buckets); a
+                                    term's df is the sum of its segments'
+                                    n_postings
     title_index/                    (term, doc_id) from the title pipeline
     anchor_index/                   optional (term, doc_id) anchor text
     pageranks/                      (doc_id, rank)
     docstore/                       doc_id-sorted (url, title, snippet)
     _lineage/                       per-partition completion records
     _meta.json                      n_buckets, group_size, target_postings,
-                                    tokens_manifest, ... (source of truth)
+                                    tokens_manifest, n_docs, avgdl, ...
+                                    (source of truth)
 """
 
 from __future__ import annotations
@@ -33,7 +34,6 @@ import uuid
 
 TOKENS = "tokens"
 DOCSTATS = "docstats"
-STATS = "stats"
 POSTINGS = "postings"
 TITLE_INDEX = "title_index"
 ANCHOR_INDEX = "anchor_index"  # optional inbound-anchor-text field
@@ -51,9 +51,10 @@ BUCKET_GROUP_SIZE = 4  # buckets per postings job (resume unit = group)
 
 META = "_meta.json"
 
-# bump when the on-disk segment format changes (columns, salting,
-# compression); readers and cached test fixtures key off it
-INDEX_FORMAT = 4
+# bump when the on-disk index format changes (segment columns, salting,
+# compression, which tables and _meta.json keys exist); readers and
+# cached test fixtures key off it
+INDEX_FORMAT = 5
 
 
 def path(root: str, table: str) -> str:

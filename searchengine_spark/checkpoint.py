@@ -85,15 +85,28 @@ def record(
     catalog.write_atomic(final, buf.getvalue())
 
 
+def _latest_rows(root: str, stage: str) -> dict[int, dict]:
+    """The most recent lineage row of each partition of ``stage``. A
+    partition's output path is rewritten by every run, so only its last
+    completion describes what is on disk: after runs under fingerprints
+    A, B, A-again the output holds B's data until A's re-run records."""
+    latest: dict[int, dict] = {}
+    for row in read_metrics(root):
+        if row["stage"] != stage:
+            continue
+        prev = latest.get(row["partition_id"])
+        if prev is None or row["completed_at"] >= prev["completed_at"]:
+            latest[row["partition_id"]] = row
+    return latest
+
+
 def completed_partitions(root: str, stage: str, input_fingerprint: str) -> set[int]:
-    d = catalog.path(root, catalog.LINEAGE)
-    done: set[int] = set()
-    for f in catalog.list_files(d, ".parquet"):
-        t = pq.read_table(f)
-        for row in t.to_pylist():
-            if row["stage"] == stage and row["input_fingerprint"] == input_fingerprint:
-                done.add(row["partition_id"])
-    return done
+    """Partitions whose most recent completion is under
+    ``input_fingerprint``."""
+    return {
+        pid for pid, row in _latest_rows(root, stage).items()
+        if row["input_fingerprint"] == input_fingerprint
+    }
 
 
 def read_metrics(root: str) -> list[dict]:
@@ -115,10 +128,13 @@ def run_partitioned_stage(
     max_parallel: int | None = None,
 ) -> dict:
     """Run ``fn(pid) -> (output_path, rows, bytes)`` for every partition not
-    already completed (idempotent resume). ``kill_after`` aborts BEFORE the
+    already completed (idempotent resume): a partition is skipped when its
+    most recent completion is under ``input_fingerprint`` and the output
+    path it recorded still exists (a deleted output is rebuilt, not
+    served as missing). ``kill_after`` aborts BEFORE the
     (N+1)th partition starts, so exactly N complete (kill_after=0
     completes none) — used by the resume tests to simulate a killed
-    build; same boundary semantics as merge_tokens_stage's knob.
+    build or merge (merge_tokens_stage passes its knob through).
 
     Partitions run as *concurrent Spark jobs* from driver threads
     (``max_parallel`` at a time, default 4): one partition's shuffle
@@ -128,7 +144,12 @@ def run_partitioned_stage(
 
     Returns {"ran": [...], "skipped": [...]}.
     """
-    done = completed_partitions(root, stage, input_fingerprint)
+    latest = _latest_rows(root, stage)
+    done = {
+        pid for pid, row in latest.items()
+        if row["input_fingerprint"] == input_fingerprint
+        and os.path.exists(row["output_path"])
+    }
     skipped = [p for p in partition_ids if p in done]
     todo = [p for p in partition_ids if p not in done]
 

@@ -25,11 +25,10 @@ lazy WAND and merge depend on):
     (max_doc(salt) < min_doc(salt+1)).
 
 Catalog consistency:
-  * every segment (bucket, term) has a dictionary row whose df equals
-    the total decoded postings and whose n_salts matches;
   * bucket partition dirs are within [0, n_buckets) and live in their
     correct group dir;
-  * stats table matches docstats (n_docs = count, avgdl = mean);
+  * ``_meta.json`` n_docs/avgdl match docstats (n_docs = count, avgdl =
+    mean);
   * postings lineage complete for the current tokens manifest (a stale
     manifest means a merge/rebuild is pending — reported as a warning).
 
@@ -134,13 +133,13 @@ def _segment_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # info row for the cross-segment salt-range check
             out.append((
                 "info", "rangestat", b, term, salt,
-                f"{int(docs[0])}:{int(docs[-1])}:{int(row.n_salts)}:{n}",
+                f"{int(docs[0])}:{int(docs[-1])}:{int(row.n_salts)}",
             ))
         yield pd.DataFrame(out, columns=[f.name for f in FINDINGS_SCHEMA.fields])
 
 
 def _salt_range_findings(rangestats: DataFrame) -> DataFrame:
-    """Cross-segment checks on the per-segment (min,max,n_salts,n) info
+    """Cross-segment checks on the per-segment (min,max,n_salts) info
     rows: full salt coverage, consistent n_salts, disjoint ordered
     doc-id ranges (the range-salting contract)."""
     parts = F.split("detail", ":")
@@ -149,15 +148,12 @@ def _salt_range_findings(rangestats: DataFrame) -> DataFrame:
         parts.getItem(0).cast("long").alias("min_doc"),
         parts.getItem(1).cast("long").alias("max_doc"),
         parts.getItem(2).cast("int").alias("n_salts"),
-        parts.getItem(3).cast("long").alias("n"),
     )
     by_term = seg.groupBy("bucket", "term").agg(
         F.count("*").alias("n_segs"),
         F.countDistinct("salt").alias("n_distinct_salts"),
         F.countDistinct("n_salts").alias("n_salts_variants"),
         F.max("n_salts").alias("n_salts"),
-        F.sum("n").alias("total_postings"),
-        F.max(F.struct("salt", "max_doc")).alias("_last"),
         # ranges ordered+disjoint <=> sorting by salt equals sorting by
         # min_doc AND each salt's max < next salt's min
         F.sort_array(F.collect_list(F.struct("salt", "min_doc", "max_doc"))).alias("segs"),
@@ -190,7 +186,7 @@ def _salt_range_findings(rangestats: DataFrame) -> DataFrame:
             F.lit(" overlap="),
             F.when(F.size("segs") > 1, overlap).otherwise(F.lit(False)).cast("string"),
         ).alias("detail"),
-    ), seg
+    )
 
 
 def _finding(spark, severity, check, detail, bucket=None, term=None, salt=None):
@@ -234,65 +230,29 @@ def fsck(
         _segment_kernel, FINDINGS_SCHEMA
     )
     seg_findings.cache()
-    range_findings, seg_stats = _salt_range_findings(
+    range_findings = _salt_range_findings(
         seg_findings.filter(F.col("check") == "rangestat")
     )
     findings = findings.unionByName(
         seg_findings.filter(F.col("check") != "rangestat")
     ).unionByName(range_findings)
 
-    # dictionary vs segments: df and n_salts must agree
-    dict_root = catalog.path(root, "dictionary")
-    if os.path.exists(dict_root):
-        dictionary = spark.read.parquet(dict_root).select(
-            "bucket", "term", F.col("df").cast("long").alias("df"),
-            F.col("n_salts").cast("int").alias("dict_n_salts"),
-        )
-        per_term = seg_stats.groupBy("bucket", "term").agg(
-            F.sum("n").alias("total_postings"),
-            F.max("n_salts").alias("seg_n_salts"),
-        )
-        joined = per_term.join(dictionary, ["bucket", "term"], "full_outer")
-        bad_dict = joined.filter(
-            F.col("df").isNull()
-            | F.col("total_postings").isNull()
-            | (F.col("df") != F.col("total_postings"))
-            | (F.col("dict_n_salts") != F.col("seg_n_salts"))
-        )
-        findings = findings.unionByName(
-            bad_dict.select(
-                F.lit("error").alias("severity"),
-                F.lit("dictionary").alias("check"),
-                "bucket",
-                "term",
-                F.lit(None).cast("int").alias("salt"),
-                F.concat(
-                    F.lit("dict df="), F.coalesce(F.col("df").cast("string"), F.lit("MISSING")),
-                    F.lit(" segments="), F.coalesce(F.col("total_postings").cast("string"), F.lit("MISSING")),
-                    F.lit(" dict n_salts="), F.coalesce(F.col("dict_n_salts").cast("string"), F.lit("-")),
-                    F.lit(" seg n_salts="), F.coalesce(F.col("seg_n_salts").cast("string"), F.lit("-")),
-                ).alias("detail"),
-            )
-        )
-    else:
-        findings = findings.unionByName(
-            _finding(spark, "warning", "dictionary", "dictionary table missing")
-        )
-
-    # stats vs docstats
+    # _meta.json corpus scalars vs docstats
     try:
-        stats = spark.read.parquet(catalog.path(root, catalog.STATS)).collect()[0]
+        from .indexer import read_stats
+
+        n_docs, avgdl = read_stats(spark, root)
         agg = (
             spark.read.parquet(catalog.path(root, catalog.DOCSTATS))
             .agg(F.count("*").alias("n"), F.avg("doc_len").alias("avgdl"))
             .collect()[0]
         )
-        if int(stats["n_docs"]) != int(agg["n"]) or not math.isclose(
-            float(stats["avgdl"]), float(agg["avgdl"]), rel_tol=1e-12
+        if n_docs != int(agg["n"]) or not math.isclose(
+            avgdl, float(agg["avgdl"]), rel_tol=1e-12
         ):
             findings = findings.unionByName(_finding(
                 spark, "error", "stats",
-                f"stats ({stats['n_docs']}, {stats['avgdl']}) != docstats "
+                f"_meta.json ({n_docs}, {avgdl}) != docstats "
                 f"({agg['n']}, {agg['avgdl']})"))
     except Exception as e:
         findings = findings.unionByName(

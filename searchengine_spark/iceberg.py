@@ -17,7 +17,7 @@ Parquet-directory idiom           Iceberg equivalent here
 tokens/chunk=<c>/ append          ``append()`` (atomic snapshot commit)
 postings stage+swap per bucket    ``overwritePartitions()`` (dynamic
  (catalog.replace_dir)             partition replace, single commit)
-docstats/stats aside+rename       ``createOrReplace()`` (table-level
+docstats aside+rename             ``createOrReplace()`` (table-level
                                    atomic replace)
 _meta.json                        table properties on the tokens table
 ===============================  =====================================

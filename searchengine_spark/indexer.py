@@ -32,6 +32,7 @@ Scale design (the part that must survive 1000 executors / 100 TB):
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Iterator
 
 import numpy as np
@@ -275,6 +276,23 @@ def read_tokens(spark: SparkSession, root: str, bucket: int | None = None) -> Da
 # Stage 2: docstats + corpus scalars
 # ---------------------------------------------------------------------------
 
+def write_docstats(spark: SparkSession, root: str, docstats: DataFrame) -> None:
+    """The one docstats writer, shared by the build stage and the merge:
+    swap ``docstats`` (doc_id, url, doc_len) in, then write the corpus
+    scalars BM25 reads — n_docs and avgdl, aggregated over the written
+    table — to ``_meta.json``."""
+    out = catalog.path(root, catalog.DOCSTATS)
+    # aside+swap, not overwrite-in-place: a concurrent reader (or a
+    # crash mid-write) must never observe a missing/half docstats dir
+    catalog.replace_dir(
+        out, lambda t: docstats.write.mode("overwrite").parquet(t)
+    )
+    row = spark.read.parquet(out).agg(
+        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
+    ).collect()[0]
+    catalog.write_meta(root, n_docs=int(row["n_docs"]), avgdl=float(row["avgdl"]))
+
+
 def build_docstats_stage(
     spark: SparkSession, pages_path: str, root: str, build_id: str
 ) -> None:
@@ -282,7 +300,7 @@ def build_docstats_stage(
         stage="docstats", pages=pages_path,
         content=catalog.content_fingerprint(pages_path),
         tokens=catalog.content_fingerprint(catalog.path(root, catalog.TOKENS)),
-        v=2,
+        v=3,
     )
 
     def run(_pid: int) -> tuple[str, int, int]:
@@ -294,26 +312,10 @@ def build_docstats_stage(
             .groupBy("doc_id")
             .agg(F.max("doc_len").alias("doc_len"))
         )
-        stats_df = docs.join(doc_lens, "doc_id", "left").select(
+        write_docstats(spark, root, docs.join(doc_lens, "doc_id", "left").select(
             "doc_id", "url", F.coalesce("doc_len", F.lit(0)).alias("doc_len")
-        )
+        ))
         out = catalog.path(root, catalog.DOCSTATS)
-        st_out = catalog.path(root, catalog.STATS)
-        # aside+swap, not overwrite-in-place: a concurrent reader (or a
-        # crash mid-write) must never observe a missing/half docstats or
-        # stats dir — the same window merge._docstats_from_tokens closes
-        catalog.restore_aside(out)
-        catalog.restore_aside(st_out)
-        catalog.replace_dir(
-            out, lambda t: stats_df.write.mode("overwrite").parquet(t)
-        )
-        written = spark.read.parquet(out)
-        agg = written.agg(
-            F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-        )
-        catalog.replace_dir(
-            st_out, lambda t: agg.write.mode("overwrite").parquet(t)
-        )
         n, nbytes = catalog.parquet_rows_bytes(out)
         return out, n, nbytes
 
@@ -321,8 +323,14 @@ def build_docstats_stage(
 
 
 def read_stats(spark: SparkSession, root: str) -> tuple[int, float]:
-    row = catalog.read_table(spark, catalog.path(root, catalog.STATS)).collect()[0]
-    return int(row["n_docs"]), float(row["avgdl"])
+    """(n_docs, avgdl) from ``_meta.json`` — no Spark job."""
+    meta = catalog.read_meta(root)
+    if "n_docs" not in meta or "avgdl" not in meta:
+        raise RuntimeError(
+            f"{root}/_meta.json has no n_docs/avgdl — rebuild the docstats "
+            "stage (build_docstats_stage writes them) before querying"
+        )
+    return int(meta["n_docs"]), float(meta["avgdl"])
 
 
 # ---------------------------------------------------------------------------
@@ -365,18 +373,16 @@ def encode_segments(
     ``POSTINGS_SCHEMA`` row per (bucket, term, salt) — the one segment
     writer of the batch build and the merge.
 
-    The salt plan (bucket, term, df, cf, n_salts) is written to
-    ``plan_path`` FIRST and re-read: the segments job then broadcasts the
-    small re-read instead of re-running the token scan + (bucket, term)
+    The salt plan (bucket, term, n_salts) is written to ``plan_path``
+    FIRST and re-read: the segments job then broadcasts the small
+    re-read instead of re-running the token scan + (bucket, term)
     aggregation, and nothing downstream re-runs a lineage that may point
     at files the caller is about to swap (the merge's pre-merge
-    segments). The build keeps the plan as ``dictionary/group=<g>``."""
-    term_stats = toks.groupBy("bucket", "term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("cf")
-    )
-    term_stats.select(
-        "bucket", "term", "df", "cf",
-        F.ceil(F.col("df") / F.lit(target_postings)).cast("int").alias("n_salts"),
+    segments). The plan is scratch: the caller deletes it once the
+    returned segments are written (a term's df is the sum of its
+    segments' n_postings, so nothing else needs it)."""
+    toks.groupBy("bucket", "term").agg(
+        F.ceil(F.count("*") / F.lit(target_postings)).cast("int").alias("n_salts")
     ).write.mode("overwrite").parquet(plan_path)
     salt_plan = spark.read.parquet(plan_path)
     salted = toks.join(
@@ -385,6 +391,21 @@ def encode_segments(
     return salted.groupBy("bucket", "term", "salt").applyInPandas(
         _postings_kernel(avgdl), POSTINGS_SCHEMA
     )
+
+
+def salt_plan_path(root: str, name: str) -> str:
+    """Scratch path of one salt plan: a visible leaf under a hidden dir,
+    so postings readers skip it and Spark reads it without warning that
+    all of its paths are hidden."""
+    return os.path.join(catalog.path(root, catalog.POSTINGS), "_salt_plans", name)
+
+
+def remove_salt_plan(plan_path: str) -> None:
+    shutil.rmtree(plan_path, ignore_errors=True)
+    try:
+        os.rmdir(os.path.dirname(plan_path))  # the last plan takes the dir
+    except OSError:
+        pass
 
 
 def postings_fingerprint(
@@ -439,17 +460,15 @@ def build_postings_stage(
     )
     _, avgdl = read_stats(spark, root)
     postings_root = catalog.path(root, catalog.POSTINGS)
-    dict_root = catalog.path(root, "dictionary")
 
     def run_group(g: int) -> tuple[str, int, int]:
         bs = list(range(g * group_size, min((g + 1) * group_size, n_buckets)))
         toks = read_tokens(spark, root).filter(F.col("bucket").isin(bs))
-        segments = encode_segments(
-            spark, toks, target_postings, avgdl,
-            os.path.join(dict_root, f"group={g}"),
-        )
+        plan = salt_plan_path(root, f"g{g}")
+        segments = encode_segments(spark, toks, target_postings, avgdl, plan)
         out = os.path.join(postings_root, f"group={g}")
         segments.write.mode("overwrite").partitionBy("bucket").parquet(out)
+        remove_salt_plan(plan)
         n, nbytes = catalog.parquet_rows_bytes(out)
         return out, n, nbytes
 

@@ -15,7 +15,8 @@ posting segments WITHOUT rebuilding untouched buckets:
    ``query.decode_segments``, union the delta rows, and hand them to
    ``indexer.encode_segments`` — the salt plan and segment writer the
    batch build uses — so merged buckets are byte-identical to a rebuild;
-4. docstats/stats are recomputed (pass ``pages_path`` for exact urls —
+4. docstats and the ``_meta.json`` n_docs/avgdl are recomputed
+   (``indexer.write_docstats``; pass ``pages_path`` for exact urls —
    e.g. the directory the stream ingested from plus the original corpus
    — otherwise doc_len is recovered from the delta tokens and streamed
    docs carry a NULL url until the next docstats batch run);
@@ -38,7 +39,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +50,9 @@ from .indexer import (
     encode_segments,
     postings_fingerprint,
     read_stats,
+    remove_salt_plan,
+    salt_plan_path,
+    write_docstats,
 )
 from .query import decode_segments
 
@@ -109,7 +112,7 @@ def merge_tokens_stage(
     # partially completed) over EXACTLY these tokens but died before its
     # final write_meta leaves meta.tokens_manifest behind the lineage.
     # Merging then would re-union postings the segments already contain
-    # — duplicating df/cf/idf with nothing downstream to notice.
+    # — duplicating df/idf with nothing downstream to notice.
     n_groups = max((n_buckets + group_size - 1) // group_size, 1)
     cur_fp = postings_fingerprint(
         root, n_buckets, target, group_size, manifest=current
@@ -138,7 +141,7 @@ def merge_tokens_stage(
         v=1,
     )
 
-    # 1. docstats/stats first — idf and norms of the merged segments
+    # 1. docstats + corpus scalars first — idf and norms of the merged segments
     # must reflect the post-append corpus. On a VACUUMED root the full
     # recompute is forbidden even when pages are at hand: it derives
     # doc_lens from the whole tokens tree, which the vacuum emptied
@@ -203,53 +206,21 @@ def merge_tokens_stage(
         )
     delta_paths = [os.path.join(tokens_root, rel) for rel in delta]
 
-    def _finish_bucket(
-        b: int, g: int, bucket_dir: str, plan_tmp: str, old_dir: str,
-        t0: float,
-    ) -> None:
-        """Post-swap tail shared by the normal path and crash recovery:
-        dictionary read-modify-swap from the persisted salt plan, lineage
-        record, THEN scratch cleanup (record gates re-entry, so cleanup
-        must come last)."""
-        salt_plan = spark.read.parquet(plan_tmp)
-        # dictionary/group=<g> is shared by every bucket of the group:
-        # the read-modify-swap must be serialized per group, INCLUDING
-        # the read — a concurrent same-group bucket could otherwise
-        # snapshot the other bucket's pre-merge rows and clobber its
-        # freshly-swapped salt plan with stale df/n_salts
-        dict_dir = os.path.join(catalog.path(root, "dictionary"), f"group={g}")
-        with _dict_locks[g]:
-            # a prior crash between replace_dir's two renames leaves the
-            # live dir missing with the aside present — repair before
-            # reading (same aside+restore discipline as docstats/stats;
-            # the old rmtree+replace pair here had a window that lost the
-            # whole group dictionary)
-            catalog.restore_aside(dict_dir)
-            old_dict = spark.read.parquet(dict_dir).filter(F.col("bucket") != b)
-            merged_dict = old_dict.unionByName(salt_plan)
-            catalog.replace_dir(
-                dict_dir,
-                lambda t: merged_dict.write.mode("overwrite").parquet(t),
-            )
-        rows, nbytes = catalog.parquet_rows_bytes(bucket_dir)
-        checkpoint.record(
-            root, build_id, "merge", b, merge_fp,
-            bucket_dir, rows, nbytes,
-            int((time.monotonic() - t0) * 1000),
+    def scratch(b: int) -> tuple[str, str]:
+        """(stage, aside) dirs of bucket ``b``'s merge — dot-prefixed so
+        the readers' bucket=* globs and Spark's recursive listings can
+        never pick up a leftover."""
+        group_dir = os.path.join(postings_root, f"group={b // group_size}")
+        return (
+            os.path.join(group_dir, f".merge-tmp-b{b}"),
+            os.path.join(group_dir, f".merge-old-b{b}"),
         )
-        shutil.rmtree(old_dir, ignore_errors=True)
-        shutil.rmtree(plan_tmp, ignore_errors=True)
 
-    def merge_bucket(b: int) -> None:
-        t0 = time.monotonic()
-        g = b // group_size
-        group_dir = os.path.join(postings_root, f"group={g}")
-        bucket_dir = os.path.join(group_dir, f"bucket={b}")
-        # scratch names are dot-prefixed so the readers' bucket=* globs
-        # and Spark's recursive listings can never pick up a leftover
-        stage_dir = os.path.join(group_dir, f".merge-tmp-b{b}")
-        old_dir = os.path.join(group_dir, f".merge-old-b{b}")
-        plan_tmp = os.path.join(postings_root, f"_salt_plan_b{b}.merge-tmp")
+    def merge_bucket(b: int) -> tuple[str, int, int]:
+        bucket_dir = os.path.join(
+            postings_root, f"group={b // group_size}", f"bucket={b}"
+        )
+        stage_dir, old_dir = scratch(b)
         marker = os.path.join(bucket_dir, "_merge_fp")
         # ---- crash recovery (no lineage row exists for this bucket
         # under the CURRENT merge_fp) ----
@@ -264,23 +235,22 @@ def merge_tokens_stage(
             )
             if b in recorded:
                 pass  # marker is a completed PREVIOUS merge — normal path
-            elif marker_fp == merge_fp and os.path.exists(plan_tmp):
+            elif marker_fp == merge_fp:
                 # died after the segment swap but before the lineage
                 # record: the delta is already IN these segments —
                 # re-merging would duplicate every streamed posting.
-                # Finish the dictionary + lineage tail only.
-                _finish_bucket(b, g, bucket_dir, plan_tmp, old_dir, t0)
-                return
+                # Record it only.
+                return (bucket_dir, *catalog.parquet_rows_bytes(bucket_dir))
             else:
                 # died in the same swap/record gap, but the delta has
                 # since CHANGED (new stream token files arrived before
-                # the resume → different merge_fp, or the persisted salt
-                # plan is gone): these segments already absorbed the
-                # crashed merge's delta, so re-merging the full current
-                # delta into them would duplicate those postings and
-                # inflate df/cf/idf with nothing downstream to notice.
-                # old_dir still holds the pristine pre-merge segments in
-                # exactly this window — restore it and merge from there.
+                # the resume → different merge_fp): these segments
+                # already absorbed the crashed merge's delta, so
+                # re-merging the full current delta into them would
+                # duplicate those postings and inflate df/idf with
+                # nothing downstream to notice. old_dir still holds the
+                # pristine pre-merge segments in exactly this window —
+                # restore it and merge from there.
                 if os.path.exists(old_dir):
                     shutil.rmtree(bucket_dir)
                     os.replace(old_dir, bucket_dir)
@@ -332,11 +302,9 @@ def merge_tokens_stage(
         # blob through the Python kernel — the dominant per-bucket cost
         toks = toks.persist()
         try:
-            # the salt plan is persisted to plan_tmp FIRST: everything
-            # downstream (segments AND the dictionary update) reads it
-            # from disk, not a lineage that still points at the pre-swap
-            # segment files
-            segments = encode_segments(spark, toks, target, avgdl, plan_tmp)
+            segments = encode_segments(
+                spark, toks, target, avgdl, salt_plan_path(root, f"b{b}")
+            )
             # stage + swap so a killed merge never leaves a half bucket;
             # the marker inside the staged data makes the swap+record pair
             # crash-recoverable (see recovery preamble above)
@@ -348,33 +316,19 @@ def merge_tokens_stage(
         if os.path.exists(bucket_dir):
             os.replace(bucket_dir, old_dir)  # atomic aside — never a gap
         os.replace(stage_dir, bucket_dir)  # atomic swap-in
-        _finish_bucket(b, g, bucket_dir, plan_tmp, old_dir, t0)
+        return (bucket_dir, *catalog.parquet_rows_bytes(bucket_dir))
 
-    # buckets merge as concurrent Spark jobs (same pattern as
-    # checkpoint.run_partitioned_stage) — one bucket's shuffle rarely
-    # saturates the cluster; same-group dictionary updates are
-    # lock-serialized inside merge_bucket
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    already = checkpoint.completed_partitions(root, "merge", merge_fp)
-    todo = [b for b in affected if b not in already]
-    _dict_locks = {b // group_size: threading.Lock() for b in todo}
-    if kill_after is not None:  # sequential, deterministic crash point
-        for i, b in enumerate(todo):
-            if i >= kill_after:
-                raise KeyboardInterrupt(
-                    f"simulated kill after {kill_after} merged buckets"
-                )
-            merge_bucket(b)
-    else:
-        n_workers = min(4, max(len(todo), 1))
-        if n_workers <= 1:
-            for b in todo:
-                merge_bucket(b)
-        else:
-            with ThreadPoolExecutor(max_workers=n_workers) as pool:
-                list(pool.map(merge_bucket, todo))
+    # buckets merge as concurrent Spark jobs; the pre-merge aside and the
+    # salt plan are removed only once the bucket's lineage row exists —
+    # the aside is what a resume after a crash in the swap/record gap
+    # restores from
+    checkpoint.run_partitioned_stage(
+        root, build_id, "merge", affected, merge_fp, merge_bucket,
+        kill_after=kill_after,
+    )
+    for b in affected:
+        shutil.rmtree(scratch(b)[1], ignore_errors=True)
+        remove_salt_plan(salt_plan_path(root, f"b{b}"))
 
     # 2. mark every group complete under the NEW manifest so a later
     # build_postings_stage resumes as a no-op (unaffected buckets are
@@ -419,7 +373,7 @@ def vacuum_tokens(root: str, build_id: str = "vacuum") -> dict:
     """Reclaim token files already folded into the postings segments.
 
     The tokens tree is the MERGE SUBSTRATE, not the query path (queries
-    read postings/dictionary/docstats/title_index only), but it is also
+    read postings/docstats/title_index only), but it is also
     ~40% of the index tree at bench scale — at 10^12 docs that is real
     money. After every live token file is incorporated and the postings
     lineage is complete, the files can go; what must SURVIVE is their
@@ -528,30 +482,6 @@ def _tree_bytes(path: str) -> int:
     return total
 
 
-def maybe_merge(
-    spark: SparkSession,
-    root: str,
-    min_delta_files: int = 8,
-    build_id: str = "merge-auto",
-    pages_path: str | None = None,
-) -> dict:
-    """Compaction policy: merge only once the streamed/appended delta
-    has accumulated past ``min_delta_files`` token files — the knob that
-    trades query-time freshness (un-merged tokens are invisible to the
-    compressed index) against write amplification (each merge rewrites
-    every affected bucket, so merging per micro-batch rewrites hot
-    buckets once per batch instead of once per ``min_delta_files``
-    batches). Call after each ingest round; a below-threshold delta is
-    a metadata-only no-op."""
-    n_pending = len(pending_delta_files(root))
-    if n_pending < min_delta_files:
-        return {"delta_files": n_pending, "merged_buckets": [],
-                "skipped_buckets": None, "deferred": True}
-    report = merge_tokens_stage(spark, root, build_id, pages_path=pages_path)
-    report["deferred"] = False
-    return report
-
-
 def maybe_merge_tiered(
     spark: SparkSession,
     root: str,
@@ -562,8 +492,7 @@ def maybe_merge_tiered(
     pages_path: str | None = None,
 ) -> dict:
     """Size-tiered compaction policy — the trigger a NEVER-ENDING
-    streaming ingest should call after every micro-batch (the plain
-    ``maybe_merge`` file-count knob needs hand-tuning as segments grow).
+    streaming ingest should call after every micro-batch.
 
     Merge fires when EITHER
     * ``delta_bytes >= max(min_delta_bytes, ratio * segment_bytes)`` —
@@ -618,13 +547,13 @@ def _docstats_incremental(
         F.xxhash64("url").alias("doc_id"), "url"
     )
     ds_path = catalog.path(root, catalog.DOCSTATS)
-    st_path = catalog.path(root, catalog.STATS)
+    # crash recovery: a previous swap may have died between its two
+    # renames, leaving the live dir missing and the aside present
     catalog.restore_aside(ds_path)
-    catalog.restore_aside(st_path)
     old = spark.read.parquet(ds_path).select(
         "doc_id", F.col("doc_len").alias("old_len")
     )
-    merged = (
+    write_docstats(spark, root, (
         docs.join(old, "doc_id", "left")
         .join(new_docs, "doc_id", "left")
         .select(
@@ -635,14 +564,7 @@ def _docstats_incremental(
                 F.coalesce("new_len", F.lit(0)),
             ).alias("doc_len"),
         )
-    )
-    _swap = catalog.replace_dir
-    _swap(ds_path, lambda t: merged.write.mode("overwrite").parquet(t))
-    written = spark.read.parquet(ds_path)
-    agg = written.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    )
-    _swap(st_path, lambda t: agg.write.mode("overwrite").parquet(t))
+    ))
 
 
 def _docstats_from_tokens(
@@ -661,21 +583,9 @@ def _docstats_from_tokens(
         .select("doc_id", "url", "doc_len")
     )
     ds_path = catalog.path(root, catalog.DOCSTATS)
-    st_path = catalog.path(root, catalog.STATS)
-    # crash recovery: a previous run may have died between the two
-    # renames below, leaving the live dir missing and the aside present
-    catalog.restore_aside(ds_path)
-    catalog.restore_aside(st_path)
+    catalog.restore_aside(ds_path)  # as in _docstats_incremental
     old = spark.read.parquet(ds_path)
-    merged = old.unionByName(
+    write_docstats(spark, root, old.unionByName(
         new_docs.join(old.select("doc_id"), "doc_id", "left_anti")
-    )
+    ))
 
-    _swap = catalog.replace_dir  # tmp-write then aside+swap (crash-safe)
-
-    _swap(ds_path, lambda t: merged.write.mode("overwrite").parquet(t))
-    written = spark.read.parquet(ds_path)
-    agg = written.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    )
-    _swap(st_path, lambda t: agg.write.mode("overwrite").parquet(t))

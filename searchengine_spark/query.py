@@ -211,12 +211,14 @@ def phrase_match(spark: SparkSession, root: str, phrase: list[str]) -> DataFrame
 
 
 def term_idfs(spark: SparkSession, root: str, terms: list[str], n_docs: int) -> dict[str, float]:
-    """Per-term idf from the dictionary, computed driver-side in Python
-    float64 (one ln definition for engine + oracle)."""
-    dict_root = catalog.path(root, "dictionary")
-    df = catalog.read_table(spark, dict_root, base_path=dict_root)
-    rows = df.filter(F.col("term").isin(terms)).select("term", "df").collect()
-    return {r["term"]: idf(n_docs, r["df"]) for r in rows}
+    """Per-term idf, computed driver-side in Python float64 (one ln
+    definition for engine + oracle). A term's df is the exact integer
+    sum of ``n_postings`` over its salted segments: one collect of the
+    bucket-pruned (term, n_postings) rows."""
+    df: dict[str, int] = {}
+    for r in load_segments(spark, root, terms).select("term", "n_postings").collect():
+        df[r["term"]] = df.get(r["term"], 0) + r["n_postings"]
+    return {t: idf(n_docs, d) for t, d in df.items()}
 
 
 def _query_terms_df(

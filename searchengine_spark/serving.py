@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import catalog
+from . import catalog, checkpoint
 from .query import phrase_match, score_exhaustive
 from .textprep import _RE_P, _RE_TITLE, java_tokens
 
@@ -85,23 +85,35 @@ def build_docstore(
     Title/snippet extraction — the only per-request Python cost — is
     paid ONCE here over the corpus (Arrow-vectorized), instead of per
     query at serve time. At 100 TB the docstore is the one corpus-sized
-    serving artifact, and it is only ever read k rows at a time."""
-    docstats = spark.read.parquet(
-        catalog.path(root, catalog.DOCSTATS)
-    ).select("doc_id", "url")
-    pages = spark.read.parquet(pages_path).select("url", "html")
-    df = pages.join(docstats, "url").select(
-        "doc_id",
-        "url",
-        title_udf("html").alias("title"),
-        snippet_udf("html").alias("snippet"),
+    serving artifact, and it is only ever read k rows at a time.
+
+    Lineage-recorded like the build stages: a re-run over unchanged
+    pages, docstats and ``n_files`` rewrites nothing."""
+    docstats_path = catalog.path(root, catalog.DOCSTATS)
+    out = catalog.path(root, catalog.DOCSTORE)
+    fp = checkpoint.fingerprint(
+        stage="docstore", pages=catalog.content_fingerprint(pages_path),
+        docstats=catalog.content_fingerprint(docstats_path), n_files=n_files,
     )
-    (
-        df.repartitionByRange(n_files, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(catalog.path(root, catalog.DOCSTORE))
-    )
+
+    def run(_pid: int) -> tuple[str, int, int]:
+        docstats = spark.read.parquet(docstats_path).select("doc_id", "url")
+        pages = spark.read.parquet(pages_path).select("url", "html")
+        df = pages.join(docstats, "url").select(
+            "doc_id",
+            "url",
+            title_udf("html").alias("title"),
+            snippet_udf("html").alias("snippet"),
+        )
+        (
+            df.repartitionByRange(n_files, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+        return (out, *catalog.parquet_rows_bytes(out))
+
+    checkpoint.run_partitioned_stage(root, "docstore", "docstore", [0], fp, run)
 
 
 def refresh_docstore(
@@ -146,6 +158,13 @@ def refresh_docstore(
         .sortWithinPartitions("doc_id")
         .write.mode("append")
         .parquet(store_path)
+    )
+    # the store no longer holds what its last build wrote: record that,
+    # so a build_docstore over the build's inputs rebuilds it
+    checkpoint.record(
+        root, "refresh", "docstore", 0,
+        checkpoint.fingerprint(stage="docstore_refresh"), store_path,
+        *catalog.parquet_rows_bytes(store_path), 0,
     )
     return n
 

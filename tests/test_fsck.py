@@ -69,29 +69,24 @@ def test_detects_truncated_blob(spark, corruptible_index):
     assert checks & {"blob_decode", "n_postings", "block_last", "block_meta_len"}
 
 
-def test_detects_dictionary_drift(spark, corruptible_index):
-    dfile = sorted(glob.glob(os.path.join(
-        catalog.path(corruptible_index, "dictionary"), "group=*", "*.parquet")))[0]
+def test_detects_salt_gap(spark, corruptible_index):
+    """A segment claiming one more salt than its term has segments
+    leaves a gap in the salt range 0..n_salts-1."""
     def mutate(t):
-        col = t["df"].to_pylist()
-        col[0] += 5
+        col = t["n_salts"].to_pylist()
+        col[0] += 1
         return t.set_column(
-            t.schema.get_field_index("df"), "df",
-            pa.array(col, type=t.schema.field("df").type))
-    _rewrite(dfile, mutate)
+            t.schema.get_field_index("n_salts"), "n_salts",
+            pa.array(col, type=t.schema.field("n_salts").type))
+    _rewrite(_one_segment_file(corruptible_index), mutate)
     checks = {r["check"] for r in fsck(spark, corruptible_index).collect()
               if r["severity"] == "error"}
-    assert "dictionary" in checks
+    assert "salt_contract" in checks
 
 
 def test_detects_stats_drift(spark, corruptible_index):
-    sfile = sorted(glob.glob(os.path.join(
-        catalog.path(corruptible_index, catalog.STATS), "*.parquet")))[0]
-    def mutate(t):
-        return t.set_column(
-            t.schema.get_field_index("avgdl"), "avgdl",
-            pa.array([v + 1.0 for v in t["avgdl"].to_pylist()], type=pa.float64()))
-    _rewrite(sfile, mutate)
+    meta = catalog.read_meta(corruptible_index)
+    catalog.write_meta(corruptible_index, avgdl=meta["avgdl"] + 1.0)
     checks = {r["check"] for r in fsck(spark, corruptible_index).collect()
               if r["severity"] == "error"}
     assert "stats" in checks

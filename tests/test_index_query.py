@@ -368,6 +368,46 @@ def test_docstore_lag_window_fallback(spark, tiny_index, tiny_pages_path,
         )
 
 
+def test_build_docstore_is_lineage_recorded(spark, tiny_index, tiny_pages_path):
+    """build_docstore records a docstore lineage row; a second build over
+    unchanged pages, docstats and n_files rewrites no file, but a build
+    over inputs whose row is not the latest one (n_files 3, 2, then 3
+    again) does; and refresh_docstore still builds a store that was
+    deleted after its lineage row was written."""
+    from searchengine_spark import catalog
+    from searchengine_spark.serving import build_docstore, refresh_docstore
+
+    store = catalog.path(tiny_index, catalog.DOCSTORE)
+
+    def mtimes():
+        return {
+            os.path.relpath(os.path.join(dp, f), store):
+                os.stat(os.path.join(dp, f)).st_mtime_ns
+            for dp, _dirs, fs in os.walk(store) for f in fs
+        }
+
+    try:
+        build_docstore(spark, tiny_index, tiny_pages_path, n_files=3)
+        first = mtimes()
+        assert first
+        assert any(
+            m["stage"] == "docstore" for m in checkpoint.read_metrics(tiny_index)
+        )
+        build_docstore(spark, tiny_index, tiny_pages_path, n_files=3)
+        assert mtimes() == first
+        build_docstore(spark, tiny_index, tiny_pages_path, n_files=2)
+        second = mtimes()
+        assert second != first
+        build_docstore(spark, tiny_index, tiny_pages_path, n_files=3)
+        assert mtimes() != second
+        shutil.rmtree(store)
+        assert refresh_docstore(spark, tiny_index, tiny_pages_path) == -1
+        n_docs = spark.read.parquet(catalog.path(tiny_index, catalog.DOCSTATS)).count()
+        assert spark.read.parquet(store).count() == n_docs
+    finally:
+        shutil.rmtree(store, ignore_errors=True)
+
+
 def test_search_many_matches_solo(spark, tiny_index, tiny_pages_path):
     """Batched serving == N independent search() calls, across mixed
     modes, exclusions, and offsets (the QueryBatcher correctness

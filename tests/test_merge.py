@@ -78,8 +78,8 @@ def test_merge_rank_identical_to_rebuild(spark, merged_and_rebuilt):
 
 def test_merged_segments_equal_rebuild_byte_for_byte(spark, merged_and_rebuilt):
     """Every merged bucket's segment rows (all POSTINGS_SCHEMA columns
-    but the bucket partition) equal a from-scratch rebuild's, and so do
-    the dictionary rows — the byte-identity the merge docstring claims."""
+    but the bucket partition) equal a from-scratch rebuild's — the
+    byte-identity the merge docstring claims."""
     from searchengine_spark.indexer import POSTINGS_SCHEMA
 
     root, root2, report = merged_and_rebuilt
@@ -97,14 +97,51 @@ def test_merged_segments_equal_rebuild_byte_for_byte(spark, merged_and_rebuilt):
         merged = segment_rows(root, b)
         assert merged and merged == segment_rows(root2, b), f"bucket {b}"
 
-    def dictionary(r):
-        d = spark.read.parquet(catalog.path(r, "dictionary"))
-        return {
-            row["term"]: (row["df"], row["cf"], row["n_salts"])
-            for row in d.select("term", "df", "cf", "n_salts").collect()
-        }
 
-    assert dictionary(root) == dictionary(root2)
+def test_corpus_facts_come_from_postings_and_meta(spark, merged_and_rebuilt):
+    """After a build and after a merge, BM25's corpus facts have one
+    home each: n_docs/avgdl in _meta.json (equal to a Spark count/avg
+    over docstats, read with no Spark job) and df in the segment rows
+    (idf equal to the oracle's) — no dictionary/ or stats/ table and no
+    salt-plan scratch is left on disk."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from searchengine_spark import bm25
+    from searchengine_spark.indexer import read_stats
+    from searchengine_spark.oracle import build_oracle_index
+    from searchengine_spark.query import all_query_terms, term_idfs
+
+    root, root2, _ = merged_and_rebuilt
+    full_dir = os.path.join(MERGEDIR, "pages_full")
+    oracle = build_oracle_index(pq.read_table(full_dir).to_pylist())
+    terms = all_query_terms(corpus.reference_queries())
+    sc = spark.sparkContext
+    for r in (root2, root):  # built, merged
+        for gone in ("dictionary", "stats"):
+            assert not os.path.exists(os.path.join(r, gone)), (r, gone)
+        assert glob.glob(os.path.join(r, "**", "*salt_plan*"), recursive=True) == []
+        meta = catalog.read_meta(r)
+        agg = spark.read.parquet(catalog.path(r, catalog.DOCSTATS)).agg(
+            F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
+        ).collect()[0]
+        assert (meta["n_docs"], meta["avgdl"]) == (agg["n"], agg["avgdl"])
+        assert meta["n_docs"] == oracle.n_docs
+        group = f"read-stats-{os.path.basename(r)}"
+        sc.setJobGroup(group, "read_stats")
+        try:
+            n_docs, avgdl = read_stats(spark, r)
+        finally:
+            sc.setJobGroup(None, None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert (n_docs, avgdl) == (meta["n_docs"], meta["avgdl"])
+        want = {
+            t: bm25.idf(n_docs, len(oracle.postings[t]))
+            for t in terms if t in oracle.postings
+        }
+        assert want and term_idfs(spark, r, terms, n_docs) == want
 
 
 def test_merge_is_incremental_and_idempotent(spark, merged_and_rebuilt):
@@ -203,9 +240,10 @@ def test_merge_without_pages_path(spark, merged_and_rebuilt):
 
 
 def test_maybe_merge_compaction_policy(spark, tmp_path):
-    """maybe_merge defers below the delta threshold (tokens stay pending,
-    nothing rewritten) and compacts once past it."""
-    from searchengine_spark.merge import maybe_merge, pending_delta_files
+    """maybe_merge_tiered's file-count trigger defers below
+    ``max_delta_files`` (tokens stay pending, nothing rewritten) and
+    compacts once the pending file count reaches it."""
+    from searchengine_spark.merge import maybe_merge_tiered, pending_delta_files
     from searchengine_spark.streaming.ingest import stream_tokenize
 
     full_dir = str(tmp_path / "pages_full")
@@ -231,17 +269,21 @@ def test_maybe_merge_compaction_policy(spark, tmp_path):
     n_pending = len(pending_delta_files(root))
     assert n_pending > 0
 
-    deferred = maybe_merge(spark, root, min_delta_files=n_pending + 1)
+    # the size tier never fires: ratio 0 and a byte floor above the delta
+    by_count = dict(ratio=0, min_delta_bytes=1 << 40)
+    deferred = maybe_merge_tiered(
+        spark, root, max_delta_files=n_pending + 1, **by_count
+    )
     assert deferred["deferred"] and deferred["merged_buckets"] == []
     assert len(pending_delta_files(root)) == n_pending  # nothing consumed
 
-    done = maybe_merge(
-        spark, root, min_delta_files=n_pending, pages_path=full_dir
+    done = maybe_merge_tiered(
+        spark, root, max_delta_files=n_pending, pages_path=full_dir, **by_count
     )
     assert not done["deferred"] and done["delta_files"] == n_pending
     assert pending_delta_files(root) == []
-    # post-merge index passes fsck clean (lineage recorded, dictionary
-    # and stats consistent with the rewritten segments)
+    # post-merge index passes fsck clean (lineage recorded, _meta.json
+    # scalars consistent with the rewritten docstats)
     from searchengine_spark.fsck import fsck
 
     assert fsck(spark, root).collect() == []

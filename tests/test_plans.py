@@ -504,8 +504,10 @@ def test_request_tables_are_local_relations(
 def test_search_many_job_count(spark, tiny_docstore, tiny_pages_path):
     """A warm one-query search_many with a docstore runs a pinned number
     of Spark jobs: no schema-inference footer job per index table, no
-    Python-worker job per driver-built table, and one docstore fetch
-    whose rows come back as a local table (18 jobs before)."""
+    Python-worker job per driver-built table, no job for the corpus
+    scalars (read from _meta.json), and one docstore fetch whose rows
+    come back as a local table (18 jobs before, then 11 while n_docs and
+    avgdl came from a stats table)."""
     from searchengine_spark.corpus import VOCAB
     from searchengine_spark.serving import search_many
 
@@ -519,4 +521,4 @@ def test_search_many_job_count(spark, tiny_docstore, tiny_pages_path):
     finally:
         sc.setJobGroup(None, None)
     assert got == warm and got[0]
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10

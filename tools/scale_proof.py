@@ -74,18 +74,21 @@ def main() -> None:
     wand8_s = time.time() - t0
     assert n1 == n8, f"ranged WAND row count drifted: {n1} vs {n8}"
 
-    # head-term salt histogram: biggest-df term from the dictionary,
-    # then per-(salt) posting counts from its segment rows
+    # head-term salt histogram: biggest-df term (df = sum of its
+    # segments' n_postings), then per-(salt) posting counts from its
+    # segment rows
     from pyspark.sql import functions as F
 
-    dict_root = catalog.path(root, "dictionary")
-    d = spark.read.option("basePath", dict_root).parquet(dict_root)
-    head = d.orderBy(F.desc("df")).select("term", "df", "n_salts").first()
     postings_root = catalog.path(root, catalog.POSTINGS)
+    allsegs = spark.read.option("basePath", postings_root).parquet(postings_root)
+    head = (
+        allsegs.groupBy("term")
+        .agg(F.sum("n_postings").alias("df"), F.max("n_salts").alias("n_salts"))
+        .orderBy(F.desc("df"), "term")
+        .first()
+    )
     segs = (
-        spark.read.option("basePath", postings_root)
-        .parquet(postings_root)
-        .filter(F.col("term") == head["term"])
+        allsegs.filter(F.col("term") == head["term"])
         .select(
             "salt",
             F.octet_length("doc_blob").alias("db"),
@@ -98,7 +101,6 @@ def main() -> None:
     ).collect()
     salt_bytes = sorted(int(r["doc_bytes"]) for r in per_salt)
     # largest single blob anywhere = per-task decode bound
-    allsegs = spark.read.option("basePath", postings_root).parquet(postings_root)
     max_blob = allsegs.agg(
         F.max(
             F.octet_length("doc_blob") + F.octet_length("tf_blob")

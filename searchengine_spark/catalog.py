@@ -40,6 +40,8 @@ ANCHOR_INDEX = "anchor_index"  # optional inbound-anchor-text field
 PAGERANKS = "pageranks"
 DOCSTORE = "docstore"  # forward index for serving: doc_id-sorted (url, title, snippet)
 LINEAGE = "_lineage"
+TABLES = (TOKENS, DOCSTATS, POSTINGS, TITLE_INDEX, ANCHOR_INDEX, PAGERANKS,
+          DOCSTORE, LINEAGE)
 
 # Defaults sized for the sandbox; a 1000-executor build would raise
 # N_BUCKETS to O(1024) and TARGET_POSTINGS stays the per-blob memory bound.

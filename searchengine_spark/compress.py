@@ -2,9 +2,11 @@
 decodes segment blobs (SURVEY.md §4.2 item 1).
 
 There is no Spark primitive for this; blobs are built with numpy inside
-``applyInPandas`` per (term, salt) partition and stored as parquet BINARY
-columns (``indexer.POSTINGS_SCHEMA``). Layout per posting list (always
-sorted by doc_id ascending):
+one ``mapInArrow`` kernel (``indexer.encode_segments``) that walks the
+(bucket, term, salt) runs of sorted token rows and calls
+``encode_segment`` once per run, and are stored as parquet BINARY columns
+(``indexer.POSTINGS_SCHEMA``). Layout per posting list (always sorted by
+doc_id ascending):
 
 * ``doc_blob``: uint64 view of the signed 64-bit doc_id biased by 2^63
   (preserves signed order), delta-encoded, varbyte.
@@ -146,22 +148,30 @@ def encode_segment(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
-    position_lists: np.ndarray,
+    positions: np.ndarray,
     tf_norms: np.ndarray,
+    pos_offsets: np.ndarray | None = None,
 ) -> dict:
     """Every blob and block-metadata column of one ``POSTINGS_SCHEMA``
-    row, for a posting list sorted by doc_id (``position_lists`` holds
-    one ascending position array per posting)."""
+    row, for a posting list sorted by doc_id. ``positions`` holds one
+    ascending position array per posting or, with ``pos_offsets``, their
+    flat concatenation — posting i owns
+    ``positions[pos_offsets[i]:pos_offsets[i + 1]]``, the layout
+    ``decode_segment`` returns and an Arrow ListArray stores."""
     doc_blob, tf_blob, block_last, block_max, (doc_boff, tf_boff) = (
         encode_postings(doc_ids, tfs, tf_norms)
     )
     dl_blob, dl_boff = _varbyte_blocks(dls.astype(np.uint64))
+    pos_blob = (
+        encode_position_lists(positions) if pos_offsets is None
+        else encode_positions(positions, pos_offsets)
+    )
     return {
         "n_postings": len(doc_ids),
         "doc_blob": doc_blob,
         "tf_blob": tf_blob,
         "dl_blob": dl_blob,
-        "pos_blob": encode_position_lists(position_lists),
+        "pos_blob": pos_blob,
         "block_last": block_last.tolist(),
         "block_max_norm": block_max.tolist(),
         "doc_boff": doc_boff.tolist(),
@@ -214,21 +224,31 @@ def decode_segment_block(seg, lb: int) -> tuple[np.ndarray, np.ndarray, np.ndarr
 
 def encode_position_lists(plists: np.ndarray) -> bytes:
     """Encode per-posting position lists as the concatenation of
-    ``[n, delta1..deltan]`` per list (the ``pos_blob`` layout), fully
-    vectorized across the group — one Python step per LIST only in the
-    length scan and the flatten, everything else whole-array numpy.
-    Byte-identical to encoding each list separately and concatenating.
-    """
+    ``[n, delta1..deltan]`` per list (the ``pos_blob`` layout): flatten
+    them, then ``encode_positions``. Byte-identical to encoding each list
+    separately and concatenating."""
     nrows = len(plists)
-    if nrows == 0:
-        return b""
     lens = np.fromiter((len(x) for x in plists), np.int64, nrows)
-    total = int(lens.sum())
-    if total == 0:
-        return varbyte_encode(np.zeros(nrows, np.uint64))
-    flat = np.concatenate([np.asarray(x, np.int64) for x in plists])
     offsets = np.zeros(nrows + 1, np.int64)
     np.cumsum(lens, out=offsets[1:])
+    flat = np.concatenate(
+        [np.asarray(x, np.int64) for x in plists] or [np.empty(0, np.int64)]
+    )
+    return encode_positions(flat, offsets)
+
+
+def encode_positions(positions: np.ndarray, offsets: np.ndarray) -> bytes:
+    """``pos_blob`` of flat per-posting positions (posting i owns
+    ``positions[offsets[i]:offsets[i + 1]]``, ``offsets[0] == 0``) —
+    whole-array numpy, no Python step per posting."""
+    nrows = len(offsets) - 1
+    if nrows <= 0:
+        return b""
+    lens = np.diff(offsets)
+    total = int(offsets[-1])
+    if total == 0:
+        return varbyte_encode(np.zeros(nrows, np.uint64))
+    flat = np.asarray(positions, np.int64)
     deltas = np.empty(total, np.int64)
     deltas[1:] = flat[1:] - flat[:-1]
     starts = offsets[:-1][lens > 0]  # first element of each list is absolute

@@ -25,6 +25,10 @@ lazy WAND and merge depend on):
     (max_doc(salt) < min_doc(salt+1)).
 
 Catalog consistency:
+  * every visible top-level entry of the root is an index table or
+    ``_meta.json`` — anything else (e.g. the ``dictionary/`` and
+    ``stats/`` dirs a format-4 root keeps after an in-place rebuild) is
+    dead weight nothing reads, reported as a warning;
   * bucket partition dirs are within [0, n_buckets) and live in their
     correct group dir;
   * ``_meta.json`` n_docs/avgdl match docstats (n_docs = count, avgdl =
@@ -210,6 +214,16 @@ def fsck(
         )
     n_buckets = int(meta["n_buckets"])
     group_size = int(meta.get("group_size", catalog.BUCKET_GROUP_SIZE))
+
+    # stale root entries: hidden names (".x", "_x") are bookkeeping,
+    # skipped as Spark's readers skip them
+    for name in sorted(os.listdir(root)):
+        if name in (*catalog.TABLES, catalog.META) or name[0] in "._":
+            continue
+        findings = findings.unionByName(_finding(
+            spark, "warning", "stale_entry",
+            f"{name!r} at the index root is not an index table — "
+            "nothing reads it; delete it"))
 
     # layout: bucket dirs within range and in the right group
     for d in catalog.glob_dirs(os.path.join(postings_root, "group=*", "bucket=*")):

@@ -17,8 +17,10 @@ Scale design (the part that must survive 1000 executors / 100 TB):
   restarts at the first incomplete bucket. Inside a bucket, head terms
   are salted: n_salts = ceil(df / TARGET_POSTINGS); salt = the doc_id's
   quantile of the (uniform, xxhash64-derived) doc-id space — every
-  (term, salt) blob is bounded, which bounds applyInPandas group memory
-  and kills Zipf skew (the reference has no skew story at all:
+  (term, salt) blob is bounded, which bounds the encode kernel's memory
+  (one blob plus one Arrow batch: a ``mapInArrow`` pass over rows
+  sorted by (bucket, term, salt, doc_id), see ``encode_segments``) and
+  kills Zipf skew (the reference has no skew story at all:
   ``tools/Partitioner.java``). Quantile (range) salting, not pmod: a
   term's salted blobs are doc-RANGE-disjoint and ordered, so query-time
   merge is a concatenation and a (query, doc-range) serving task can
@@ -37,9 +39,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import catalog, checkpoint
 from .bm25 import tf_norm
@@ -337,29 +342,80 @@ def read_stats(spark: SparkSession, root: str) -> tuple[int, float]:
 # Stage 3: salted compressed postings, per bucket
 # ---------------------------------------------------------------------------
 
-def _postings_kernel(avgdl: float):
-    """applyInPandas kernel: all token rows of one (term, salt) group ->
-    one compressed segment row."""
+def _segments_kernel(avgdl: float):
+    """mapInArrow kernel: salted token rows, sorted by (bucket, term,
+    salt, doc_id) within the partition -> one ``POSTINGS_SCHEMA`` row per
+    (bucket, term, salt) run. Runs are found per Arrow batch with
+    whole-array compares; a run may straddle batches, so the batch's last
+    run is carried (copied, so no earlier batch stays alive) and encoded
+    once its key changes or the partition ends. Positions come from the
+    ListArray's flat values and offsets; no pandas object is built."""
+    schema = to_arrow_schema(POSTINGS_SCHEMA)
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id", kind="mergesort")
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        dls = pdf["doc_len"].to_numpy(dtype=np.int64)
-        seg = encode_segment(
-            pdf["doc_id"].to_numpy(dtype=np.int64), tfs, dls,
-            pdf["positions"].to_numpy(), tf_norm(tfs, dls, avgdl),
+    def runs(rb: pa.RecordBatch):
+        """(key, piece) per run of one batch, in row order; the key
+        carries n_salts, which is constant per (bucket, term)."""
+        n = rb.num_rows
+        bucket = rb.column("bucket").to_numpy()
+        term = rb.column("term")
+        salt = rb.column("salt").to_numpy()
+        change = np.ones(n, dtype=bool)
+        change[1:] = (
+            (bucket[1:] != bucket[:-1])
+            | (salt[1:] != salt[:-1])
+            | pc.not_equal(term.slice(1), term.slice(0, n - 1)).to_numpy(
+                zero_copy_only=False
+            )
         )
-        first = pdf.iloc[0]
-        return pd.DataFrame([{
-            "bucket": int(first["bucket"]),
-            "term": first["term"],
-            "salt": int(first["salt"]),
-            "n_salts": int(first["n_salts"]),
-            **seg,
-            "avgdl_ref": float(avgdl),
-        }])
+        starts = np.flatnonzero(change)
+        ends = np.append(starts[1:], n)
+        cols = [rb.column(c).to_numpy() for c in ("doc_id", "tf", "doc_len")]
+        pos = rb.column("positions")
+        offs, vals = pos.offsets.to_numpy(), pos.values.to_numpy()
+        n_salts = rb.column("n_salts").to_numpy()
+        for s, e in zip(starts.tolist(), ends.tolist()):
+            key = (int(bucket[s]), term[s].as_py(), int(salt[s]),
+                   int(n_salts[s]))
+            piece = (*(c[s:e] for c in cols), vals[offs[s]:offs[e]],
+                     np.diff(offs[s:e + 1]))
+            yield key, piece
 
-    return build
+    def encode(key: tuple, pieces: list) -> dict:
+        doc_ids, tfs, dls, positions, lens = (
+            np.concatenate(parts) for parts in zip(*pieces)
+        )
+        tfs, dls = tfs.astype(np.int64), dls.astype(np.int64)
+        pos_offsets = np.zeros(len(lens) + 1, np.int64)
+        np.cumsum(lens, out=pos_offsets[1:])
+        seg = encode_segment(
+            doc_ids, tfs, dls, positions,
+            tf_norm(tfs, dls, avgdl), pos_offsets=pos_offsets,
+        )
+        bucket, term, salt, n_salts = key
+        return {"bucket": bucket, "term": term, "salt": salt,
+                "n_salts": n_salts, **seg, "avgdl_ref": float(avgdl)}
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        open_key, pieces = None, []
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            rows = []
+            for key, piece in runs(rb):
+                if key != open_key:
+                    if pieces:
+                        rows.append(encode(open_key, pieces))
+                    open_key, pieces = key, []
+                pieces.append(piece)
+            pieces[-1] = tuple(a.copy() for a in pieces[-1])
+            if rows:
+                yield pa.RecordBatch.from_pylist(rows, schema=schema)
+        if pieces:
+            yield pa.RecordBatch.from_pylist(
+                [encode(open_key, pieces)], schema=schema
+            )
+
+    return kernel
 
 
 def encode_segments(
@@ -380,16 +436,28 @@ def encode_segments(
     at files the caller is about to swap (the merge's pre-merge
     segments). The plan is scratch: the caller deletes it once the
     returned segments are written (a term's df is the sum of its
-    segments' n_postings, so nothing else needs it)."""
+    segments' n_postings, so nothing else needs it).
+
+    The salted rows are hash-partitioned on (bucket, term, salt) — the
+    shuffle that spreads a head term's salts over tasks — and sorted
+    within each partition by (bucket, term, salt, doc_id), so every
+    (term, salt) posting list is one contiguous doc-ordered run that the
+    ``mapInArrow`` kernel encodes with one ``compress.encode_segment``
+    call. Doc ids are unique within a term, so the order is total and
+    the segments are the same bytes at any partitioning or batch size."""
     toks.groupBy("bucket", "term").agg(
         F.ceil(F.count("*") / F.lit(target_postings)).cast("int").alias("n_salts")
     ).write.mode("overwrite").parquet(plan_path)
     salt_plan = spark.read.parquet(plan_path)
+    keys = ["bucket", "term", "salt"]
     salted = toks.join(
         F.broadcast(salt_plan.select("term", "n_salts")), "term"
     ).withColumn("salt", salt_expr(F.col("n_salts")))
-    return salted.groupBy("bucket", "term", "salt").applyInPandas(
-        _postings_kernel(avgdl), POSTINGS_SCHEMA
+    return (
+        salted.select(*keys, "n_salts", "doc_id", "tf", "doc_len", "positions")
+        .repartition(*keys)
+        .sortWithinPartitions(*keys, "doc_id")
+        .mapInArrow(_segments_kernel(avgdl), POSTINGS_SCHEMA)
     )
 
 

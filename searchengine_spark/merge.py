@@ -37,6 +37,8 @@ assumption the reference's crawl frontier makes about visited URLs,
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import shutil
 
@@ -71,7 +73,10 @@ def merge_tokens_stage(
     Crash-resumable: each merged bucket records a lineage row keyed by
     (pre-merge manifest, delta) — a re-run after a mid-merge crash skips
     buckets that already absorbed this delta (re-unioning them would
-    duplicate every streamed posting and double df/n_salts/idf).
+    duplicate every streamed posting and double df/n_salts/idf). Each
+    merged bucket's ``_merge_fp`` marker also lists the delta files
+    (path, size) it has absorbed, so a recorded bucket that meets a
+    delta grown since the crash merges only the files it lacks.
     ``kill_after`` aborts after that many buckets (resume tests)."""
     meta = catalog.read_meta(root)
     n_buckets = int(meta["n_buckets"])
@@ -100,11 +105,12 @@ def merge_tokens_stage(
             f"{len(missing)} incorporated token files vanished — the index "
             "needs a full build_postings_stage rebuild, not a merge"
         )
-    delta = [
-        rel
+    delta_ids = [
+        (rel, size)
         for rel, size in current_ps
         if (rel, size) not in incorporated and (rel, size) not in vacuumed
     ]
+    delta = [rel for rel, _size in delta_ids]
     if not delta:
         return {"delta_files": 0, "merged_buckets": [],
                 "skipped_buckets": n_buckets}
@@ -129,15 +135,12 @@ def merge_tokens_stage(
             "run) — resume build_postings_stage instead of merging, or "
             "the rebuilt groups would absorb the delta twice"
         )
-    import hashlib
-    import json as _json
-
     merge_fp = checkpoint.fingerprint(
         stage="merge",
         base=hashlib.md5(
-            _json.dumps(sorted(incorporated)).encode()
+            json.dumps(sorted(incorporated)).encode()
         ).hexdigest(),
-        delta=hashlib.md5(_json.dumps(sorted(delta)).encode()).hexdigest(),
+        delta=hashlib.md5(json.dumps(sorted(delta)).encode()).hexdigest(),
         v=1,
     )
 
@@ -204,7 +207,6 @@ def merge_tokens_stage(
             "mismatched n_buckets; re-ingest with the index's _meta.json "
             "value"
         )
-    delta_paths = [os.path.join(tokens_root, rel) for rel in delta]
 
     def scratch(b: int) -> tuple[str, str]:
         """(stage, aside) dirs of bucket ``b``'s merge — dot-prefixed so
@@ -227,14 +229,16 @@ def merge_tokens_stage(
         if not os.path.exists(bucket_dir) and os.path.exists(old_dir):
             # died between the aside and the swap-in: restore, re-merge
             os.replace(old_dir, bucket_dir)
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                marker_fp = fh.read()
+        marker_fp, absorbed = _read_marker(marker)
+        if marker_fp is not None:
             recorded = checkpoint.completed_partitions(
                 root, "merge", marker_fp
             )
             if b in recorded:
-                pass  # marker is a completed PREVIOUS merge — normal path
+                # a completed merge — a previous one, or this delta's
+                # before a crash and a grown delta: normal path over the
+                # delta files it has not absorbed
+                pass
             elif marker_fp == merge_fp:
                 # died after the segment swap but before the lineage
                 # record: the delta is already IN these segments —
@@ -254,6 +258,7 @@ def merge_tokens_stage(
                 if os.path.exists(old_dir):
                     shutil.rmtree(bucket_dir)
                     os.replace(old_dir, bucket_dir)
+                    _, absorbed = _read_marker(marker)
                 else:
                     raise RuntimeError(
                         f"bucket={b} carries an unrecorded merge marker "
@@ -267,26 +272,37 @@ def merge_tokens_stage(
         shutil.rmtree(old_dir, ignore_errors=True)
         # ---- normal path ----
         # delta token files of THIS bucket (partition col comes from the
-        # path, which we filter ourselves since we read files directly)
-        b_paths = [p for p in delta_paths if f"bucket={b}" in p.split(os.sep)]
+        # path, which we filter ourselves since we read files directly),
+        # less those a crashed run of a smaller delta already merged in
+        b_delta = [
+            (rel, size) for rel, size in delta_ids
+            if f"bucket={b}" in rel.split(os.sep)
+        ]
+        b_paths = [
+            os.path.join(tokens_root, rel)
+            for rel, size in b_delta if (rel, size) not in absorbed
+        ]
+        if not b_paths:
+            return (bucket_dir, *catalog.parquet_rows_bytes(bucket_dir))
+        # writer/meta n_buckets mismatch detector, evaluated on the rows
+        # the segments job reads (no job of its own): a delta written
+        # with a different bucket count would merge into buckets the
+        # readers' term-hash pruning never looks in — silent invisibility
+        mismatch = (
+            f"delta tokens under bucket={b} contain terms hashing to a "
+            f"different bucket at n_buckets={n_buckets} — the token "
+            "writer used a mismatched n_buckets; re-ingest with the "
+            "index's _meta.json value"
+        )
+        checked_term = F.when(
+            F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int")
+            == F.lit(b),
+            F.col("term"),
+        ).otherwise(F.raise_error(F.lit(mismatch)))
         new_tokens = spark.read.parquet(*b_paths).select(
             F.lit(b).cast("int").alias("bucket"),
-            "doc_id", "term", "tf", "positions", "doc_len",
+            "doc_id", checked_term.alias("term"), "tf", "positions", "doc_len",
         )
-        # writer/meta n_buckets mismatch detector: a delta written with a
-        # different bucket count would merge into buckets the readers'
-        # term-hash pruning never looks in — silent invisibility
-        mism = new_tokens.filter(
-            F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int")
-            != F.lit(b)
-        ).limit(1).count()
-        if mism:
-            raise RuntimeError(
-                f"delta tokens under bucket={b} contain terms hashing to a "
-                f"different bucket at n_buckets={n_buckets} — the token "
-                "writer used a mismatched n_buckets; re-ingest with the "
-                "index's _meta.json value"
-            )
         toks = new_tokens
         if os.path.exists(bucket_dir):
             old_segments = spark.read.option("basePath", postings_root).parquet(
@@ -297,9 +313,10 @@ def merge_tokens_stage(
                 .withColumn("bucket", F.lit(b).cast("int"))
                 .unionByName(new_tokens)
             )
-        # persist: the union is materialized twice below (salt plan +
-        # segments) and each action would otherwise re-decode every old
-        # blob through the Python kernel — the dominant per-bucket cost
+        # persist: the union feeds two jobs below (salt plan, then
+        # segments), and each would otherwise re-decode every old blob
+        # through the Python decode kernel (cheaper than the encode, but
+        # not worth paying twice)
         toks = toks.persist()
         try:
             segments = encode_segments(
@@ -311,8 +328,10 @@ def merge_tokens_stage(
             segments.drop("bucket").write.mode("overwrite").parquet(stage_dir)
         finally:
             toks.unpersist()
+        # the marker: which merge wrote these segments, and every delta
+        # file (path, size) of this bucket they now hold
         with open(os.path.join(stage_dir, "_merge_fp"), "w") as fh:
-            fh.write(merge_fp)
+            json.dump({"fp": merge_fp, "absorbed": sorted(b_delta)}, fh)
         if os.path.exists(bucket_dir):
             os.replace(bucket_dir, old_dir)  # atomic aside — never a gap
         os.replace(stage_dir, bucket_dir)  # atomic swap-in
@@ -349,6 +368,24 @@ def merge_tokens_stage(
         "merged_buckets": affected,
         "skipped_buckets": n_buckets - len(affected),
     }
+
+
+def _read_marker(marker: str) -> tuple[str | None, set]:
+    """(merge fingerprint, absorbed (path, size) identities) of a
+    bucket's ``_merge_fp`` marker; (None, empty) when there is none. Text
+    that is not the JSON ``merge_tokens_stage`` writes reads as a bare
+    fingerprint with nothing absorbed — it is trusted only when a
+    lineage row records it, so an unknown marker stays foreign."""
+    try:
+        with open(marker) as fh:
+            raw = fh.read()
+    except FileNotFoundError:
+        return None, set()
+    try:
+        parsed = json.loads(raw)
+        return parsed["fp"], {tuple(x) for x in parsed["absorbed"]}
+    except (ValueError, KeyError, TypeError):
+        return raw, set()
 
 
 def pending_delta_files(root: str) -> list[str]:

@@ -393,11 +393,14 @@ class QueryBatcher:
     *job*. On perfbench's ``serve`` index (4,000 pages, 4-vCPU VM) a
     lone request takes ~2.3 s, most of it fixed cost (job scheduling,
     segment reads, python decode spin-up), while a batch of four
-    answers in ~3.2 s: ~0.3 s per added query. The batcher needs no
-    artificial time window: the in-flight job IS the
-    window — requests arriving while a batch executes queue up and all
-    ship in the next one, so an idle server still answers a lone
-    request at single-query latency.
+    answers in ~3.2 s: ~0.3 s per added query. The in-flight job is the
+    main window — requests arriving while a batch executes queue up and
+    all ship in the next one — plus a short gather window
+    (``GATHER_WINDOW_S``, 50 ms) before each batch, so the convoy of
+    clients the previous batch released lands in one batch instead of
+    trickling into 1-request batches (without it concurrent qps
+    halves). A lone request on an idle server pays only those 50 ms on
+    top of single-query latency.
 
     Thread-safe; results are identical to per-request :func:`search`
     calls (``search_many`` is the same plan with more query_ids).

@@ -15,7 +15,9 @@ executor that read it, and the driver sees only k rows per query.
 Scoring: BM25 with the engine's constants — score(q,d) = Σ_t idf_t ·
 (k1+1) · tf_norm where tf_norm = tf/(tf + k1(1-b+b·dl/avgdl)) is
 PRE-COMPUTED at build time into the blocks' max metadata
-(``indexer._postings_kernel``), so the upper bounds used for pruning are
+(``indexer.encode_segments``' Arrow kernel, one
+``compress.encode_segment`` call per (term, salt) run), so the upper
+bounds used for pruning are
 exact bounds of the stored scores. Results are rank-identical to the
 exhaustive path: same fold order (sorted terms), same tie-break
 (score DESC, doc_id ASC) — asserted by tests/test_wand.py.

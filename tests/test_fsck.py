@@ -92,6 +92,28 @@ def test_detects_stats_drift(spark, corruptible_index):
     assert "stats" in checks
 
 
+def test_reports_stale_root_entries(spark, corruptible_index):
+    """Top-level entries that are not index tables — the dictionary/
+    and stats/ dirs a format-4 root keeps after an in-place rebuild, or
+    a stray file — are warnings naming the entry; hidden bookkeeping
+    names are not reported."""
+    for name in ("dictionary", "stats"):
+        os.makedirs(os.path.join(corruptible_index, name, "group=0"))
+        part = os.path.join(corruptible_index, name, "group=0", "x.parquet")
+        with open(part, "wb") as fh:
+            fh.write(b"old")
+    with open(os.path.join(corruptible_index, "notes.txt"), "w") as fh:
+        fh.write("stray")
+    with open(os.path.join(corruptible_index, "_bookkeeping"), "w") as fh:
+        fh.write("hidden")
+    rows = fsck(spark, corruptible_index).collect()
+    stale = [r for r in rows if r["check"] == "stale_entry"]
+    assert {r["severity"] for r in stale} == {"warning"}
+    assert sorted(r["detail"].split("'")[1] for r in stale) == [
+        "dictionary", "notes.txt", "stats"]
+    assert not any(r["severity"] == "error" for r in rows)
+
+
 def test_detects_stale_lineage_after_token_append(spark, corruptible_index):
     # plant a new token file the postings manifest has never seen
     tokens_root = catalog.path(corruptible_index, catalog.TOKENS)

@@ -196,6 +196,87 @@ def test_salt_expr_parity_and_monotonicity(spark):
         assert s_sorted.min() >= 0 and s_sorted.max() < n_salts
 
 
+def test_segment_kernel_matches_per_run_oracle(spark, tmp_path):
+    """encode_segments' Arrow kernel at three rows per Arrow batch, so
+    (term, salt) runs straddle batches: a head term split into >= 3
+    salts, small terms beside it, and a bucket whose only run is the
+    last run of its partition. Every segment row equals a per-run
+    compress.encode_segment oracle fed per-posting position lists."""
+    import operator
+
+    import numpy as np
+
+    from searchengine_spark.bm25 import tf_norm
+    from searchengine_spark.compress import encode_segment
+    from searchengine_spark.indexer import encode_segments, salt_of
+
+    rng = np.random.default_rng(6)
+    target, avgdl = 4, 7.25
+    # (bucket, term, postings); rows sort by bucket first, so bucket 3's
+    # single one-posting run ends whichever partition holds it
+    spec = [(0, "head", 15), (0, "mid", 5), (0, "solo", 1),
+            (1, "pair", 2), (1, "tail", 7), (3, "zlast", 1)]
+    rows = []
+    for b, term, n in spec:
+        docs = rng.integers(-(2**63), 2**63 - 1, size=n, dtype=np.int64)
+        assert len(set(docs.tolist())) == n
+        for d in docs.tolist():
+            tf = int(rng.integers(1, 5))
+            pos = sorted(rng.choice(60, size=tf, replace=False).tolist())
+            rows.append((b, term, d, tf, pos, int(rng.integers(5, 90))))
+    rng.shuffle(rows)
+
+    want = []
+    for b, term, n in spec:
+        mine = sorted(r for r in rows if r[1] == term)
+        docs = np.array([r[2] for r in mine], np.int64)
+        n_salts = -(-n // target)
+        salts = salt_of(docs, n_salts)
+        if term == "head":
+            assert len(set(salts.tolist())) >= 3
+        for s in sorted(set(salts.tolist())):
+            run = [r for r, x in zip(mine, salts) if x == s]
+            tfs = np.array([r[3] for r in run], np.int64)
+            dls = np.array([r[5] for r in run], np.int64)
+            plists = np.empty(len(run), dtype=object)
+            plists[:] = [np.array(r[4], np.int64) for r in run]
+            seg = encode_segment(
+                np.array([r[2] for r in run], np.int64), tfs, dls, plists,
+                tf_norm(tfs, dls, avgdl),
+            )
+            want.append({"bucket": b, "term": term, "salt": s,
+                         "n_salts": n_salts, **seg, "avgdl_ref": avgdl})
+
+    toks = spark.createDataFrame(
+        rows, "bucket int, term string, doc_id long, tf int, "
+              "positions array<int>, doc_len int",
+    )
+    confs = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in
+             [*confs, "spark.sql.shuffle.partitions"]}
+    key = operator.itemgetter("bucket", "term", "salt")
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        for n_parts in (1, 3):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+            segs = encode_segments(
+                spark, toks, target, avgdl, str(tmp_path / f"plan{n_parts}")
+            )
+            got = [
+                {k: bytes(v) if isinstance(v, bytearray) else v
+                 for k, v in r.asDict().items()}
+                for r in segs.collect()
+            ]
+            assert sorted(got, key=key) == sorted(want, key=key), n_parts
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_and_semantics(spark, tiny_index, tiny_oracle):
     """AND queries return only docs containing every term."""
     idx = tiny_oracle

@@ -499,6 +499,92 @@ def test_merge_crash_then_grown_delta_restores_pristine(spark):
         merge_tokens_stage(spark, root, pages_path=full_dir)
 
 
+def test_merge_resume_after_recorded_bucket_with_grown_delta(spark):
+    """A merge killed after one bucket is recorded (kill_after=1), then
+    a second stream batch lands before the resume: the recorded bucket
+    holds the first batch already, so it must merge only the delta files
+    its marker says it has not absorbed. Every bucket's segment rows end
+    equal to a from-scratch rebuild's (re-merging the whole grown delta
+    counts the first batch's postings twice in the recorded bucket)."""
+    from searchengine_spark.indexer import POSTINGS_SCHEMA
+    from searchengine_spark.streaming.ingest import stream_tokenize
+
+    base = os.path.join(MERGEDIR, "recordedgrown")
+    shutil.rmtree(base, ignore_errors=True)
+    full_dir = os.path.join(base, "pages_full")
+    corpus.write_pages_parquet(full_dir, N_PAGES, batch_rows=40)
+    files = sorted(f for f in os.listdir(full_dir) if f.endswith(".parquet"))
+    dirs = {name: os.path.join(base, name)
+            for name in ("pages_initial", "pages_stream1", "pages_stream2")}
+    for name, part in (("pages_initial", files[:-4]),
+                       ("pages_stream1", files[-4:-2]),
+                       ("pages_stream2", files[-2:])):
+        os.makedirs(dirs[name])
+        for f in part:
+            shutil.copy(os.path.join(full_dir, f), os.path.join(dirs[name], f))
+    root = os.path.join(base, "index")
+    build_index(spark, dirs["pages_initial"], root, n_chunks=2,
+                n_buckets=N_BUCKETS)
+
+    def ingest(src, ckpt):
+        stream_tokenize(
+            spark, src, catalog.path(root, catalog.TOKENS),
+            os.path.join(base, ckpt), n_buckets=N_BUCKETS,
+        ).awaitTermination()
+
+    ingest(dirs["pages_stream1"], "ckpt1")
+    with pytest.raises(KeyboardInterrupt):
+        merge_tokens_stage(spark, root, pages_path=full_dir, kill_after=1)
+    ingest(dirs["pages_stream2"], "ckpt2")
+    report = merge_tokens_stage(spark, root, pages_path=full_dir)
+    assert report["merged_buckets"] == list(range(N_BUCKETS))
+
+    root2 = os.path.join(base, "index_rebuilt")
+    build_index(spark, full_dir, root2, n_chunks=2, n_buckets=N_BUCKETS)
+    cols = [f.name for f in POSTINGS_SCHEMA.fields if f.name != "bucket"]
+
+    def segment_rows(r, b):
+        path = os.path.join(
+            catalog.path(r, catalog.POSTINGS), "group=*", f"bucket={b}"
+        )
+        return sorted(tuple(row) for row in
+                      spark.read.parquet(path).select(*cols).collect())
+
+    for b in range(N_BUCKETS):
+        merged = segment_rows(root, b)
+        assert merged and merged == segment_rows(root2, b), f"bucket {b}"
+
+
+def test_merge_refuses_delta_tokens_under_wrong_bucket(spark, tiny_index, tmp_path):
+    """A delta token file under bucket=<b> whose terms hash to another
+    bucket (a writer with a different n_buckets) makes the merge raise —
+    the check runs on the rows the segments job reads — and bucket b's
+    live segments stay as they were."""
+    import glob
+
+    root = str(tmp_path / "idx")
+    shutil.copytree(tiny_index, root)
+    tokens = catalog.path(root, catalog.TOKENS)
+    src = sorted(glob.glob(os.path.join(tokens, "chunk=*", "bucket=0", "*.parquet")))[0]
+    wrong = os.path.join(tokens, "chunk=stream-wrong", "bucket=1")
+    os.makedirs(wrong)
+    shutil.copy(src, os.path.join(wrong, "part-00000.parquet"))
+    bdir = os.path.join(catalog.path(root, catalog.POSTINGS), "group=0", "bucket=1")
+
+    def listing():
+        return {
+            f: (os.path.getsize(os.path.join(bdir, f)),
+                os.path.getmtime(os.path.join(bdir, f)))
+            for f in os.listdir(bdir)
+        }
+
+    before = listing()
+    assert before
+    with pytest.raises(Exception, match="hashing to a different bucket"):
+        merge_tokens_stage(spark, root)
+    assert listing() == before
+
+
 def test_wand_and_mode_empty_term_empties_conjunction():
     """AND with any zero-posting term must return [] — not the
     intersection of only the non-empty terms."""

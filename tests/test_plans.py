@@ -457,6 +457,38 @@ def test_pagerank_round_is_one_join_and_one_sum(spark):
     assert r.columns == ["node", "u", "prev_u"]
 
 
+def test_encode_segments_is_one_arrow_kernel_over_one_shuffle(
+    spark, tiny_index, tmp_path
+):
+    """The segment encode is one MapInArrow over rows sorted within one
+    hash Exchange on (bucket, term, salt) — the salting shuffle — and no
+    per-group pandas kernel (FlatMapGroupsInPandas), which costs a
+    Python call and two pandas frames per (term, salt)."""
+    from searchengine_spark.indexer import encode_segments, read_tokens
+
+    segs = encode_segments(
+        spark, read_tokens(spark, tiny_index), 4, 10.0, str(tmp_path / "plan")
+    )
+    tree = [
+        re.sub(r"#\d+L?", "", line.lstrip(" :+-|"))
+        for line in plan(segs, mode="simple").splitlines()
+    ]
+    assert "FlatMapGroupsInPandas" not in "\n".join(tree)
+    kernels = [i for i, line in enumerate(tree) if line.startswith("MapInArrow")]
+    exchanges = [
+        i for i, line in enumerate(tree)
+        if line.startswith("Exchange hashpartitioning(")
+    ]
+    assert len(kernels) == 1 and len(exchanges) == 1, tree
+    k, x = kernels[0], exchanges[0]
+    # MapInArrow <- Sort(bucket, term, salt, doc_id) <- the Exchange
+    assert x == k + 2 and tree[k + 1].startswith(
+        "Sort [bucket ASC NULLS FIRST, term ASC NULLS FIRST, "
+        "salt ASC NULLS FIRST, doc_id ASC NULLS FIRST]"
+    ), tree
+    assert tree[x].startswith("Exchange hashpartitioning(bucket, term, salt, "), tree
+
+
 @pytest.fixture
 def tiny_docstore(spark, tiny_index, tiny_pages_path):
     import shutil

@@ -148,8 +148,9 @@ def test_wand_randomized_vs_bruteforce(mode, full_range):
 
 
 def _encode_rows(docs, tfs, dls, avgdl, n_salts):
-    """Build salted segment rows exactly as indexer._postings_kernel does
-    (range salting, compress.encode_segment), for tests without Spark."""
+    """Build salted segment rows exactly as indexer.encode_segments'
+    Arrow kernel does (range salting, one compress.encode_segment call
+    per (term, salt) run), for tests without Spark."""
     from searchengine_spark.compress import encode_segment
     from searchengine_spark.indexer import salt_of
 

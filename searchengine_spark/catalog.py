@@ -84,6 +84,14 @@ def list_files(dir_path: str, suffix: str = "") -> list[str]:
     )
 
 
+def list_entries(dir_path: str) -> list[str]:
+    """Sorted names of every entry (file or dir) directly under
+    ``dir_path``; empty when it does not exist."""
+    if not os.path.isdir(dir_path):
+        return []
+    return sorted(os.listdir(dir_path))
+
+
 def glob_dirs(pattern: str) -> list[str]:
     """Sorted directory paths matching a glob pattern."""
     import glob as _glob

@@ -28,7 +28,9 @@ Catalog consistency:
   * every visible top-level entry of the root is an index table or
     ``_meta.json`` — anything else (e.g. the ``dictionary/`` and
     ``stats/`` dirs a format-4 root keeps after an in-place rebuild) is
-    dead weight nothing reads, reported as a warning;
+    dead weight nothing reads, reported as a warning. A ``.swap-old`` /
+    ``.swap-tmp`` entry left by a crashed ``catalog.replace_dir`` is
+    reported as its own warning: the aside may be the table's only copy;
   * bucket partition dirs are within [0, n_buckets) and live in their
     correct group dir;
   * ``_meta.json`` n_docs/avgdl match docstats (n_docs = count, avgdl =
@@ -216,9 +218,19 @@ def fsck(
     group_size = int(meta.get("group_size", catalog.BUCKET_GROUP_SIZE))
 
     # stale root entries: hidden names (".x", "_x") are bookkeeping,
-    # skipped as Spark's readers skip them
-    for name in sorted(os.listdir(root)):
+    # skipped as Spark's readers skip them. A replace_dir crash leftover
+    # is not stale: its .swap-old aside may be the only copy of the
+    # table, which restore_aside puts back
+    for name in catalog.list_entries(root):
         if name in (*catalog.TABLES, catalog.META) or name[0] in "._":
+            continue
+        if name.endswith((".swap-old", ".swap-tmp")):
+            findings = findings.unionByName(_finding(
+                spark, "warning", "swap_leftover",
+                f"{name!r} at the index root is left by a crashed table "
+                "swap (catalog.replace_dir) — while the table itself is "
+                "missing it is the only copy, which the next merge "
+                "restores (catalog.restore_aside); do not delete it"))
             continue
         findings = findings.unionByName(_finding(
             spark, "warning", "stale_entry",

@@ -283,6 +283,14 @@ def merge_tokens_stage(
             for rel, size in b_delta if (rel, size) not in absorbed
         ]
         if not b_paths:
+            # a bucket recorded before a crash whose files the grown
+            # delta did not add to: nothing to merge, but its lineage row
+            # is about to be recorded under THIS merge_fp, so the marker
+            # must name it too — a marker left under the crashed run's
+            # fingerprint matches no lineage row, and the next merge
+            # would refuse the bucket as foreign
+            catalog.write_atomic(marker, json.dumps(
+                {"fp": merge_fp, "absorbed": sorted(b_delta)}).encode())
             return (bucket_dir, *catalog.parquet_rows_bytes(bucket_dir))
         # writer/meta n_buckets mismatch detector, evaluated on the rows
         # the segments job reads (no job of its own): a delta written

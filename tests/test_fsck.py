@@ -96,7 +96,9 @@ def test_reports_stale_root_entries(spark, corruptible_index):
     """Top-level entries that are not index tables — the dictionary/
     and stats/ dirs a format-4 root keeps after an in-place rebuild, or
     a stray file — are warnings naming the entry; hidden bookkeeping
-    names are not reported."""
+    names are not reported. A crashed table swap's ``.swap-old`` aside
+    is reported as a swap leftover, never as stale: restore_aside reads
+    it back when the live table is missing."""
     for name in ("dictionary", "stats"):
         os.makedirs(os.path.join(corruptible_index, name, "group=0"))
         part = os.path.join(corruptible_index, name, "group=0", "x.parquet")
@@ -106,11 +108,17 @@ def test_reports_stale_root_entries(spark, corruptible_index):
         fh.write("stray")
     with open(os.path.join(corruptible_index, "_bookkeeping"), "w") as fh:
         fh.write("hidden")
+    ds = catalog.path(corruptible_index, catalog.DOCSTATS)
+    shutil.copytree(ds, ds + ".swap-old")
     rows = fsck(spark, corruptible_index).collect()
     stale = [r for r in rows if r["check"] == "stale_entry"]
     assert {r["severity"] for r in stale} == {"warning"}
     assert sorted(r["detail"].split("'")[1] for r in stale) == [
         "dictionary", "notes.txt", "stats"]
+    swap = [r for r in rows if r["check"] == "swap_leftover"]
+    assert [(r["severity"], r["detail"].split("'")[1]) for r in swap] == [
+        ("warning", "docstats.swap-old")]
+    assert "do not delete" in swap[0]["detail"]
     assert not any(r["severity"] == "error" for r in rows)
 
 

@@ -503,9 +503,12 @@ def test_merge_resume_after_recorded_bucket_with_grown_delta(spark):
     """A merge killed after one bucket is recorded (kill_after=1), then
     a second stream batch lands before the resume: the recorded bucket
     holds the first batch already, so it must merge only the delta files
-    its marker says it has not absorbed. Every bucket's segment rows end
-    equal to a from-scratch rebuild's (re-merging the whole grown delta
-    counts the first batch's postings twice in the recorded bucket)."""
+    its marker says it has not absorbed. When the second batch brings
+    that bucket nothing, the resume still re-stamps its marker, so a
+    third batch merges into it instead of being refused as foreign.
+    Every bucket's segment rows end equal to a from-scratch rebuild's
+    (re-merging the whole grown delta counts the first batch's postings
+    twice in the recorded bucket)."""
     from searchengine_spark.indexer import POSTINGS_SCHEMA
     from searchengine_spark.streaming.ingest import stream_tokenize
 
@@ -535,9 +538,25 @@ def test_merge_resume_after_recorded_bucket_with_grown_delta(spark):
     ingest(dirs["pages_stream1"], "ckpt1")
     with pytest.raises(KeyboardInterrupt):
         merge_tokens_stage(spark, root, pages_path=full_dir, kill_after=1)
+    batch1 = set(pending_delta_files(root))
     ingest(dirs["pages_stream2"], "ckpt2")
+    # bucket 0 (the one recorded before the kill) gets nothing from the
+    # second batch: its bucket=0 files are held back and land as a third
+    # batch after the resume
+    tokens = catalog.path(root, catalog.TOKENS)
+    held_root = os.path.join(base, "held")
+    held = [rel for rel in pending_delta_files(root)
+            if rel not in batch1 and "bucket=0" in rel.split(os.sep)]
+    assert held
+    for rel in held:
+        os.makedirs(os.path.dirname(os.path.join(held_root, rel)), exist_ok=True)
+        os.replace(os.path.join(tokens, rel), os.path.join(held_root, rel))
     report = merge_tokens_stage(spark, root, pages_path=full_dir)
     assert report["merged_buckets"] == list(range(N_BUCKETS))
+    for rel in held:
+        os.replace(os.path.join(held_root, rel), os.path.join(tokens, rel))
+    report = merge_tokens_stage(spark, root, pages_path=full_dir)
+    assert report["merged_buckets"] == [0]
 
     root2 = os.path.join(base, "index_rebuilt")
     build_index(spark, full_dir, root2, n_chunks=2, n_buckets=N_BUCKETS)

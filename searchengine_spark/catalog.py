@@ -189,15 +189,32 @@ def parquet_rows_bytes(dir_path: str) -> tuple[int, int]:
     return rows, nbytes
 
 
+def _swap_siblings(live: str) -> tuple[str, str]:
+    """(staged, aside) paths ``replace_dir`` swaps ``live`` through. A
+    partition dir (``bucket=<b>``) gets dot-prefixed siblings: Spark's
+    partition discovery and fsck's ``group=*/bucket=*`` parse skip
+    hidden names but would read a visible ``bucket=1.swap-tmp``."""
+    head, name = os.path.split(live)
+    if "=" in name:
+        live = os.path.join(head, "." + name)
+    return live + ".swap-tmp", live + ".swap-old"
+
+
 def replace_dir(live: str, write_fn) -> None:
     """Write via ``write_fn(tmp_path)`` then swap into ``live`` with an
     atomic aside+rename pair: readers never observe a missing or
     half-written directory, and a crash between the two renames is
     repaired by ``restore_aside`` on the next run (plain
-    mode('overwrite') to the live path had both failure modes)."""
-    tmp, aside = live + ".swap-tmp", live + ".swap-old"
+    mode('overwrite') to the live path had both failure modes). A
+    ``write_fn`` that raises leaves ``live`` as it was and no staged
+    dir behind."""
+    tmp, aside = _swap_siblings(live)
     shutil.rmtree(tmp, ignore_errors=True)
-    write_fn(tmp)
+    try:
+        write_fn(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     shutil.rmtree(aside, ignore_errors=True)
     if os.path.exists(live):
         os.replace(live, aside)
@@ -207,7 +224,7 @@ def replace_dir(live: str, write_fn) -> None:
 
 def restore_aside(live: str) -> None:
     """Undo a replace_dir crash window: live missing, aside present."""
-    aside = live + ".swap-old"
+    aside = _swap_siblings(live)[1]
     if not os.path.exists(live) and os.path.exists(aside):
         os.replace(aside, live)
 

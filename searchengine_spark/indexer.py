@@ -281,6 +281,9 @@ def read_tokens(spark: SparkSession, root: str, bucket: int | None = None) -> Da
 # Stage 2: docstats + corpus scalars
 # ---------------------------------------------------------------------------
 
+DOCSTATS_SCHEMA = "doc_id BIGINT, url STRING, doc_len INT"
+
+
 def write_docstats(spark: SparkSession, root: str, docstats: DataFrame) -> None:
     """The one docstats writer, shared by the build stage and the merge:
     swap ``docstats`` (doc_id, url, doc_len) in, then write the corpus
@@ -496,6 +499,28 @@ def postings_fingerprint(
         stage="postings", n_buckets=n_buckets, target=target_postings,
         group_size=group_size, content=content, v=catalog.INDEX_FORMAT,
     )
+
+
+def rebase_postings_lineage(
+    root: str, build_id: str, fp: str, n_groups: int
+) -> None:
+    """Record every postings group complete under ``fp`` unless its
+    latest lineage row already is — for segments known equal to a
+    ``build_postings_stage`` run under ``fp`` whose token tree changed
+    without a rebuild: after a merge (merged buckets are rebuilds by
+    construction, the rest were untouched by the delta) and after
+    ``merge.vacuum_tokens`` (the segments did not change at all). Keeps
+    fsck's lineage check green and makes a later build resume as a
+    no-op."""
+    done = checkpoint.completed_partitions(root, "postings", fp)
+    postings_root = catalog.path(root, catalog.POSTINGS)
+    for g in range(n_groups):
+        if g not in done:
+            gdir = os.path.join(postings_root, f"group={g}")
+            rows, nbytes = catalog.parquet_rows_bytes(gdir)
+            checkpoint.record(
+                root, build_id, "postings", g, fp, gdir, rows, nbytes, 0
+            )
 
 
 def build_postings_stage(

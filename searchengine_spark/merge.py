@@ -4,25 +4,37 @@ The streaming ingest path (``streaming/ingest.py``) appends token files
 under ``tokens/chunk=stream-*``; this job folds them into the compressed
 posting segments WITHOUT rebuilding untouched buckets:
 
-1. delta = token files not in the ``tokens_manifest`` the last postings
-   build/merge recorded in ``_meta.json``;
+1. delta = token files in neither the ``tokens_manifest`` the last
+   postings build/merge recorded in ``_meta.json`` nor its
+   ``tokens_vacuumed`` list (``_pending_with_sizes``);
 2. affected buckets = the ``bucket=<b>`` partitions those delta files
    live in — every other bucket's segments are byte-identical to what a
    from-scratch rebuild over the new tokens would produce (no new
    postings, deterministic salting/encoding), so they are left alone;
-3. per affected bucket: decode the existing segments back to
+3. every refusal runs before the first write: delta files outside a
+   ``bucket=`` dir or under an out-of-range bucket, an affected
+   bucket's unreadable marker, and (inside the docstats upsert's read
+   of the delta, the first job that reads it) terms hashing to another
+   bucket than the one they were written under;
+4. docstats and the ``_meta.json`` n_docs/avgdl are upserted
+   (``_upsert_docstats``: doc_len = greatest(old, delta); pass
+   ``pages_path`` for exact urls — e.g. the directory the stream
+   ingested from plus the original corpus — otherwise streamed docs
+   carry a NULL url until the next docstats batch run);
+5. per affected bucket: decode the existing segments back to
    token-shaped rows (term, doc_id, tf, positions, doc_len) with
-   ``query.decode_segments``, union the delta rows, and hand them to
-   ``indexer.encode_segments`` — the salt plan and segment writer the
-   batch build uses — so merged buckets are byte-identical to a rebuild;
-4. docstats and the ``_meta.json`` n_docs/avgdl are recomputed
-   (``indexer.write_docstats``; pass ``pages_path`` for exact urls —
-   e.g. the directory the stream ingested from plus the original corpus
-   — otherwise doc_len is recovered from the delta tokens and streamed
-   docs carry a NULL url until the next docstats batch run);
-5. lineage: every group is recorded complete under the NEW tokens
+   ``query.decode_segments``, union the delta rows the bucket has not
+   absorbed yet, and hand them to ``indexer.encode_segments`` — the
+   salt plan and segment writer the batch build uses — so merged
+   buckets are byte-identical to a rebuild;
+6. lineage: every group is recorded complete under the NEW tokens
    manifest fingerprint, so a later ``build_postings_stage`` resumes as
    a no-op instead of rebuilding the world.
+
+Crash recovery has one rule: a bucket's ``_merge_fp`` marker, written
+into the staged bucket before it is swapped in, lists every delta file
+(path, size) its segments hold, and a bucket merges exactly the delta
+files its marker does not list.
 
 Corpus avgdl drifts when documents are appended; untouched segments keep
 their build-time ``avgdl_ref`` and the WAND reader inflates their block
@@ -40,23 +52,28 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import catalog, checkpoint
 from .indexer import (
-    build_docstats_stage,
+    DOCSTATS_SCHEMA,
+    TOKENS_SCHEMA,
     build_title_index_stage,
     encode_segments,
+    ingest,
     postings_fingerprint,
     read_stats,
+    rebase_postings_lineage,
     remove_salt_plan,
     salt_plan_path,
     write_docstats,
 )
 from .query import decode_segments
+
+MARKER = "_merge_fp"
 
 
 def merge_tokens_stage(
@@ -70,14 +87,13 @@ def merge_tokens_stage(
     {"delta_files": n, "merged_buckets": [...], "skipped_buckets": n}.
     No-op (fast) when the manifest already covers every token file.
 
-    Crash-resumable: each merged bucket records a lineage row keyed by
-    (pre-merge manifest, delta) — a re-run after a mid-merge crash skips
-    buckets that already absorbed this delta (re-unioning them would
-    duplicate every streamed posting and double df/n_salts/idf). Each
-    merged bucket's ``_merge_fp`` marker also lists the delta files
-    (path, size) it has absorbed, so a recorded bucket that meets a
-    delta grown since the crash merges only the files it lacks.
-    ``kill_after`` aborts after that many buckets (resume tests)."""
+    Crash-resumable: a re-run of the same delta skips the buckets it
+    recorded, and any bucket merges only the delta files its marker does
+    not list, so no resume (after a crash between a swap and its record,
+    or over a delta grown since) re-unions a delta into segments that
+    hold it — that would duplicate every streamed posting and double
+    df/n_salts/idf. ``kill_after`` aborts after that many buckets
+    (resume tests)."""
     meta = catalog.read_meta(root)
     n_buckets = int(meta["n_buckets"])
     target = int(meta.get("target_postings", catalog.TARGET_POSTINGS))
@@ -85,31 +101,17 @@ def merge_tokens_stage(
     tokens_root = catalog.path(root, catalog.TOKENS)
     postings_root = catalog.path(root, catalog.POSTINGS)
 
-    # delta identity is (path, size) — mtime deliberately excluded HERE:
-    # a replayed streaming micro-batch rewrites identical content with a
-    # fresh mtime, and re-merging it would duplicate postings. Same-size
-    # in-place content edits are instead caught by the mtime-bearing
-    # stage fingerprints (catalog.tree_manifest) at the next full build.
     incorporated = {tuple(x[:2]) for x in meta.get("tokens_manifest", [])}
-    # vacuumed identities stay excluded FOREVER (append-only list): a
-    # crashed ingest restarted long after a vacuum replays its
-    # micro-batch into the same-named chunk dir, and without this a
-    # replayed already-merged file would re-enter as a fresh delta and
-    # duplicate its postings.
     vacuumed = {tuple(x[:2]) for x in meta.get("tokens_vacuumed", [])}
     current = catalog.tree_manifest(tokens_root)
-    current_ps = [(rel, size) for rel, size, *_ in current]
-    missing = incorporated - set(current_ps) - vacuumed
+    present = {(rel, size) for rel, size, *_ in current}
+    missing = incorporated - present - vacuumed
     if missing:
         raise RuntimeError(
             f"{len(missing)} incorporated token files vanished — the index "
             "needs a full build_postings_stage rebuild, not a merge"
         )
-    delta_ids = [
-        (rel, size)
-        for rel, size in current_ps
-        if (rel, size) not in incorporated and (rel, size) not in vacuumed
-    ]
+    delta_ids = _pending_with_sizes(root, current)
     delta = [rel for rel, _size in delta_ids]
     if not delta:
         return {"delta_files": 0, "merged_buckets": [],
@@ -135,28 +137,59 @@ def merge_tokens_stage(
             "run) — resume build_postings_stage instead of merging, or "
             "the rebuilt groups would absorb the delta twice"
         )
-    merge_fp = checkpoint.fingerprint(
-        stage="merge",
-        base=hashlib.md5(
-            json.dumps(sorted(incorporated)).encode()
-        ).hexdigest(),
-        delta=hashlib.md5(json.dumps(sorted(delta)).encode()).hexdigest(),
-        v=1,
-    )
 
-    # 1. docstats + corpus scalars first — idf and norms of the merged segments
-    # must reflect the post-append corpus. On a VACUUMED root the full
-    # recompute is forbidden even when pages are at hand: it derives
-    # doc_lens from the whole tokens tree, which the vacuum emptied
-    # (doc_len=0 for every pre-vacuum doc, silently) — the incremental
-    # delta-only upsert is exact for doc_len/avgdl (stream doc ids are
-    # new url hashes, disjoint from the existing docstats rows).
-    if pages_path is not None and not vacuumed:
-        build_docstats_stage(spark, pages_path, root, build_id)
-    elif pages_path is not None:
-        _docstats_incremental(spark, pages_path, root, delta)
-    else:
-        _docstats_from_tokens(spark, root, delta)
+    # ---- checks: every refusal before the first write ----
+    stray = [
+        rel for rel in delta
+        if not any(p.startswith("bucket=") for p in rel.split(os.sep))
+    ]
+    if stray:
+        raise RuntimeError(
+            f"delta token files outside a bucket= partition ({stray[:3]}…) — "
+            "they would be silently skipped; fix the writer's layout"
+        )
+    bucket_of = {
+        rel: int(part.split("=", 1)[1])
+        for rel in delta
+        for part in rel.split(os.sep)
+        if part.startswith("bucket=")
+    }
+    affected = sorted(set(bucket_of.values()))
+    oob = [b for b in affected if b < 0 or b >= n_buckets]
+    if oob:
+        raise RuntimeError(
+            f"delta token files under bucket ids {oob[:5]} but the index "
+            f"has n_buckets={n_buckets} — the token writer used a "
+            "mismatched n_buckets; re-ingest with the index's _meta.json "
+            "value"
+        )
+
+    def bucket_dir(b: int) -> str:
+        return os.path.join(
+            postings_root, f"group={b // group_size}", f"bucket={b}"
+        )
+
+    known = present | incorporated | vacuumed
+    absorbed: dict[int, set | None] = {}
+    for b in affected:
+        # a crash between replace_dir's two renames leaves the bucket
+        # aside; put it back before its marker is read
+        catalog.restore_aside(bucket_dir(b))
+        absorbed[b] = _read_marker(os.path.join(bucket_dir(b), MARKER))
+        if absorbed[b] is None or not absorbed[b] <= known:
+            raise RuntimeError(
+                f"bucket={b}'s {MARKER} marker is unreadable or names token "
+                "files this index never had — its segments hold an unknown "
+                "delta subset; rebuild with build_postings_stage instead of "
+                "merging"
+            )
+
+    # ---- docstats + corpus scalars: idf and norms of the merged segments
+    # must reflect the post-append corpus ----
+    _upsert_docstats(
+        spark, root, [os.path.join(tokens_root, rel) for rel in delta],
+        n_buckets, pages_path,
+    )
     if pages_path is not None:
         # title hits feed the BLENDED serving score — without this the
         # streamed docs rank with title_hit 0 and the merged index
@@ -182,194 +215,69 @@ def merge_tokens_stage(
             build_anchor_stage(spark, pages_path, root, build_id)
     _, avgdl = read_stats(spark, root)
 
-    stray = [
-        rel for rel in delta
-        if not any(p.startswith("bucket=") for p in rel.split(os.sep))
-    ]
-    if stray:
-        raise RuntimeError(
-            f"delta token files outside a bucket= partition ({stray[:3]}…) — "
-            "they would be silently skipped; fix the writer's layout"
-        )
-    affected = sorted(
-        {
-            int(part.split("=", 1)[1])
-            for rel in delta
-            for part in rel.split(os.sep)
-            if part.startswith("bucket=")
-        }
-    )
-    oob = [b for b in affected if b < 0 or b >= n_buckets]
-    if oob:
-        raise RuntimeError(
-            f"delta token files under bucket ids {oob[:5]} but the index "
-            f"has n_buckets={n_buckets} — the token writer used a "
-            "mismatched n_buckets; re-ingest with the index's _meta.json "
-            "value"
-        )
-
-    def scratch(b: int) -> tuple[str, str]:
-        """(stage, aside) dirs of bucket ``b``'s merge — dot-prefixed so
-        the readers' bucket=* globs and Spark's recursive listings can
-        never pick up a leftover."""
-        group_dir = os.path.join(postings_root, f"group={b // group_size}")
-        return (
-            os.path.join(group_dir, f".merge-tmp-b{b}"),
-            os.path.join(group_dir, f".merge-old-b{b}"),
-        )
-
     def merge_bucket(b: int) -> tuple[str, int, int]:
-        bucket_dir = os.path.join(
-            postings_root, f"group={b // group_size}", f"bucket={b}"
-        )
-        stage_dir, old_dir = scratch(b)
-        marker = os.path.join(bucket_dir, "_merge_fp")
-        # ---- crash recovery (no lineage row exists for this bucket
-        # under the CURRENT merge_fp) ----
-        if not os.path.exists(bucket_dir) and os.path.exists(old_dir):
-            # died between the aside and the swap-in: restore, re-merge
-            os.replace(old_dir, bucket_dir)
-        marker_fp, absorbed = _read_marker(marker)
-        if marker_fp is not None:
-            recorded = checkpoint.completed_partitions(
-                root, "merge", marker_fp
-            )
-            if b in recorded:
-                # a completed merge — a previous one, or this delta's
-                # before a crash and a grown delta: normal path over the
-                # delta files it has not absorbed
-                pass
-            elif marker_fp == merge_fp:
-                # died after the segment swap but before the lineage
-                # record: the delta is already IN these segments —
-                # re-merging would duplicate every streamed posting.
-                # Record it only.
-                return (bucket_dir, *catalog.parquet_rows_bytes(bucket_dir))
-            else:
-                # died in the same swap/record gap, but the delta has
-                # since CHANGED (new stream token files arrived before
-                # the resume → different merge_fp): these segments
-                # already absorbed the crashed merge's delta, so
-                # re-merging the full current delta into them would
-                # duplicate those postings and inflate df/idf with
-                # nothing downstream to notice. old_dir still holds the
-                # pristine pre-merge segments in exactly this window —
-                # restore it and merge from there.
-                if os.path.exists(old_dir):
-                    shutil.rmtree(bucket_dir)
-                    os.replace(old_dir, bucket_dir)
-                    _, absorbed = _read_marker(marker)
-                else:
-                    raise RuntimeError(
-                        f"bucket={b} carries an unrecorded merge marker "
-                        f"({marker_fp[:12]}…) that does not match the "
-                        f"current delta ({merge_fp[:12]}…) and its "
-                        "pre-merge aside is gone — the segments hold an "
-                        "unknown delta subset; rebuild with "
-                        "build_postings_stage instead of merging"
-                    )
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(old_dir, ignore_errors=True)
-        # ---- normal path ----
-        # delta token files of THIS bucket (partition col comes from the
-        # path, which we filter ourselves since we read files directly),
-        # less those a crashed run of a smaller delta already merged in
-        b_delta = [
-            (rel, size) for rel, size in delta_ids
-            if f"bucket={b}" in rel.split(os.sep)
-        ]
-        b_paths = [
-            os.path.join(tokens_root, rel)
-            for rel, size in b_delta if (rel, size) not in absorbed
-        ]
-        if not b_paths:
-            # a bucket recorded before a crash whose files the grown
-            # delta did not add to: nothing to merge, but its lineage row
-            # is about to be recorded under THIS merge_fp, so the marker
-            # must name it too — a marker left under the crashed run's
-            # fingerprint matches no lineage row, and the next merge
-            # would refuse the bucket as foreign
-            catalog.write_atomic(marker, json.dumps(
-                {"fp": merge_fp, "absorbed": sorted(b_delta)}).encode())
-            return (bucket_dir, *catalog.parquet_rows_bytes(bucket_dir))
-        # writer/meta n_buckets mismatch detector, evaluated on the rows
-        # the segments job reads (no job of its own): a delta written
-        # with a different bucket count would merge into buckets the
-        # readers' term-hash pruning never looks in — silent invisibility
-        mismatch = (
-            f"delta tokens under bucket={b} contain terms hashing to a "
-            f"different bucket at n_buckets={n_buckets} — the token "
-            "writer used a mismatched n_buckets; re-ingest with the "
-            "index's _meta.json value"
-        )
-        checked_term = F.when(
-            F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int")
-            == F.lit(b),
-            F.col("term"),
-        ).otherwise(F.raise_error(F.lit(mismatch)))
-        new_tokens = spark.read.parquet(*b_paths).select(
+        live = bucket_dir(b)
+        b_delta = sorted(x for x in delta_ids if bucket_of[x[0]] == b)
+        todo = [rel for rel, size in b_delta if (rel, size) not in absorbed[b]]
+        if not todo:
+            # the segments already hold all of it (a crash after the
+            # swap, before the lineage record)
+            return (live, *catalog.parquet_rows_bytes(live))
+        toks = spark.read.parquet(
+            *[os.path.join(tokens_root, rel) for rel in todo]
+        ).select(
             F.lit(b).cast("int").alias("bucket"),
-            "doc_id", checked_term.alias("term"), "tf", "positions", "doc_len",
+            "doc_id", "term", "tf", "positions", "doc_len",
         )
-        toks = new_tokens
-        if os.path.exists(bucket_dir):
+        if os.path.exists(live):
             old_segments = spark.read.option("basePath", postings_root).parquet(
-                bucket_dir
+                live
             )
             toks = (
                 decode_segments(old_segments, positions=True)
                 .withColumn("bucket", F.lit(b).cast("int"))
-                .unionByName(new_tokens)
+                .unionByName(toks)
             )
-        # persist: the union feeds two jobs below (salt plan, then
-        # segments), and each would otherwise re-decode every old blob
-        # through the Python decode kernel (cheaper than the encode, but
-        # not worth paying twice)
+        # persist: the union feeds two jobs (salt plan, then segments),
+        # and each would otherwise re-decode every old blob through the
+        # Python decode kernel (cheaper than the encode, but not worth
+        # paying twice)
         toks = toks.persist()
+        plan = salt_plan_path(root, f"b{b}")
+
+        def write(staged: str) -> None:
+            segments = encode_segments(spark, toks, target, avgdl, plan)
+            segments.drop("bucket").write.mode("overwrite").parquet(staged)
+            # the marker rides inside the staged bucket, so the swap
+            # makes the segments and the record of what they hold live
+            # in one rename
+            with open(os.path.join(staged, MARKER), "w") as fh:
+                json.dump({"absorbed": b_delta}, fh)
+
         try:
-            segments = encode_segments(
-                spark, toks, target, avgdl, salt_plan_path(root, f"b{b}")
-            )
-            # stage + swap so a killed merge never leaves a half bucket;
-            # the marker inside the staged data makes the swap+record pair
-            # crash-recoverable (see recovery preamble above)
-            segments.drop("bucket").write.mode("overwrite").parquet(stage_dir)
+            catalog.replace_dir(live, write)
         finally:
             toks.unpersist()
-        # the marker: which merge wrote these segments, and every delta
-        # file (path, size) of this bucket they now hold
-        with open(os.path.join(stage_dir, "_merge_fp"), "w") as fh:
-            json.dump({"fp": merge_fp, "absorbed": sorted(b_delta)}, fh)
-        if os.path.exists(bucket_dir):
-            os.replace(bucket_dir, old_dir)  # atomic aside — never a gap
-        os.replace(stage_dir, bucket_dir)  # atomic swap-in
-        return (bucket_dir, *catalog.parquet_rows_bytes(bucket_dir))
+        remove_salt_plan(plan)
+        return (live, *catalog.parquet_rows_bytes(live))
 
-    # buckets merge as concurrent Spark jobs; the pre-merge aside and the
-    # salt plan are removed only once the bucket's lineage row exists —
-    # the aside is what a resume after a crash in the swap/record gap
-    # restores from
+    merge_fp = checkpoint.fingerprint(
+        stage="merge",
+        base=hashlib.md5(
+            json.dumps(sorted(incorporated)).encode()
+        ).hexdigest(),
+        delta=hashlib.md5(json.dumps(sorted(delta)).encode()).hexdigest(),
+        v=1,
+    )
+    # buckets merge as concurrent Spark jobs
     checkpoint.run_partitioned_stage(
         root, build_id, "merge", affected, merge_fp, merge_bucket,
         kill_after=kill_after,
     )
-    for b in affected:
-        shutil.rmtree(scratch(b)[1], ignore_errors=True)
-        remove_salt_plan(salt_plan_path(root, f"b{b}"))
-
-    # 2. mark every group complete under the NEW manifest so a later
-    # build_postings_stage resumes as a no-op (unaffected buckets are
-    # identical to a rebuild by construction; affected ones were just
-    # rebuilt from merged tokens)
-    new_fp = cur_fp
-    done = checkpoint.completed_partitions(root, "postings", new_fp)
-    for g in range(n_groups):
-        if g not in done:
-            gdir = os.path.join(postings_root, f"group={g}")
-            rows, nbytes = catalog.parquet_rows_bytes(gdir)
-            checkpoint.record(
-                root, build_id, "postings", g, new_fp, gdir, rows, nbytes, 0
-            )
+    # every group is complete under the NEW manifest (unaffected buckets
+    # are identical to a rebuild by construction; affected ones were
+    # just rebuilt from merged tokens)
+    rebase_postings_lineage(root, build_id, cur_fp, n_groups)
     catalog.write_meta(root, tokens_manifest=[list(x) for x in current])
     return {
         "delta_files": len(delta),
@@ -378,22 +286,85 @@ def merge_tokens_stage(
     }
 
 
-def _read_marker(marker: str) -> tuple[str | None, set]:
-    """(merge fingerprint, absorbed (path, size) identities) of a
-    bucket's ``_merge_fp`` marker; (None, empty) when there is none. Text
-    that is not the JSON ``merge_tokens_stage`` writes reads as a bare
-    fingerprint with nothing absorbed — it is trusted only when a
-    lineage row records it, so an unknown marker stays foreign."""
+def _read_marker(marker: str) -> set | None:
+    """The delta (path, size) identities a bucket's ``_merge_fp`` marker
+    says its segments hold; empty when it has none (never merged), None
+    when it does not parse."""
     try:
         with open(marker) as fh:
-            raw = fh.read()
+            return {tuple(x) for x in json.load(fh)["absorbed"]}
     except FileNotFoundError:
-        return None, set()
-    try:
-        parsed = json.loads(raw)
-        return parsed["fp"], {tuple(x) for x in parsed["absorbed"]}
+        return set()
     except (ValueError, KeyError, TypeError):
-        return raw, set()
+        return None
+
+
+def _upsert_docstats(
+    spark: SparkSession,
+    root: str,
+    delta_paths: list[str],
+    n_buckets: int,
+    pages_path: str | None,
+) -> None:
+    """Fold the delta's doc_lens into docstats: doc_len =
+    greatest(old, max over the delta token rows), so a resume (also over
+    a delta grown since) writes the same table. With ``pages_path`` the
+    pages supply the rows and exact urls, and pages with no token rows
+    keep doc_len=0 as the ``build_docstats_stage`` recompute assigns —
+    n_docs/avgdl, so idf and BM25 norms, equal a rebuild's. Without
+    pages, new docs get a NULL url until the next docstats batch run.
+    Exact on a vacuumed root too (pre-vacuum doc_lens survive only in
+    docstats).
+
+    As the first job that reads the delta, it carries the writer/meta
+    n_buckets check: a delta written with another bucket count would
+    merge into buckets the readers' term-hash pruning never looks in.
+    It raises inside the docstats write job, before the swap, so
+    docstats and ``_meta.json`` stay as they were."""
+    mismatch = F.concat(
+        F.lit("delta tokens under bucket="), F.col("bucket").cast("string"),
+        F.lit(f" contain terms hashing to a different bucket at n_buckets="
+              f"{n_buckets} — the token writer used a mismatched "
+              "n_buckets; re-ingest with the index's _meta.json value"),
+    )
+    checked_len = F.when(
+        F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+        == F.col("bucket"),
+        F.col("doc_len"),
+    ).otherwise(F.raise_error(mismatch))
+    # explicit schemas: a schema-inference job per read would cost more
+    # than the recompute this upsert replaced
+    tokens = T.StructType(
+        [*TOKENS_SCHEMA.fields, T.StructField("bucket", T.IntegerType())]
+    )
+    new = (
+        spark.read.schema(tokens)
+        .option("basePath", catalog.path(root, catalog.TOKENS))
+        .parquet(*delta_paths)
+        .groupBy("doc_id")
+        .agg(F.max(checked_len).alias("new_len"))
+    )
+    ds_path = catalog.path(root, catalog.DOCSTATS)
+    catalog.restore_aside(ds_path)
+    old = spark.read.schema(DOCSTATS_SCHEMA).parquet(ds_path).select(
+        "doc_id", "url", F.col("doc_len").alias("old_len")
+    )
+    if pages_path is not None:
+        docs = ingest(spark, pages_path).select(
+            F.xxhash64("url").alias("doc_id"), "url"
+        )
+        rows = docs.join(old.drop("url"), "doc_id", "left").join(
+            new, "doc_id", "left"
+        )
+    else:
+        rows = old.join(new, "doc_id", "full_outer")
+    write_docstats(spark, root, rows.select(
+        "doc_id",
+        "url",
+        F.greatest(
+            F.coalesce("old_len", F.lit(0)), F.coalesce("new_len", F.lit(0))
+        ).alias("doc_len"),
+    ))
 
 
 def pending_delta_files(root: str) -> list[str]:
@@ -402,11 +373,29 @@ def pending_delta_files(root: str) -> list[str]:
     return [rel for rel, _size in _pending_with_sizes(root)]
 
 
-def _pending_with_sizes(root: str) -> list[tuple[str, int]]:
+def _pending_with_sizes(
+    root: str, current: list | None = None
+) -> list[tuple[str, int]]:
+    """(path, size) of every token file in neither ``tokens_manifest``
+    nor ``tokens_vacuumed`` — the one definition of the pending delta.
+    ``current`` is a ``catalog.tree_manifest`` listing of the tokens
+    already taken (the merge's, so its delta and the manifest it
+    records come from one listing).
+
+    Delta identity is (path, size) — mtime deliberately excluded: a
+    replayed streaming micro-batch rewrites identical content with a
+    fresh mtime, and re-merging it would duplicate postings. Same-size
+    in-place content edits are instead caught by the mtime-bearing
+    stage fingerprints (catalog.tree_manifest) at the next full build.
+    Vacuumed identities stay excluded FOREVER (append-only list): a
+    crashed ingest restarted long after a vacuum replays its
+    micro-batch into the same-named chunk dir, and a replayed
+    already-merged file must not re-enter as a fresh delta."""
     meta = catalog.read_meta(root)
     incorporated = {tuple(x[:2]) for x in meta.get("tokens_manifest", [])}
     incorporated |= {tuple(x[:2]) for x in meta.get("tokens_vacuumed", [])}
-    current = catalog.tree_manifest(catalog.path(root, catalog.TOKENS))
+    if current is None:
+        current = catalog.tree_manifest(catalog.path(root, catalog.TOKENS))
     return [
         (rel, int(size))
         for rel, size, *_ in current
@@ -501,16 +490,10 @@ def vacuum_tokens(root: str, build_id: str = "vacuum") -> dict:
     # 3. re-record the postings groups under the post-vacuum tree
     # fingerprint (fsck freshness + build_postings_stage resume), the
     # same rebase merge_tokens_stage's tail performs
-    new_fp = postings_fingerprint(root, n_buckets, target, group_size)
-    done = checkpoint.completed_partitions(root, "postings", new_fp)
-    postings_root = catalog.path(root, catalog.POSTINGS)
-    for g in range(n_groups):
-        if g not in done:
-            gdir = os.path.join(postings_root, f"group={g}")
-            rows, nbytes = catalog.parquet_rows_bytes(gdir)
-            checkpoint.record(
-                root, build_id, "postings", g, new_fp, gdir, rows, nbytes, 0
-            )
+    rebase_postings_lineage(
+        root, build_id,
+        postings_fingerprint(root, n_buckets, target, group_size), n_groups,
+    )
     return {"files_removed": len(live), "bytes_reclaimed": reclaimed,
             "vacuumed_total": len(vacuumed)}
 
@@ -567,70 +550,3 @@ def maybe_merge_tiered(
     report.update(deferred=False, delta_bytes=d_bytes,
                   threshold_bytes=threshold)
     return report
-
-
-def _docstats_incremental(
-    spark: SparkSession, pages_path: str, root: str, delta_rels: list[str]
-) -> None:
-    """EXACT docstats refresh for a vacuumed root: the full recompute
-    (build_docstats_stage) is unavailable because pre-vacuum doc_lens
-    only exist in the current docstats, not in tokens — so fold pages ⟕
-    existing docstats ⟕ delta doc_lens. Ingest-filtered pages (no token
-    rows anywhere) keep doc_len=0 exactly as the full recompute would
-    assign, which is what keeps n_docs/avgdl — and therefore idf and
-    BM25 norms — bit-identical to a from-scratch rebuild."""
-    from .indexer import ingest
-
-    tokens_root = catalog.path(root, catalog.TOKENS)
-    paths = [os.path.join(tokens_root, r) for r in delta_rels]
-    new_docs = (
-        spark.read.parquet(*paths)
-        .groupBy("doc_id")
-        .agg(F.max("doc_len").alias("new_len"))
-    )
-    docs = ingest(spark, pages_path).select(
-        F.xxhash64("url").alias("doc_id"), "url"
-    )
-    ds_path = catalog.path(root, catalog.DOCSTATS)
-    # crash recovery: a previous swap may have died between its two
-    # renames, leaving the live dir missing and the aside present
-    catalog.restore_aside(ds_path)
-    old = spark.read.parquet(ds_path).select(
-        "doc_id", F.col("doc_len").alias("old_len")
-    )
-    write_docstats(spark, root, (
-        docs.join(old, "doc_id", "left")
-        .join(new_docs, "doc_id", "left")
-        .select(
-            "doc_id",
-            "url",
-            F.greatest(
-                F.coalesce("old_len", F.lit(0)),
-                F.coalesce("new_len", F.lit(0)),
-            ).alias("doc_len"),
-        )
-    ))
-
-
-def _docstats_from_tokens(
-    spark: SparkSession, root: str, delta_rels: list[str]
-) -> None:
-    """Approximate docstats refresh when the appended pages are not
-    available: new doc_lens from the delta token rows, NULL urls (the
-    next batch ``build_docstats_stage`` run fills them)."""
-    tokens_root = catalog.path(root, catalog.TOKENS)
-    paths = [os.path.join(tokens_root, r) for r in delta_rels]
-    new_docs = (
-        spark.read.parquet(*paths)
-        .groupBy("doc_id")
-        .agg(F.max("doc_len").alias("doc_len"))
-        .withColumn("url", F.lit(None).cast("string"))
-        .select("doc_id", "url", "doc_len")
-    )
-    ds_path = catalog.path(root, catalog.DOCSTATS)
-    catalog.restore_aside(ds_path)  # as in _docstats_incremental
-    old = spark.read.parquet(ds_path)
-    write_docstats(spark, root, old.unionByName(
-        new_docs.join(old.select("doc_id"), "doc_id", "left_anti")
-    ))
-

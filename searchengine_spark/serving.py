@@ -126,7 +126,7 @@ def refresh_docstore(
     overlap across generations, which weakens row-group pruning slightly
     but never correctness; rebuild with :func:`build_docstore` to
     re-compact). Docs whose docstats url is NULL (merged without a
-    ``pages_path`` — see ``merge._docstats_from_tokens``) are skipped
+    ``pages_path`` — see ``merge._upsert_docstats``) are skipped
     until a docstats batch run fills their urls. Returns the number of
     docs appended. The ingest model is append-only by doc_id
     (= xxhash64(url)), so existing rows are never stale.

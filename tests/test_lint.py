@@ -91,3 +91,19 @@ def test_one_way_to_build_a_driver_table_and_read_an_index_table():
         if isinstance(node.value, ast.Name) and node.value.id == "spark"
     ]
     assert not reads, f"query.py reads with spark.read at lines {reads}"
+
+
+def test_renames_stay_in_catalog():
+    """Every rename in the engine goes through catalog.py (write_atomic,
+    replace_dir, restore_aside), so an object-store port — where a
+    rename is a commit — changes one module."""
+    pkg = pathlib.Path(__file__).parent.parent / "searchengine_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "catalog.py"
+        for attr in ("replace", "rename")
+        for node in _calls(ast.parse(path.read_text()), attr)
+        if isinstance(node.value, ast.Name) and node.value.id == "os"
+    ]
+    assert not offenders, offenders

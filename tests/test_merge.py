@@ -60,6 +60,19 @@ def merged_and_rebuilt(spark):
     return root, root2, report
 
 
+def segment_rows(spark, root, b):
+    """Bucket ``b``'s segment rows (every POSTINGS_SCHEMA column but the
+    bucket partition), sorted."""
+    from searchengine_spark.indexer import POSTINGS_SCHEMA
+
+    cols = [f.name for f in POSTINGS_SCHEMA.fields if f.name != "bucket"]
+    path = os.path.join(
+        catalog.path(root, catalog.POSTINGS), "group=*", f"bucket={b}"
+    )
+    return sorted(tuple(row) for row in
+                  spark.read.parquet(path).select(*cols).collect())
+
+
 def _topk(spark, root):
     qs = corpus.reference_queries()
     return {
@@ -80,22 +93,11 @@ def test_merged_segments_equal_rebuild_byte_for_byte(spark, merged_and_rebuilt):
     """Every merged bucket's segment rows (all POSTINGS_SCHEMA columns
     but the bucket partition) equal a from-scratch rebuild's — the
     byte-identity the merge docstring claims."""
-    from searchengine_spark.indexer import POSTINGS_SCHEMA
-
     root, root2, report = merged_and_rebuilt
-    cols = [f.name for f in POSTINGS_SCHEMA.fields if f.name != "bucket"]
-
-    def segment_rows(r, b):
-        path = os.path.join(
-            catalog.path(r, catalog.POSTINGS), "group=*", f"bucket={b}"
-        )
-        rows = spark.read.parquet(path).select(*cols).collect()
-        return sorted(tuple(row) for row in rows)
-
     assert report["merged_buckets"]
     for b in report["merged_buckets"]:
-        merged = segment_rows(root, b)
-        assert merged and merged == segment_rows(root2, b), f"bucket {b}"
+        merged = segment_rows(spark, root, b)
+        assert merged and merged == segment_rows(spark, root2, b), f"bucket {b}"
 
 
 def test_corpus_facts_come_from_postings_and_meta(spark, merged_and_rebuilt):
@@ -293,8 +295,9 @@ def test_merge_crash_between_swap_and_record_recovers(spark):
     """The deadliest crash window: segments swapped in, lineage row not
     yet written. A naive resume would re-union the delta into the
     already-merged bucket (duplicating every streamed posting); the
-    marker+plan recovery must instead finish the dictionary/lineage tail
-    and end rank-identical to a from-scratch rebuild."""
+    bucket's marker says its segments already hold the delta, so the
+    resume must only record it and end rank-identical to, with every
+    bucket's segment rows equal to, a from-scratch rebuild."""
     import searchengine_spark.merge as merge_mod
     from searchengine_spark.streaming.ingest import stream_tokenize
 
@@ -352,6 +355,9 @@ def test_merge_crash_between_swap_and_record_recovers(spark):
     b = {(r["query_id"], r["rank"], r["doc_id"])
          for r in score_wand(spark, root2, qs).collect()}
     assert a == b, "recovered merge diverged from a from-scratch rebuild"
+    for bucket in range(N_BUCKETS):
+        merged = segment_rows(spark, root, bucket)
+        assert merged and merged == segment_rows(spark, root2, bucket), bucket
 
 
 def test_tiered_compaction_unattended_ingest(spark):
@@ -412,11 +418,12 @@ def test_tiered_compaction_unattended_ingest(spark):
 def test_merge_crash_then_grown_delta_restores_pristine(spark):
     """Crash in the swap/record gap, then MORE stream token files arrive
     before the resume: the grown delta yields a different merge_fp, so
-    the marker-match recovery cannot fire. The resume must restore the
-    pre-merge aside (not re-union the full delta into segments that
-    already absorbed the old delta — that would duplicate postings and
-    inflate df/cf/idf) and end rank-identical to a full rebuild. If the
-    aside is gone too, it must refuse to merge."""
+    no lineage row covers the swapped bucket. The resume must merge into
+    it only the delta files its marker does not list (re-unioning the
+    full delta into segments that already absorbed the old one would
+    duplicate postings and inflate df/idf) and end rank-identical to,
+    with every bucket's segment rows equal to, a full rebuild. A marker
+    that does not parse must make the merge refuse."""
     import searchengine_spark.merge as merge_mod
     from searchengine_spark.streaming.ingest import stream_tokenize
 
@@ -475,9 +482,12 @@ def test_merge_crash_then_grown_delta_restores_pristine(spark):
     assert _topk(spark, root) == _topk(
         spark, root2
     ), "grown-delta recovery diverged from a from-scratch rebuild"
+    for bucket in range(N_BUCKETS):
+        merged = segment_rows(spark, root, bucket)
+        assert merged and merged == segment_rows(spark, root2, bucket), bucket
 
-    # aside-gone variant: unrecorded foreign marker + no .merge-old aside
-    # must refuse (re-merging would silently duplicate an unknown subset)
+    # a marker that does not parse must refuse (re-merging would
+    # silently duplicate an unknown subset)
     postings_root = catalog.path(root, catalog.POSTINGS)
     merged_b = report["merged_buckets"][0]
     g = merged_b // catalog.BUCKET_GROUP_SIZE
@@ -509,7 +519,6 @@ def test_merge_resume_after_recorded_bucket_with_grown_delta(spark):
     Every bucket's segment rows end equal to a from-scratch rebuild's
     (re-merging the whole grown delta counts the first batch's postings
     twice in the recorded bucket)."""
-    from searchengine_spark.indexer import POSTINGS_SCHEMA
     from searchengine_spark.streaming.ingest import stream_tokenize
 
     base = os.path.join(MERGEDIR, "recordedgrown")
@@ -560,26 +569,23 @@ def test_merge_resume_after_recorded_bucket_with_grown_delta(spark):
 
     root2 = os.path.join(base, "index_rebuilt")
     build_index(spark, full_dir, root2, n_chunks=2, n_buckets=N_BUCKETS)
-    cols = [f.name for f in POSTINGS_SCHEMA.fields if f.name != "bucket"]
-
-    def segment_rows(r, b):
-        path = os.path.join(
-            catalog.path(r, catalog.POSTINGS), "group=*", f"bucket={b}"
-        )
-        return sorted(tuple(row) for row in
-                      spark.read.parquet(path).select(*cols).collect())
-
     for b in range(N_BUCKETS):
-        merged = segment_rows(root, b)
-        assert merged and merged == segment_rows(root2, b), f"bucket {b}"
+        merged = segment_rows(spark, root, b)
+        assert merged and merged == segment_rows(spark, root2, b), f"bucket {b}"
 
 
 def test_merge_refuses_delta_tokens_under_wrong_bucket(spark, tiny_index, tmp_path):
     """A delta token file under bucket=<b> whose terms hash to another
     bucket (a writer with a different n_buckets) makes the merge raise —
-    the check runs on the rows the segments job reads — and bucket b's
-    live segments stay as they were."""
+    the check runs on the rows the docstats upsert reads — before
+    anything is written: bucket b's live segments, the docstats rows and
+    the _meta.json n_docs/avgdl stay as they were. Its doc ids are new
+    (shifted by one), so a docstats refresh ahead of the check would
+    change n_docs."""
     import glob
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
     root = str(tmp_path / "idx")
     shutil.copytree(tiny_index, root)
@@ -587,7 +593,10 @@ def test_merge_refuses_delta_tokens_under_wrong_bucket(spark, tiny_index, tmp_pa
     src = sorted(glob.glob(os.path.join(tokens, "chunk=*", "bucket=0", "*.parquet")))[0]
     wrong = os.path.join(tokens, "chunk=stream-wrong", "bucket=1")
     os.makedirs(wrong)
-    shutil.copy(src, os.path.join(wrong, "part-00000.parquet"))
+    table = pq.read_table(src)
+    i = table.schema.get_field_index("doc_id")
+    table = table.set_column(i, "doc_id", pc.add(table["doc_id"], 1))
+    pq.write_table(table, os.path.join(wrong, "part-00000.parquet"))
     bdir = os.path.join(catalog.path(root, catalog.POSTINGS), "group=0", "bucket=1")
 
     def listing():
@@ -597,11 +606,23 @@ def test_merge_refuses_delta_tokens_under_wrong_bucket(spark, tiny_index, tmp_pa
             for f in os.listdir(bdir)
         }
 
+    def docstats():
+        return sorted(tuple(r) for r in spark.read.parquet(
+            catalog.path(root, catalog.DOCSTATS)).collect())
+
+    def scalars():
+        meta = catalog.read_meta(root)
+        return meta["n_docs"], meta["avgdl"]
+
     before = listing()
     assert before
+    docstats_before, scalars_before = docstats(), scalars()
     with pytest.raises(Exception, match="hashing to a different bucket"):
         merge_tokens_stage(spark, root)
     assert listing() == before
+    assert scalars() == scalars_before
+    assert docstats() == docstats_before
+    assert catalog.list_entries(root) == catalog.list_entries(tiny_index)
 
 
 def test_wand_and_mode_empty_term_empties_conjunction():

@@ -30,7 +30,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import catalog, checkpoint
 from .pagerank import normalize_url
@@ -40,12 +39,8 @@ from .textprep import java_tokens, stem_tokens
 _RE_A = re.compile(r'<a\s+[^>]*?href="([^"]*)"[^>]*>(.*?)</a>',
                    re.IGNORECASE | re.DOTALL)
 
-ANCHOR_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("term", T.StringType()),
-    ]
-)
+# one row per inbound anchor occurrence: anchor_index less n_anchors
+ANCHOR_SCHEMA = catalog.schema(catalog.ANCHOR_INDEX, drop=("n_anchors",))
 
 
 def extract_anchors(page: str) -> list[tuple[str, str]]:
@@ -126,6 +121,6 @@ def build_anchor_stage(
         pages = ingest(spark, pages_path)
         out = catalog.path(root, catalog.ANCHOR_INDEX)
         anchor_terms(spark, pages).write.mode("overwrite").parquet(out)
-        return out, spark.read.parquet(out).count(), 0
+        return (out, *catalog.parquet_rows_bytes(out))
 
     checkpoint.run_partitioned_stage(root, build_id, "anchors", [0], fp, run)

@@ -15,13 +15,21 @@ Layout under an index root:
                                     term's df is the sum of its segments'
                                     n_postings
     title_index/                    (term, doc_id) from the title pipeline
-    anchor_index/                   optional (term, doc_id) anchor text
+    anchor_index/                   optional (doc_id, term, n_anchors)
     pageranks/                      (doc_id, rank)
     docstore/                       doc_id-sorted (url, title, snippet)
     _lineage/                       per-partition completion records
     _meta.json                      n_buckets, group_size, target_postings,
                                     tokens_manifest, n_docs, avgdl, ...
                                     (source of truth)
+
+Every index table has one declared on-disk schema (``SCHEMAS``, partition
+columns included) and one Spark reader (``read``), so no read pays a
+schema-inference job; kernels that write a table take their output
+schema from it (``schema(table, drop=...)``). The pages corpus is
+external input, not an index table: ``indexer.ingest`` reads it with an
+inferred schema, which is what rejects a pages table without
+``url``/``html``.
 """
 
 from __future__ import annotations
@@ -31,6 +39,8 @@ import json
 import os
 import shutil
 import uuid
+
+from pyspark.sql import types as T
 
 TOKENS = "tokens"
 DOCSTATS = "docstats"
@@ -42,6 +52,56 @@ DOCSTORE = "docstore"  # forward index for serving: doc_id-sorted (url, title, s
 LINEAGE = "_lineage"
 TABLES = (TOKENS, DOCSTATS, POSTINGS, TITLE_INDEX, ANCHOR_INDEX, PAGERANKS,
           DOCSTORE, LINEAGE)
+
+
+def _struct(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, t) for name, t in cols])
+
+
+_INT, _LONG, _STR = T.IntegerType(), T.LongType(), T.StringType()
+
+# the on-disk schema of every index table, partition columns last (as
+# Spark's partition discovery orders them); INDEX_FORMAT versions them
+SCHEMAS = {
+    TOKENS: _struct(
+        ("doc_id", _LONG), ("term", _STR), ("tf", _INT),
+        ("positions", T.ArrayType(_INT)), ("doc_len", _INT), ("max_tf", _INT),
+        # stream chunks are named stream-<hash>-<batch>
+        ("chunk", _STR), ("bucket", _INT),
+    ),
+    DOCSTATS: _struct(("doc_id", _LONG), ("url", _STR), ("doc_len", _INT)),
+    POSTINGS: _struct(
+        ("term", _STR), ("salt", _INT), ("n_salts", _INT),
+        ("n_postings", _INT), ("doc_blob", T.BinaryType()),
+        ("tf_blob", T.BinaryType()), ("dl_blob", T.BinaryType()),
+        ("pos_blob", T.BinaryType()), ("block_last", T.ArrayType(_LONG)),
+        ("block_max_norm", T.ArrayType(T.FloatType())),
+        # byte offset of each block's first varbyte inside its blob —
+        # lets WAND decode only the blocks it visits (skip decoding)
+        ("doc_boff", T.ArrayType(_LONG)), ("tf_boff", T.ArrayType(_LONG)),
+        ("dl_boff", T.ArrayType(_LONG)),
+        # the avgdl the block maxima were computed with: after an
+        # incremental merge shifts corpus avgdl, untouched segments stay
+        # valid — query-time bounds are inflated by max(1, avgdl/ref)
+        # (tf_norm grows at most linearly in avgdl), scores themselves
+        # always use the decoded tf/dl with the CURRENT avgdl
+        ("avgdl_ref", T.DoubleType()), ("max_norm", T.FloatType()),
+        ("group", _INT), ("bucket", _INT),
+    ),
+    TITLE_INDEX: _struct(("term", _STR), ("doc_id", _LONG)),
+    ANCHOR_INDEX: _struct(("doc_id", _LONG), ("term", _STR), ("n_anchors", _LONG)),
+    PAGERANKS: _struct(("doc_id", _LONG), ("rank", T.DoubleType())),
+    DOCSTORE: _struct(
+        ("doc_id", _LONG), ("url", _STR), ("title", _STR), ("snippet", _STR)
+    ),
+}
+
+
+def schema(table: str, drop: tuple[str, ...] = ()) -> T.StructType:
+    """``table``'s declared schema less the ``drop`` columns — a kernel
+    writing the table emits it without the partition columns the layout
+    adds."""
+    return T.StructType([f for f in SCHEMAS[table].fields if f.name not in drop])
 
 # Defaults sized for the sandbox; a 1000-executor build would raise
 # N_BUCKETS to O(1024) and TARGET_POSTINGS stays the per-blob memory bound.
@@ -230,9 +290,9 @@ def restore_aside(live: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Spark access on the request path — a search request's fixed cost is
-# dominated by Spark jobs that do no query work, so the two kinds of
-# table every request touches are built here without them.
+# Spark access — a search request's fixed cost is dominated by Spark jobs
+# that do no query work, so driver-built tables and index tables are read
+# here without them.
 # ---------------------------------------------------------------------------
 
 def local_df(spark, rows, schema):
@@ -242,7 +302,6 @@ def local_df(spark, rows, schema):
     a few rows (``createDataFrame(<list>)`` plans a LogicalRDD over a
     PythonRDD), and joins against it broadcast from the driver."""
     import pyarrow as pa
-    from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
@@ -256,28 +315,14 @@ def local_df(spark, rows, schema):
     return spark.createDataFrame(table, schema)
 
 
-# inferred schema per table path: inference runs a one-task footer job
-# per read, and a table's schema is fixed by the code version
-# (INDEX_FORMAT), so it is inferred once per process — a table must
-# never be rewritten with another schema under the same path. Only the
-# schema is cached — the file listing stays live, so appended docstore
-# files and merged segments are still seen.
-_SCHEMAS: dict = {}
-
-
-def read_table(spark, table_path, base_path: str | None = None):
-    """Parquet read of an index table with its schema inferred once.
-    ``table_path`` is a path or a list of paths; a list is a partition
-    subset of ``base_path`` (required then), and every subset of one
-    base path shares its schema."""
-    paths = [table_path] if isinstance(table_path, str) else list(table_path)
-    key = base_path or table_path
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    schema = _SCHEMAS.get(key)
-    if schema is not None:
-        return reader.schema(schema).parquet(*paths)
-    df = reader.parquet(*paths)
-    _SCHEMAS[key] = df.schema
-    return df
+def read(spark, root: str, table: str, parts: list[str] | None = None):
+    """Parquet read of index table ``table`` under ``root`` with its
+    declared schema: no schema-inference job, and the file listing stays
+    live, so merged segments and appended docstore files are seen.
+    ``parts`` is a subset of the table's partition dirs or files, read
+    with the table as basePath; an empty subset reads no files."""
+    if parts is not None and not parts:
+        return local_df(spark, [], SCHEMAS[table])
+    table_path = path(root, table)
+    reader = spark.read.schema(SCHEMAS[table]).option("basePath", table_path)
+    return reader.parquet(*(parts or [table_path]))

@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 
 from . import catalog, checkpoint
 from .compress import BLOCK, PositionCountError, decode_segment
+from .indexer import PostingsLayout, postings_fingerprint, read_stats
 
 FINDINGS_SCHEMA = T.StructType(
     [
@@ -214,8 +215,8 @@ def fsck(
         return findings.unionByName(
             _finding(spark, "error", "meta", "_meta.json missing n_buckets")
         )
-    n_buckets = int(meta["n_buckets"])
-    group_size = int(meta.get("group_size", catalog.BUCKET_GROUP_SIZE))
+    layout = PostingsLayout.of(root)
+    n_buckets = layout.n_buckets
 
     # stale root entries: hidden names (".x", "_x") are bookkeeping,
     # skipped as Spark's readers skip them. A replace_dir crash leftover
@@ -239,19 +240,19 @@ def fsck(
 
     # layout: bucket dirs within range and in the right group
     for d in catalog.glob_dirs(os.path.join(postings_root, "group=*", "bucket=*")):
-        g = int(os.path.basename(os.path.dirname(d)).split("=", 1)[1])
         b = int(os.path.basename(d).split("=", 1)[1])
         if not 0 <= b < n_buckets:
             findings = findings.unionByName(_finding(
                 spark, "error", "layout", f"bucket dir {b} outside [0,{n_buckets})",
                 bucket=b))
-        elif b // group_size != g:
+        elif d != layout.bucket_dir(root, b):
             findings = findings.unionByName(_finding(
                 spark, "error", "layout",
-                f"bucket {b} in group={g}, want group={b // group_size}", bucket=b))
+                f"bucket dir {d} belongs at {layout.bucket_dir(root, b)}",
+                bucket=b))
 
     # segment blob invariants (distributed decode)
-    segments = spark.read.option("basePath", postings_root).parquet(postings_root)
+    segments = catalog.read(spark, root, catalog.POSTINGS)
     seg_findings = segments.select(*_SEG_COLS).mapInPandas(
         _segment_kernel, FINDINGS_SCHEMA
     )
@@ -265,11 +266,9 @@ def fsck(
 
     # _meta.json corpus scalars vs docstats
     try:
-        from .indexer import read_stats
-
         n_docs, avgdl = read_stats(spark, root)
         agg = (
-            spark.read.parquet(catalog.path(root, catalog.DOCSTATS))
+            catalog.read(spark, root, catalog.DOCSTATS)
             .agg(F.count("*").alias("n"), F.avg("doc_len").alias("avgdl"))
             .collect()[0]
         )
@@ -288,13 +287,10 @@ def fsck(
     # serving-side stores (both optional). Docstore: doc_ids unique, no
     # orphans vs docstats; docs missing from the store are a WARNING
     # (NULL-url merges legitimately lag until refresh_docstore).
-    ds_path = catalog.path(root, catalog.DOCSTORE)
-    if os.path.exists(ds_path):
+    if catalog.exists(root, catalog.DOCSTORE):
         try:
-            store_ids = spark.read.parquet(ds_path).select("doc_id")
-            doc_ids = spark.read.parquet(
-                catalog.path(root, catalog.DOCSTATS)
-            ).select("doc_id")
+            store_ids = catalog.read(spark, root, catalog.DOCSTORE).select("doc_id")
+            doc_ids = catalog.read(spark, root, catalog.DOCSTATS).select("doc_id")
             dup = (
                 store_ids.groupBy("doc_id").agg(F.count("*").alias("n"))
                 .filter(F.col("n") > 1).count()
@@ -321,11 +317,10 @@ def fsck(
                 spark, "error", "docstore", f"docstore unreadable: {e!r}"))
     # anchor index: (doc_id, term) unique (targets MAY be out-of-corpus
     # urls — that is legal, so no orphan check)
-    ai_path = catalog.path(root, catalog.ANCHOR_INDEX)
-    if os.path.exists(ai_path):
+    if catalog.exists(root, catalog.ANCHOR_INDEX):
         try:
             dup = (
-                spark.read.parquet(ai_path)
+                catalog.read(spark, root, catalog.ANCHOR_INDEX)
                 .groupBy("doc_id", "term").agg(F.count("*").alias("n"))
                 .filter(F.col("n") > 1).count()
             )
@@ -340,13 +335,9 @@ def fsck(
 
     # lineage freshness: postings complete under the CURRENT tokens manifest
     if check_lineage:
-        from .indexer import postings_fingerprint
-
-        target = int(meta.get("target_postings", catalog.TARGET_POSTINGS))
-        fp = postings_fingerprint(root, n_buckets, target, group_size)
-        n_groups = max((n_buckets + group_size - 1) // group_size, 1)
+        fp = postings_fingerprint(root, *layout)
         done = checkpoint.completed_partitions(root, "postings", fp)
-        missing = sorted(set(range(n_groups)) - done)
+        missing = sorted(set(range(layout.n_groups)) - done)
         if missing:
             findings = findings.unionByName(_finding(
                 spark, "warning", "lineage",

@@ -34,8 +34,8 @@ Scale design (the part that must survive 1000 executors / 100 TB):
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -56,44 +56,10 @@ from .textprep import (
     tokenize_partition,
 )
 
-TOKENS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("tf", T.IntegerType()),
-        T.StructField("positions", T.ArrayType(T.IntegerType())),
-        T.StructField("doc_len", T.IntegerType()),
-        T.StructField("max_tf", T.IntegerType()),
-    ]
-)
-
-POSTINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("salt", T.IntegerType()),
-        T.StructField("n_salts", T.IntegerType()),
-        T.StructField("n_postings", T.IntegerType()),
-        T.StructField("doc_blob", T.BinaryType()),
-        T.StructField("tf_blob", T.BinaryType()),
-        T.StructField("dl_blob", T.BinaryType()),
-        T.StructField("pos_blob", T.BinaryType()),
-        T.StructField("block_last", T.ArrayType(T.LongType())),
-        T.StructField("block_max_norm", T.ArrayType(T.FloatType())),
-        # byte offset of each block's first varbyte inside its blob —
-        # lets WAND decode only the blocks it visits (skip decoding)
-        T.StructField("doc_boff", T.ArrayType(T.LongType())),
-        T.StructField("tf_boff", T.ArrayType(T.LongType())),
-        T.StructField("dl_boff", T.ArrayType(T.LongType())),
-        # the avgdl the block maxima were computed with: after an
-        # incremental merge shifts corpus avgdl, untouched segments stay
-        # valid — query-time bounds are inflated by max(1, avgdl/ref)
-        # (tf_norm grows at most linearly in avgdl), scores themselves
-        # always use the decoded tf/dl with the CURRENT avgdl
-        T.StructField("avgdl_ref", T.DoubleType()),
-        T.StructField("max_norm", T.FloatType()),
-    ]
-)
+# kernel outputs: a table's declared schema less the partition columns
+# its writer adds
+TOKENS_SCHEMA = catalog.schema(catalog.TOKENS, drop=("chunk", "bucket"))
+POSTINGS_SCHEMA = catalog.schema(catalog.POSTINGS, drop=("group",))
 
 
 def salt_expr(n_salts_col):
@@ -270,8 +236,7 @@ def _estimate_splits(spark: SparkSession, files: list[str] | None) -> int:
 
 
 def read_tokens(spark: SparkSession, root: str, bucket: int | None = None) -> DataFrame:
-    tokens_root = catalog.path(root, catalog.TOKENS)
-    df = spark.read.option("basePath", tokens_root).parquet(tokens_root)
+    df = catalog.read(spark, root, catalog.TOKENS)
     if bucket is not None:
         df = df.filter(F.col("bucket") == F.lit(bucket))  # partition-pruned
     return df
@@ -280,9 +245,6 @@ def read_tokens(spark: SparkSession, root: str, bucket: int | None = None) -> Da
 # ---------------------------------------------------------------------------
 # Stage 2: docstats + corpus scalars
 # ---------------------------------------------------------------------------
-
-DOCSTATS_SCHEMA = "doc_id BIGINT, url STRING, doc_len INT"
-
 
 def write_docstats(spark: SparkSession, root: str, docstats: DataFrame) -> None:
     """The one docstats writer, shared by the build stage and the merge:
@@ -295,7 +257,7 @@ def write_docstats(spark: SparkSession, root: str, docstats: DataFrame) -> None:
     catalog.replace_dir(
         out, lambda t: docstats.write.mode("overwrite").parquet(t)
     )
-    row = spark.read.parquet(out).agg(
+    row = catalog.read(spark, root, catalog.DOCSTATS).agg(
         F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
     ).collect()[0]
     catalog.write_meta(root, n_docs=int(row["n_docs"]), avgdl=float(row["avgdl"]))
@@ -422,24 +384,16 @@ def _segments_kernel(avgdl: float):
 
 
 def encode_segments(
-    spark: SparkSession,
-    toks: DataFrame,
-    target_postings: int,
-    avgdl: float,
-    plan_path: str,
+    spark: SparkSession, toks: DataFrame, target_postings: int, avgdl: float
 ) -> DataFrame:
     """Token rows (bucket, term, doc_id, tf, positions, doc_len) -> one
     ``POSTINGS_SCHEMA`` row per (bucket, term, salt) — the one segment
     writer of the batch build and the merge.
 
-    The salt plan (bucket, term, n_salts) is written to ``plan_path``
-    FIRST and re-read: the segments job then broadcasts the small
-    re-read instead of re-running the token scan + (bucket, term)
-    aggregation, and nothing downstream re-runs a lineage that may point
-    at files the caller is about to swap (the merge's pre-merge
-    segments). The plan is scratch: the caller deletes it once the
-    returned segments are written (a term's df is the sum of its
-    segments' n_postings, so nothing else needs it).
+    The salt plan — n_salts per (bucket, term), an aggregate of ``toks``
+    — is broadcast into the salting join; it is never written. ``toks``
+    is scanned twice (plan, segments): the merge persists its union so
+    the old blobs are decoded once.
 
     The salted rows are hash-partitioned on (bucket, term, salt) — the
     shuffle that spreads a head term's salts over tasks — and sorted
@@ -448,10 +402,9 @@ def encode_segments(
     ``mapInArrow`` kernel encodes with one ``compress.encode_segment``
     call. Doc ids are unique within a term, so the order is total and
     the segments are the same bytes at any partitioning or batch size."""
-    toks.groupBy("bucket", "term").agg(
+    salt_plan = toks.groupBy("bucket", "term").agg(
         F.ceil(F.count("*") / F.lit(target_postings)).cast("int").alias("n_salts")
-    ).write.mode("overwrite").parquet(plan_path)
-    salt_plan = spark.read.parquet(plan_path)
+    )
     keys = ["bucket", "term", "salt"]
     salted = toks.join(
         F.broadcast(salt_plan.select("term", "n_salts")), "term"
@@ -464,19 +417,40 @@ def encode_segments(
     )
 
 
-def salt_plan_path(root: str, name: str) -> str:
-    """Scratch path of one salt plan: a visible leaf under a hidden dir,
-    so postings readers skip it and Spark reads it without warning that
-    all of its paths are hidden."""
-    return os.path.join(catalog.path(root, catalog.POSTINGS), "_salt_plans", name)
+class PostingsLayout(NamedTuple):
+    """How an index lays its postings out: term-hash buckets, at most
+    ``target_postings`` postings per segment, ``group_size`` buckets per
+    group (the build's resume unit) — the order ``postings_fingerprint``
+    takes them in."""
 
+    n_buckets: int
+    target_postings: int = catalog.TARGET_POSTINGS
+    group_size: int = catalog.BUCKET_GROUP_SIZE
 
-def remove_salt_plan(plan_path: str) -> None:
-    shutil.rmtree(plan_path, ignore_errors=True)
-    try:
-        os.rmdir(os.path.dirname(plan_path))  # the last plan takes the dir
-    except OSError:
-        pass
+    @classmethod
+    def of(cls, root: str) -> PostingsLayout:
+        """The layout ``_meta.json`` records (the source of truth)."""
+        meta = catalog.read_meta(root)
+        return cls(
+            int(meta["n_buckets"]),
+            int(meta.get("target_postings", catalog.TARGET_POSTINGS)),
+            int(meta.get("group_size", catalog.BUCKET_GROUP_SIZE)),
+        )
+
+    @property
+    def n_groups(self) -> int:
+        return max(-(-self.n_buckets // self.group_size), 1)
+
+    def buckets(self, g: int) -> list[int]:
+        return list(range(g * self.group_size,
+                          min((g + 1) * self.group_size, self.n_buckets)))
+
+    def group_dir(self, root: str, g: int) -> str:
+        return os.path.join(catalog.path(root, catalog.POSTINGS), f"group={g}")
+
+    def bucket_dir(self, root: str, b: int) -> str:
+        return os.path.join(self.group_dir(root, b // self.group_size),
+                            f"bucket={b}")
 
 
 def postings_fingerprint(
@@ -502,7 +476,7 @@ def postings_fingerprint(
 
 
 def rebase_postings_lineage(
-    root: str, build_id: str, fp: str, n_groups: int
+    root: str, build_id: str, fp: str, layout: PostingsLayout
 ) -> None:
     """Record every postings group complete under ``fp`` unless its
     latest lineage row already is — for segments known equal to a
@@ -513,10 +487,9 @@ def rebase_postings_lineage(
     fsck's lineage check green and makes a later build resume as a
     no-op."""
     done = checkpoint.completed_partitions(root, "postings", fp)
-    postings_root = catalog.path(root, catalog.POSTINGS)
-    for g in range(n_groups):
+    for g in range(layout.n_groups):
         if g not in done:
-            gdir = os.path.join(postings_root, f"group={g}")
+            gdir = layout.group_dir(root, g)
             rows, nbytes = catalog.parquet_rows_bytes(gdir)
             checkpoint.record(
                 root, build_id, "postings", g, fp, gdir, rows, nbytes, 0
@@ -537,36 +510,30 @@ def build_postings_stage(
     salt, encode, write partitionBy(bucket)) instead of one per bucket
     — per-job fixed cost amortizes over the group while the on-disk
     layout stays bucket-partitioned for query-time pruning."""
-    n_groups = max((n_buckets + group_size - 1) // group_size, 1)
+    layout = PostingsLayout(n_buckets, target_postings, group_size)
     # content= covers which token files exist: re-running after tokens
     # changed (e.g. a streaming append) recomputes every group instead
     # of serving a silently stale index. v tracks catalog.INDEX_FORMAT:
     # range salting + byte offsets + n_salts/avgdl_ref columns
     # invalidate all earlier segments.
     tokens_manifest = catalog.tree_manifest(catalog.path(root, catalog.TOKENS))
-    fp = postings_fingerprint(
-        root, n_buckets, target_postings, group_size, manifest=tokens_manifest
-    )
-    catalog.write_meta(
-        root, n_buckets=n_buckets, target_postings=target_postings,
-        group_size=group_size,
-    )
+    fp = postings_fingerprint(root, *layout, manifest=tokens_manifest)
+    catalog.write_meta(root, **layout._asdict())
     _, avgdl = read_stats(spark, root)
-    postings_root = catalog.path(root, catalog.POSTINGS)
 
     def run_group(g: int) -> tuple[str, int, int]:
-        bs = list(range(g * group_size, min((g + 1) * group_size, n_buckets)))
-        toks = read_tokens(spark, root).filter(F.col("bucket").isin(bs))
-        plan = salt_plan_path(root, f"g{g}")
-        segments = encode_segments(spark, toks, target_postings, avgdl, plan)
-        out = os.path.join(postings_root, f"group={g}")
-        segments.write.mode("overwrite").partitionBy("bucket").parquet(out)
-        remove_salt_plan(plan)
+        toks = read_tokens(spark, root).filter(
+            F.col("bucket").isin(layout.buckets(g))
+        )
+        out = layout.group_dir(root, g)
+        encode_segments(spark, toks, target_postings, avgdl).write.mode(
+            "overwrite"
+        ).partitionBy("bucket").parquet(out)
         n, nbytes = catalog.parquet_rows_bytes(out)
         return out, n, nbytes
 
     checkpoint.run_partitioned_stage(
-        root, build_id, "postings", list(range(n_groups)), fp, run_group,
+        root, build_id, "postings", list(range(layout.n_groups)), fp, run_group,
         kill_after=kill_after, max_parallel=4,
     )
     # record which token files these segments incorporate — merge.py
@@ -578,14 +545,6 @@ def build_postings_stage(
 # Stage 4: title index (reference pt-title analog: Indexer pipeline —
 # raw tokens of the title-only extraction, stemmed, NOT lowercased)
 # ---------------------------------------------------------------------------
-
-TITLE_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-    ]
-)
-
 
 def build_title_index_stage(
     spark: SparkSession, pages_path: str, root: str, build_id: str
@@ -617,7 +576,7 @@ def build_title_index_stage(
                 )
 
         out = catalog.path(root, catalog.TITLE_INDEX)
-        docs.mapInPandas(kernel, TITLE_SCHEMA).write.mode("overwrite").parquet(out)
+        docs.mapInPandas(kernel, catalog.schema(catalog.TITLE_INDEX)).write.mode("overwrite").parquet(out)
         n, nbytes = catalog.parquet_rows_bytes(out)
         return out, n, nbytes
 

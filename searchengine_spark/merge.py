@@ -25,7 +25,7 @@ posting segments WITHOUT rebuilding untouched buckets:
    token-shaped rows (term, doc_id, tf, positions, doc_len) with
    ``query.decode_segments``, union the delta rows the bucket has not
    absorbed yet, and hand them to ``indexer.encode_segments`` — the
-   salt plan and segment writer the batch build uses — so merged
+   salting and segment writer the batch build uses — so merged
    buckets are byte-identical to a rebuild;
 6. lineage: every group is recorded complete under the NEW tokens
    manifest fingerprint, so a later ``build_postings_stage`` resumes as
@@ -55,20 +55,16 @@ import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import catalog, checkpoint
 from .indexer import (
-    DOCSTATS_SCHEMA,
-    TOKENS_SCHEMA,
+    PostingsLayout,
     build_title_index_stage,
     encode_segments,
     ingest,
     postings_fingerprint,
     read_stats,
     rebase_postings_lineage,
-    remove_salt_plan,
-    salt_plan_path,
     write_docstats,
 )
 from .query import decode_segments
@@ -95,11 +91,9 @@ def merge_tokens_stage(
     df/n_salts/idf. ``kill_after`` aborts after that many buckets
     (resume tests)."""
     meta = catalog.read_meta(root)
-    n_buckets = int(meta["n_buckets"])
-    target = int(meta.get("target_postings", catalog.TARGET_POSTINGS))
-    group_size = int(meta.get("group_size", catalog.BUCKET_GROUP_SIZE))
+    layout = PostingsLayout.of(root)
+    n_buckets = layout.n_buckets
     tokens_root = catalog.path(root, catalog.TOKENS)
-    postings_root = catalog.path(root, catalog.POSTINGS)
 
     incorporated = {tuple(x[:2]) for x in meta.get("tokens_manifest", [])}
     vacuumed = {tuple(x[:2]) for x in meta.get("tokens_vacuumed", [])}
@@ -121,10 +115,8 @@ def merge_tokens_stage(
     # final write_meta leaves meta.tokens_manifest behind the lineage.
     # Merging then would re-union postings the segments already contain
     # — duplicating df/idf with nothing downstream to notice.
-    n_groups = max((n_buckets + group_size - 1) // group_size, 1)
-    cur_fp = postings_fingerprint(
-        root, n_buckets, target, group_size, manifest=current
-    )
+    n_groups = layout.n_groups
+    cur_fp = postings_fingerprint(root, *layout, manifest=current)
     done_cur = checkpoint.completed_partitions(root, "postings", cur_fp)
     if len(done_cur) >= n_groups:
         catalog.write_meta(root, tokens_manifest=[list(x) for x in current])
@@ -164,18 +156,14 @@ def merge_tokens_stage(
             "value"
         )
 
-    def bucket_dir(b: int) -> str:
-        return os.path.join(
-            postings_root, f"group={b // group_size}", f"bucket={b}"
-        )
-
     known = present | incorporated | vacuumed
     absorbed: dict[int, set | None] = {}
     for b in affected:
         # a crash between replace_dir's two renames leaves the bucket
         # aside; put it back before its marker is read
-        catalog.restore_aside(bucket_dir(b))
-        absorbed[b] = _read_marker(os.path.join(bucket_dir(b), MARKER))
+        live = layout.bucket_dir(root, b)
+        catalog.restore_aside(live)
+        absorbed[b] = _read_marker(os.path.join(live, MARKER))
         if absorbed[b] is None or not absorbed[b] <= known:
             raise RuntimeError(
                 f"bucket={b}'s {MARKER} marker is unreadable or names token "
@@ -216,37 +204,34 @@ def merge_tokens_stage(
     _, avgdl = read_stats(spark, root)
 
     def merge_bucket(b: int) -> tuple[str, int, int]:
-        live = bucket_dir(b)
+        live = layout.bucket_dir(root, b)
         b_delta = sorted(x for x in delta_ids if bucket_of[x[0]] == b)
         todo = [rel for rel, size in b_delta if (rel, size) not in absorbed[b]]
         if not todo:
             # the segments already hold all of it (a crash after the
             # swap, before the lineage record)
             return (live, *catalog.parquet_rows_bytes(live))
-        toks = spark.read.parquet(
-            *[os.path.join(tokens_root, rel) for rel in todo]
-        ).select(
-            F.lit(b).cast("int").alias("bucket"),
-            "doc_id", "term", "tf", "positions", "doc_len",
-        )
+        toks = catalog.read(
+            spark, root, catalog.TOKENS,
+            [os.path.join(tokens_root, rel) for rel in todo],
+        ).select("bucket", "doc_id", "term", "tf", "positions", "doc_len")
         if os.path.exists(live):
-            old_segments = spark.read.option("basePath", postings_root).parquet(
-                live
-            )
+            old_segments = catalog.read(spark, root, catalog.POSTINGS, [live])
             toks = (
                 decode_segments(old_segments, positions=True)
                 .withColumn("bucket", F.lit(b).cast("int"))
                 .unionByName(toks)
             )
-        # persist: the union feeds two jobs (salt plan, then segments),
-        # and each would otherwise re-decode every old blob through the
+        # persist: the union feeds the salt plan and the segments, and
+        # each would otherwise re-decode every old blob through the
         # Python decode kernel (cheaper than the encode, but not worth
         # paying twice)
         toks = toks.persist()
-        plan = salt_plan_path(root, f"b{b}")
 
         def write(staged: str) -> None:
-            segments = encode_segments(spark, toks, target, avgdl, plan)
+            segments = encode_segments(
+                spark, toks, layout.target_postings, avgdl
+            )
             segments.drop("bucket").write.mode("overwrite").parquet(staged)
             # the marker rides inside the staged bucket, so the swap
             # makes the segments and the record of what they hold live
@@ -258,7 +243,6 @@ def merge_tokens_stage(
             catalog.replace_dir(live, write)
         finally:
             toks.unpersist()
-        remove_salt_plan(plan)
         return (live, *catalog.parquet_rows_bytes(live))
 
     merge_fp = checkpoint.fingerprint(
@@ -277,7 +261,7 @@ def merge_tokens_stage(
     # every group is complete under the NEW manifest (unaffected buckets
     # are identical to a rebuild by construction; affected ones were
     # just rebuilt from merged tokens)
-    rebase_postings_lineage(root, build_id, cur_fp, n_groups)
+    rebase_postings_lineage(root, build_id, cur_fp, layout)
     catalog.write_meta(root, tokens_manifest=[list(x) for x in current])
     return {
         "delta_files": len(delta),
@@ -332,21 +316,14 @@ def _upsert_docstats(
         == F.col("bucket"),
         F.col("doc_len"),
     ).otherwise(F.raise_error(mismatch))
-    # explicit schemas: a schema-inference job per read would cost more
-    # than the recompute this upsert replaced
-    tokens = T.StructType(
-        [*TOKENS_SCHEMA.fields, T.StructField("bucket", T.IntegerType())]
-    )
     new = (
-        spark.read.schema(tokens)
-        .option("basePath", catalog.path(root, catalog.TOKENS))
-        .parquet(*delta_paths)
+        catalog.read(spark, root, catalog.TOKENS, delta_paths)
         .groupBy("doc_id")
         .agg(F.max(checked_len).alias("new_len"))
     )
     ds_path = catalog.path(root, catalog.DOCSTATS)
     catalog.restore_aside(ds_path)
-    old = spark.read.schema(DOCSTATS_SCHEMA).parquet(ds_path).select(
+    old = catalog.read(spark, root, catalog.DOCSTATS).select(
         "doc_id", "url", F.col("doc_len").alias("old_len")
     )
     if pages_path is not None:
@@ -430,10 +407,7 @@ def vacuum_tokens(root: str, build_id: str = "vacuum") -> dict:
     unfinished step. Refuses while deltas are pending (merge first) or
     while the postings lineage is incomplete (mid-build index)."""
     meta = catalog.read_meta(root)
-    n_buckets = int(meta["n_buckets"])
-    target = int(meta.get("target_postings", catalog.TARGET_POSTINGS))
-    group_size = int(meta.get("group_size", catalog.BUCKET_GROUP_SIZE))
-    n_groups = max((n_buckets + group_size - 1) // group_size, 1)
+    layout = PostingsLayout.of(root)
     tokens_root = catalog.path(root, catalog.TOKENS)
 
     pend = _pending_with_sizes(root)
@@ -444,11 +418,11 @@ def vacuum_tokens(root: str, build_id: str = "vacuum") -> dict:
         )
     manifest = [tuple(x[:2]) for x in meta.get("tokens_manifest", [])]
     if manifest:  # first run (not a resume): require a quiescent index
-        cur_fp = postings_fingerprint(root, n_buckets, target, group_size)
+        cur_fp = postings_fingerprint(root, *layout)
         done = checkpoint.completed_partitions(root, "postings", cur_fp)
-        if len(done) < n_groups:
+        if len(done) < layout.n_groups:
             raise RuntimeError(
-                f"postings lineage incomplete ({len(done)}/{n_groups} "
+                f"postings lineage incomplete ({len(done)}/{layout.n_groups} "
                 "groups) — finish the build/merge before vacuuming"
             )
     vacuumed = {tuple(x[:2]) for x in meta.get("tokens_vacuumed", [])}
@@ -491,8 +465,7 @@ def vacuum_tokens(root: str, build_id: str = "vacuum") -> dict:
     # fingerprint (fsck freshness + build_postings_stage resume), the
     # same rebase merge_tokens_stage's tail performs
     rebase_postings_lineage(
-        root, build_id,
-        postings_fingerprint(root, n_buckets, target, group_size), n_groups,
+        root, build_id, postings_fingerprint(root, *layout), layout
     )
     return {"files_removed": len(live), "bytes_reclaimed": reclaimed,
             "vacuumed_total": len(vacuumed)}

@@ -346,7 +346,13 @@ def build_pagerank_stage(
 ) -> None:
     from .indexer import ingest
 
-    fp = checkpoint.fingerprint(stage="pagerank", pages=pages_path, threshold=threshold, v=STAGE_VERSION)
+    # content= as in the anchors and title stages: new pages landing at
+    # the same path must rerun the stage, not skip it as complete
+    fp = checkpoint.fingerprint(
+        stage="pagerank", pages=pages_path,
+        content=catalog.content_fingerprint(pages_path), threshold=threshold,
+        v=STAGE_VERSION,
+    )
 
     def run(_pid: int) -> tuple[str, int, int]:
         pages = ingest(spark, pages_path)
@@ -355,6 +361,6 @@ def build_pagerank_stage(
         ranks = pagerank(spark, edges, docs, threshold=threshold)
         out = catalog.path(root, catalog.PAGERANKS)
         ranks.write.mode("overwrite").parquet(out)
-        return out, spark.read.parquet(out).count(), 0
+        return (out, *catalog.parquet_rows_bytes(out))
 
     checkpoint.run_partitioned_stage(root, build_id, "pagerank", [0], fp, run)

@@ -81,10 +81,9 @@ def parse_exclusions(q: dict) -> list[str]:
 def load_segments(spark: SparkSession, root: str, terms: list[str]) -> DataFrame:
     """Bucket-pruned read of posting segments for the given terms.
     Layout: postings/group=<g>/bucket=<b>/ (group = build resume unit,
-    bucket = term-hash pruning unit). Every bucket subset shares the
-    postings root's schema, inferred once by ``catalog.read_table``;
-    the bucket directories are listed per request, so merged segments
-    are seen."""
+    bucket = term-hash pruning unit). The bucket directories are listed
+    per request, so merged segments are seen, and read with the declared
+    postings schema (``catalog.read``), so no read infers one."""
     postings_root = catalog.path(root, catalog.POSTINGS)
     buckets = sorted(set(term_buckets(spark, terms, _n_buckets(root)).values()))
     paths = [
@@ -94,11 +93,7 @@ def load_segments(spark: SparkSession, root: str, terms: list[str]) -> DataFrame
             os.path.join(postings_root, "group=*", f"bucket={b}")
         )
     ]
-    if not paths:
-        return catalog.read_table(
-            spark, postings_root, base_path=postings_root
-        ).filter(F.lit(False))
-    return catalog.read_table(spark, paths, base_path=postings_root).filter(
+    return catalog.read(spark, root, catalog.POSTINGS, paths).filter(
         F.col("term").isin(terms)
     )
 
@@ -317,7 +312,7 @@ def score_exhaustive(
     if use_anchor:
         scored = scored.withColumn("anchor", F.lit(0.0))
     if os.path.exists(title_path):
-        title = catalog.read_table(spark, title_path)
+        title = catalog.read(spark, root, catalog.TITLE_INDEX)
         th = title.join(
             F.broadcast(qt.select("query_id", "term").distinct()), "term"
         ).select(
@@ -337,7 +332,7 @@ def score_exhaustive(
     if use_anchor:
         # anchor hits ride the same aggregation with score 0.0 exactly
         # like title rows — the bm25 fold stays bit-identical
-        anchor = catalog.read_table(spark, anchor_path)
+        anchor = catalog.read(spark, root, catalog.ANCHOR_INDEX)
         ah = anchor.join(
             F.broadcast(qt.select("query_id", "term").distinct()), "term"
         ).select(
@@ -404,7 +399,7 @@ def score_exhaustive(
     # blend: pagerank
     pr_path = catalog.path(root, catalog.PAGERANKS)
     if os.path.exists(pr_path):
-        pr = catalog.read_table(spark, pr_path).select(
+        pr = catalog.read(spark, root, catalog.PAGERANKS).select(
             "doc_id", F.col("rank").alias("pagerank")
         )
         candidates = candidates.join(pr, "doc_id", "left").fillna({"pagerank": 0.0})

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import catalog, checkpoint
+from .indexer import ingest
 from .query import phrase_match, score_exhaustive
 from .textprep import _RE_P, _RE_TITLE, java_tokens
 
@@ -97,20 +98,8 @@ def build_docstore(
     )
 
     def run(_pid: int) -> tuple[str, int, int]:
-        docstats = spark.read.parquet(docstats_path).select("doc_id", "url")
-        pages = spark.read.parquet(pages_path).select("url", "html")
-        df = pages.join(docstats, "url").select(
-            "doc_id",
-            "url",
-            title_udf("html").alias("title"),
-            snippet_udf("html").alias("snippet"),
-        )
-        (
-            df.repartitionByRange(n_files, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
+        docs = catalog.read(spark, root, catalog.DOCSTATS).select("doc_id", "url")
+        _write_docstore_rows(spark, pages_path, docs, n_files, out, "overwrite")
         return (out, *catalog.parquet_rows_bytes(out))
 
     checkpoint.run_partitioned_stage(root, "docstore", "docstore", [0], fp, run)
@@ -136,29 +125,17 @@ def refresh_docstore(
         return -1  # full build, not an append
     store_path = catalog.path(root, catalog.DOCSTORE)
     docstats = (
-        spark.read.parquet(catalog.path(root, catalog.DOCSTATS))
+        catalog.read(spark, root, catalog.DOCSTATS)
         .select("doc_id", "url")
         .filter(F.col("url").isNotNull())
     )
-    have = spark.read.parquet(store_path).select("doc_id")
+    have = catalog.read(spark, root, catalog.DOCSTORE).select("doc_id")
     missing = docstats.join(have, "doc_id", "left_anti")
     n = missing.count()
     if n == 0:
         return 0
-    pages = spark.read.parquet(pages_path).select("url", "html")
-    df = pages.join(missing, "url").select(
-        "doc_id",
-        "url",
-        title_udf("html").alias("title"),
-        snippet_udf("html").alias("snippet"),
-    )
     n_files = max(1, -(-n // rows_per_file))
-    (
-        df.repartitionByRange(n_files, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("append")
-        .parquet(store_path)
-    )
+    _write_docstore_rows(spark, pages_path, missing, n_files, store_path, "append")
     # the store no longer holds what its last build wrote: record that,
     # so a build_docstore over the build's inputs rebuilds it
     checkpoint.record(
@@ -167,6 +144,28 @@ def refresh_docstore(
         *catalog.parquet_rows_bytes(store_path), 0,
     )
     return n
+
+
+def _write_docstore_rows(
+    spark: SparkSession, pages_path: str, docs: DataFrame, n_files: int,
+    out: str, mode: str,
+) -> None:
+    """Write the docstore rows of ``docs`` (doc_id, url): title and
+    snippet extracted from the pages' html, ``n_files`` doc-id ranges,
+    each file sorted by doc_id."""
+    pages = ingest(spark, pages_path).select("url", "html")
+    (
+        pages.join(docs, "url").select(
+            "doc_id",
+            "url",
+            title_udf("html").alias("title"),
+            snippet_udf("html").alias("snippet"),
+        )
+        .repartitionByRange(n_files, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .write.mode(mode)
+        .parquet(out)
+    )
 
 
 def split_exclusions(query: str) -> tuple[str, str]:
@@ -303,7 +302,7 @@ def _docstore_fetch(
     """(doc_id, url, title, snippet) of ``doc_ids`` from the
     doc-id-sorted docstore, read through a pushed In(doc_id) filter —
     O(k) row groups decoded, no corpus scan."""
-    store = catalog.read_table(spark, catalog.path(root, catalog.DOCSTORE))
+    store = catalog.read(spark, root, catalog.DOCSTORE)
     keep = F.col("doc_id").isin(sorted(doc_ids)) if doc_ids else F.lit(False)
     return store.filter(keep).select("doc_id", "url", "title", "snippet")
 
@@ -313,10 +312,8 @@ def _attach_docs_corpus(
 ) -> DataFrame:
     """Slow-path doc attach: join the ranked rows back through docstats
     and the raw corpus, extracting title/snippet per request."""
-    docstats = catalog.read_table(
-        spark, catalog.path(root, catalog.DOCSTATS)
-    ).select("doc_id", "url")
-    pages = spark.read.parquet(pages_path).select("url", "html")
+    docstats = catalog.read(spark, root, catalog.DOCSTATS).select("doc_id", "url")
+    pages = ingest(spark, pages_path).select("url", "html")
     # broadcast the k ranked rows into both lookups — the corpus and
     # docstats sides stream, nothing big ever shuffles
     ranked = docstats.join(F.broadcast(topk), "doc_id")

@@ -263,9 +263,7 @@ def test_segment_kernel_matches_per_run_oracle(spark, tmp_path):
             spark.conf.set(k, v)
         for n_parts in (1, 3):
             spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-            segs = encode_segments(
-                spark, toks, target, avgdl, str(tmp_path / f"plan{n_parts}")
-            )
+            segs = encode_segments(spark, toks, target, avgdl)
             got = [
                 {k: bytes(v) if isinstance(v, bytearray) else v
                  for k, v in r.asDict().items()}

@@ -818,3 +818,28 @@ def test_stream_to_serving_end_to_end(spark, merged_and_rebuilt):
         server.batcher.close()
         server.shutdown()
         server.server_close()
+
+
+def test_declared_schemas_match_the_tables_on_disk(spark, merged_and_rebuilt):
+    """Every index table of a built, stream-merged and docstore-refreshed
+    root has exactly the schema catalog.SCHEMAS declares: the schema
+    Spark infers from its files (partition columns included) equals it,
+    so reading with the declared one changes no column."""
+    from searchengine_spark.anchors import build_anchor_stage
+    from searchengine_spark.pagerank import build_pagerank_stage
+    from searchengine_spark.serving import build_docstore, refresh_docstore
+
+    root, _, _ = merged_and_rebuilt
+    full_dir = os.path.join(MERGEDIR, "pages_full")
+    shutil.rmtree(catalog.path(root, catalog.DOCSTORE), ignore_errors=True)
+    build_docstore(spark, root, os.path.join(MERGEDIR, "pages_initial"), n_files=2)
+    assert refresh_docstore(spark, root, full_dir) > 0
+    build_pagerank_stage(spark, full_dir, root, "schema")
+    build_anchor_stage(spark, full_dir, root, "schema")
+    assert any(
+        e.startswith("chunk=stream-")
+        for e in os.listdir(catalog.path(root, catalog.TOKENS))
+    )
+    for table, declared in catalog.SCHEMAS.items():
+        inferred = spark.read.parquet(catalog.path(root, table)).schema
+        assert inferred == declared, table

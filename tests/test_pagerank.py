@@ -112,3 +112,62 @@ def test_pagerank_structure(spark, tiny_pages_path):
     tri = [by_url[corpus.url_of(i)] for i in (195, 196, 197)]
     for v in tri:
         assert abs(v - 1.0) < 0.01  # symmetric triangle fixpoint = 1.0
+
+
+def _split_pages(tmp_path, n_pages):
+    """(full, partial): a pages dir of ``n_pages`` and a copy without
+    its last part file."""
+    import os
+    import shutil
+
+    full, partial = str(tmp_path / "full"), str(tmp_path / "partial")
+    corpus.write_pages_parquet(full, n_pages, batch_rows=8)
+    files = sorted(f for f in os.listdir(full) if f.endswith(".parquet"))
+    os.makedirs(partial)
+    for f in files[:-1]:
+        shutil.copy(os.path.join(full, f), partial)
+    return full, partial, os.path.join(full, files[-1])
+
+
+def test_pagerank_stage_reruns_when_pages_land(spark, tmp_path):
+    """The stage fingerprint covers the pages' content: a page file added
+    under the same path reruns the stage, so the new docs get a rank
+    instead of the stage skipping as complete."""
+    import shutil
+
+    from searchengine_spark import catalog
+    from searchengine_spark.pagerank import build_pagerank_stage
+
+    full, pages, last = _split_pages(tmp_path, 40)
+    root = str(tmp_path / "idx")
+
+    def ranked():
+        out = catalog.path(root, catalog.PAGERANKS)
+        return {r["doc_id"] for r in spark.read.parquet(out).collect()}
+
+    build_pagerank_stage(spark, pages, root, "b1")
+    before = ranked()
+    shutil.copy(last, pages)
+    build_pagerank_stage(spark, pages, root, "b2")
+    want = {spark_xxhash64_str(r["url"]) for r in pq.read_table(full).to_pylist()}
+    assert before < want
+    assert ranked() == want
+
+
+def test_rank_and_anchor_lineage_record_rows_and_bytes(spark, tmp_path):
+    """The pagerank and anchors lineage rows carry their output's row
+    count and bytes, read from the parquet footers."""
+    from searchengine_spark import catalog, checkpoint
+    from searchengine_spark.anchors import build_anchor_stage
+    from searchengine_spark.pagerank import build_pagerank_stage
+
+    _full, pages, _last = _split_pages(tmp_path, 40)
+    root = str(tmp_path / "idx")
+    build_pagerank_stage(spark, pages, root, "b1")
+    build_anchor_stage(spark, pages, root, "b1")
+    rows = {r["stage"]: r for r in checkpoint.read_metrics(root)}
+    for stage, table in (("pagerank", catalog.PAGERANKS),
+                         ("anchors", catalog.ANCHOR_INDEX)):
+        out = catalog.path(root, table)
+        assert rows[stage]["bytes"] > 0, stage
+        assert rows[stage]["rows"] == spark.read.parquet(out).count() > 0, stage

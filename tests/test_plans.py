@@ -463,24 +463,35 @@ def test_encode_segments_is_one_arrow_kernel_over_one_shuffle(
     """The segment encode is one MapInArrow over rows sorted within one
     hash Exchange on (bucket, term, salt) — the salting shuffle — and no
     per-group pandas kernel (FlatMapGroupsInPandas), which costs a
-    Python call and two pandas frames per (term, salt)."""
+    Python call and two pandas frames per (term, salt). The only other
+    hash Exchange is the salt plan's (bucket, term) aggregate, under the
+    BroadcastExchange that feeds it to the salting join."""
     from searchengine_spark.indexer import encode_segments, read_tokens
 
-    segs = encode_segments(
-        spark, read_tokens(spark, tiny_index), 4, 10.0, str(tmp_path / "plan")
-    )
-    tree = [
-        re.sub(r"#\d+L?", "", line.lstrip(" :+-|"))
-        for line in plan(segs, mode="simple").splitlines()
-    ]
+    segs = encode_segments(spark, read_tokens(spark, tiny_index), 4, 10.0)
+    lines = plan(segs, mode="simple").splitlines()
+    depth = [len(line) - len(line.lstrip(" :+-|")) for line in lines]
+    tree = [re.sub(r"#\d+L?", "", line.lstrip(" :+-|")) for line in lines]
     assert "FlatMapGroupsInPandas" not in "\n".join(tree)
     kernels = [i for i, line in enumerate(tree) if line.startswith("MapInArrow")]
     exchanges = [
         i for i, line in enumerate(tree)
         if line.startswith("Exchange hashpartitioning(")
     ]
-    assert len(kernels) == 1 and len(exchanges) == 1, tree
+
+    def ancestors(i):
+        d = depth[i]
+        for j in range(i - 1, -1, -1):
+            if depth[j] < d:
+                d = depth[j]
+                yield tree[j]
+
+    assert len(kernels) == 1 and 1 <= len(exchanges) <= 2, tree
     k, x = kernels[0], exchanges[0]
+    assert all(
+        any(a.startswith("BroadcastExchange") for a in ancestors(i))
+        for i in exchanges[1:]
+    ), tree
     # MapInArrow <- Sort(bucket, term, salt, doc_id) <- the Exchange
     assert x == k + 2 and tree[k + 1].startswith(
         "Sort [bucket ASC NULLS FIRST, term ASC NULLS FIRST, "

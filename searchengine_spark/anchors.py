@@ -32,27 +32,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import catalog, checkpoint
-from .pagerank import normalize_url
+from .pagerank import _RE_HREF, normalize_url
 from .textprep import java_tokens, stem_tokens
 
-# href + inner text; DOTALL because anchor text may wrap lines
-_RE_A = re.compile(r'<a\s+[^>]*?href="([^"]*)"[^>]*>(.*?)</a>',
-                   re.IGNORECASE | re.DOTALL)
+_RE_A_CLOSE = re.compile(r"</a>", re.IGNORECASE)
 
 # one row per inbound anchor occurrence: anchor_index less n_anchors
 ANCHOR_SCHEMA = catalog.schema(catalog.ANCHOR_INDEX, drop=("n_anchors",))
 
 
 def extract_anchors(page: str) -> list[tuple[str, str]]:
-    """(href, anchor_text) pairs; drops #fragment/empty hrefs with the
-    same rule as ``pagerank.extract_hrefs`` so both stages see the same
-    links."""
+    """(href, anchor_text) pairs, one per ``pagerank.extract_hrefs``
+    link: the same href matches (``_RE_HREF``) and the same
+    #fragment/empty rule, so the anchor field credits exactly the edge
+    targets. The text runs from the end of the link's tag to the next
+    ``</a>``; a link with no closing tag has no text."""
     out = []
-    for m in _RE_A.finditer(page):
+    for m in _RE_HREF.finditer(page):
         u = m.group(1)
         if u.startswith("#") or not u.strip():
             continue
-        out.append((u, m.group(2)))
+        start = page.find(">", m.end()) + 1
+        close = _RE_A_CLOSE.search(page, start) if start else None
+        out.append((u, page[start:close.start()] if close else ""))
     return out
 
 

@@ -44,9 +44,9 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
-from . import catalog, checkpoint
+from . import catalog, checkpoint, corpus
 from .bm25 import tf_norm
 from .compress import encode_segment
 from .textprep import (
@@ -83,14 +83,42 @@ def _ingest_filter(pages: DataFrame) -> DataFrame:
     )
 
 
-def ingest(spark: SparkSession, pages_path: str) -> DataFrame:
+# the pages corpus is external input: one declared schema, the writer's
+PAGES_SPARK_SCHEMA = from_arrow_schema(corpus.PAGES_SCHEMA)
+
+
+def ingest(spark: SparkSession, *pages_paths: str) -> DataFrame:
     """Read the pages corpus and apply the explicit ingestion predicates.
 
     The reference hard-codes these inside its table-scan executor
     (``spark/Worker.java:310-319``); here they are declarative so Catalyst
-    pushes them into the parquet scan.
+    pushes them into the parquet scan. The read uses the declared
+    ``PAGES_SPARK_SCHEMA``, so it runs no schema-inference job; one
+    file's footer is checked instead (pyarrow, no Spark job), and a pages
+    table lacking a declared column is refused.
     """
-    return _ingest_filter(spark.read.parquet(pages_path))
+    _check_pages_footer(pages_paths)
+    return _ingest_filter(spark.read.schema(PAGES_SPARK_SCHEMA).parquet(*pages_paths))
+
+
+def _check_pages_footer(pages_paths: tuple[str, ...]) -> None:
+    """Raise ValueError when the first pages file (a path itself, or the
+    first visible file directly under a directory) lacks a column of
+    ``corpus.PAGES_SCHEMA``."""
+    import pyarrow.parquet as pq
+
+    for p in pages_paths:
+        files = [p] if os.path.isfile(p) else [
+            f for f in catalog.list_files(p)
+            if not os.path.basename(f).startswith(("_", "."))
+        ]
+        if files:
+            missing = set(corpus.PAGES_SCHEMA.names) - set(pq.read_schema(files[0]).names)
+            if missing:
+                raise ValueError(
+                    f"pages table {files[0]} lacks column(s) {sorted(missing)}"
+                )
+            return
 
 
 def _chunk_files(pages_path: str, n_chunks: int) -> list[list[str]] | None:
@@ -175,7 +203,7 @@ def build_tokens_stage(
             if not file_chunks[c]:
                 os.makedirs(out, exist_ok=True)
                 return out, 0, 0
-            pages = _ingest_filter(spark.read.parquet(*file_chunks[c]))
+            pages = ingest(spark, *file_chunks[c])
         else:
             pages = ingest(spark, pages_path).filter(
                 F.pmod(F.xxhash64("url"), F.lit(n_chunks)) == F.lit(c)

@@ -2,18 +2,20 @@
 
 Two physical strategies, one semantics:
 
-* ``score_exhaustive`` — the fully-distributed DataFrame path: bucket-
-  pruned segment scan -> ``decode_segments`` -> broadcast-join of the (tiny)
-  query-term table -> deterministic fold-sum per (query, doc) ->
-  window top-k. This is the scale path: no per-group memory beyond one
-  segment blob, every join against query terms is a broadcast, the scan
-  touches only the buckets holding query terms.
+* ``score_exhaustive`` — the fully-distributed DataFrame path, one plan
+  per request batch: bucket-pruned segment scan -> ``decode_segments``
+  -> broadcast-join of the (tiny) query-term table -> one deterministic
+  fold-sum aggregation per (query, doc) that also carries the title,
+  anchor, phrase and exclusion hits as zero-score rows -> window top-k.
+  Every request mode (OR, AND, PHRASE), ``-term`` exclusion and offset
+  rides that one plan; the scan touches only the buckets holding query
+  or exclusion terms, and every join against query terms is a broadcast.
 * ``wand.py`` — per-query block-max WAND over the same segments for
   low-latency serving (validated equal to the exhaustive path).
 
-``decode_segments`` is the one Spark-side segment reader: scoring and
-exclusions decode doc/tf/dl only, phrase matching and the merge
-(``merge.py``) also decode positions; the bytes themselves are
+``decode_segments`` is the one Spark-side segment reader: scoring
+decodes doc/tf/dl only, phrase matching and the merge (``merge.py``)
+also decode positions; the bytes themselves are
 ``compress.decode_segment``'s.
 
 Determinism contract (rank-identity across parallelism — SURVEY.md §7.3):
@@ -76,6 +78,21 @@ def parse_exclusions(q: dict) -> list[str]:
     if isinstance(raw, (list, tuple)):
         raw = " ".join(raw)
     return parse_query(raw)
+
+
+MODES = ("OR", "AND", "PHRASE")
+
+
+def query_mode(q: dict, modes: tuple[str, ...] = MODES) -> str:
+    """A request's mode, upper-cased (default OR). A mode outside
+    ``modes`` raises ValueError: a scorer that silently ran its own
+    default on junk would answer a different query than the other."""
+    mode = str(q.get("mode", "OR")).upper()
+    if mode not in modes:
+        raise ValueError(
+            f"query mode must be one of {', '.join(modes)}, got {q.get('mode')!r}"
+        )
+    return mode
 
 
 def load_segments(spark: SparkSession, root: str, terms: list[str]) -> DataFrame:
@@ -201,7 +218,6 @@ def phrase_match(spark: SparkSession, root: str, phrase: list[str]) -> DataFrame
         per_doc.filter(F.col("n_slots") == len(stemmed))
         .select("doc_id", F.size(inter).alias("n_hits"))
         .filter(F.col("n_hits") > 0)
-        .orderBy("doc_id")
     )
 
 
@@ -219,28 +235,23 @@ def term_idfs(spark: SparkSession, root: str, terms: list[str], n_docs: int) -> 
 def _query_terms_df(
     spark: SparkSession, queries: list[dict], idfs: dict[str, float]
 ) -> DataFrame:
-    """(query_id, term, idf, n_terms, mode, k); absent terms are kept for
-    the AND n_terms count but carry no postings."""
+    """(query_id, term, idf, n_terms, mode, k, off, deny): one row per
+    scoring term (absent terms are kept for the AND n_terms count but
+    carry no postings) and one ``deny`` row per exclusion term, whose
+    idf 0.0 makes its posting score exactly 0.0. ``k`` is the last rank
+    a request keeps, ``off`` the ranks it skips (its offset)."""
     rows = []
     for q in queries:
-        mode = str(q.get("mode", "OR")).upper()
-        if mode not in ("OR", "AND"):
-            # the two physical strategies default opposite ways on junk
-            # values (exhaustive -> AND, WAND -> OR); fail loudly instead
-            raise ValueError(f"query mode must be OR or AND, got {q.get('mode')!r}")
+        qid, mode = int(q["query_id"]), query_mode(q)
         terms = parse_query(q["query"])
-        for t in terms:
-            rows.append(
-                (
-                    int(q["query_id"]),
-                    t,
-                    float(idfs.get(t, 0.0)),
-                    len(terms),
-                    mode,
-                    int(q.get("k", 15)),
-                )
-            )
-    schema = "query_id int, term string, idf double, n_terms int, mode string, k int"
+        off = int(q.get("offset", 0) or 0)
+        req = (len(terms), mode, off + int(q.get("k", 15)), off)
+        rows += [(qid, t, float(idfs.get(t, 0.0)), *req, 0) for t in terms]
+        rows += [(qid, t, 0.0, *req, 1) for t in parse_exclusions(q)]
+    schema = (
+        "query_id int, term string, idf double, n_terms int, mode string, "
+        "k int, off int, deny int"
+    )
     return catalog.local_df(spark, rows, schema)
 
 
@@ -252,14 +263,23 @@ def all_query_terms(queries: list[dict]) -> list[str]:
     return list(out)
 
 
+_REQUEST_COLS = ("n_terms", "mode", "k", "off")
+
+
 def score_exhaustive(
     spark: SparkSession,
     root: str,
     queries: list[dict],
-    restrict: DataFrame | None = None,
     w_anchor: float = 0.0,
 ) -> DataFrame:
-    """(query_id, doc_id, bm25, blended, rank) for every query, top-k.
+    """(query_id, rank, doc_id, bm25, blended) for every query, top-k,
+    in one plan. A query is ``{query_id, query, mode, k, offset,
+    exclude}``: ``mode`` OR (default), AND (every term matches) or
+    PHRASE (AND, and the terms of ``query`` occur at consecutive
+    positions, ``phrase_match``); ``exclude`` drops every doc holding
+    one of its terms (``parse_exclusions``) before the top-k, so k fills
+    from survivors; ranks ``offset+1 .. offset+k`` are kept (ranks are
+    absolute).
 
     bm25(q,d) = fold-sum over the query's terms (sorted) of
     idf * (k1+1) * tf / (tf + k1*(1-b+b*dl/avgdl)).
@@ -267,15 +287,14 @@ def score_exhaustive(
                [+ w_anchor*anchor_hit].
     Tie-break: score DESC, doc_id ASC (total order).
 
-    ``restrict`` — optional (query_id, doc_id) candidate allow-list,
-    applied BEFORE the top-k window (so k fills from the restricted
-    set, not post-cut). The phrase serving mode passes the positional
-    phrase matches here; the restriction must cover every query_id in
-    ``queries`` or the uncovered queries return no rows.
+    Title, anchor, phrase and exclusion hits ride the one (query, doc)
+    aggregation as rows with score 0.0 (an IEEE additive identity, so
+    the bm25 fold is bit-identical with or without them) and a flag
+    column each; only posting rows of scoring terms make a candidate.
 
     ``w_anchor`` — weight of the inbound-anchor-text hit
     (``anchors.build_anchor_stage``); the DEFAULT 0.0 skips the anchor
-    union entirely, keeping the reference-parity plan bit-identical.
+    rows entirely, keeping the reference-parity plan bit-identical.
     Nonzero weights only reorder docs already matching in the body
     (anchor-only docs never become candidates).
     """
@@ -283,10 +302,14 @@ def score_exhaustive(
 
     n_docs, avgdl = read_stats(spark, root)
     terms = all_query_terms(queries)
-    idfs = term_idfs(spark, root, terms, n_docs)
-    qt = _query_terms_df(spark, queries, idfs)
+    qt = _query_terms_df(spark, queries, term_idfs(spark, root, terms, n_docs))
+    ex_terms = {t for q in queries for t in parse_exclusions(q)}
+    use_anchor = w_anchor != 0.0 and catalog.exists(root, catalog.ANCHOR_INDEX)
+    hit_flags = ["title", "phrase"] + (["anchor"] if use_anchor else [])
 
-    matches = decode_segments(load_segments(spark, root, terms), positions=False)
+    matches = decode_segments(
+        load_segments(spark, root, sorted(set(terms) | ex_terms)), positions=False
+    )
     scored = matches.join(F.broadcast(qt), "term").select(
         "query_id",
         "doc_id",
@@ -296,58 +319,43 @@ def score_exhaustive(
             * F.lit(K1 + 1.0)
             * tf_norm(F.col("tf"), F.col("doc_len"), avgdl)
         ).alias("score"),
-        F.col("n_terms"),
-        F.col("mode"),
-        F.col("k"),
-        F.lit(1).alias("is_match"),
-        F.lit(0.0).alias("title"),
+        *_REQUEST_COLS,
+        (1 - F.col("deny")).alias("is_match"),
+        "deny",
+        *(F.lit(0).alias(c) for c in hit_flags),
     )
 
-    # title hits ride the SAME aggregation instead of a join+distinct:
-    # their score is exactly 0.0 (an IEEE additive identity), so the
-    # sorted-term bm25 fold is bit-identical with or without them.
-    title_path = catalog.path(root, catalog.TITLE_INDEX)
-    anchor_path = catalog.path(root, catalog.ANCHOR_INDEX)
-    use_anchor = w_anchor != 0.0 and os.path.exists(anchor_path)
-    if use_anchor:
-        scored = scored.withColumn("anchor", F.lit(0.0))
-    if os.path.exists(title_path):
+    def hits(df: DataFrame, flag: str) -> DataFrame:
+        """(query_id, doc_id, term) rows that only set ``flag``."""
+        return df.select(
+            "query_id",
+            "doc_id",
+            "term",
+            F.lit(0.0).alias("score"),
+            *(F.lit(None).cast(qt.schema[c].dataType).alias(c) for c in _REQUEST_COLS),
+            F.lit(0).alias("is_match"),
+            F.lit(0).alias("deny"),
+            *(F.lit(int(c == flag)).alias(c) for c in hit_flags),
+        )
+
+    # an excluded term in a title or anchor must not count as a hit
+    hit_terms = F.broadcast(qt.filter(F.col("deny") == 0).select("query_id", "term"))
+    if catalog.exists(root, catalog.TITLE_INDEX):
         title = catalog.read(spark, root, catalog.TITLE_INDEX)
-        th = title.join(
-            F.broadcast(qt.select("query_id", "term").distinct()), "term"
-        ).select(
-            "query_id",
-            "doc_id",
-            "term",
-            F.lit(0.0).alias("score"),
-            F.lit(None).cast("int").alias("n_terms"),
-            F.lit(None).cast("string").alias("mode"),
-            F.lit(None).cast("int").alias("k"),
-            F.lit(0).alias("is_match"),
-            F.lit(1.0).alias("title"),
-        )
-        if use_anchor:
-            th = th.withColumn("anchor", F.lit(0.0))
-        scored = scored.unionAll(th)
+        scored = scored.unionAll(hits(title.join(hit_terms, "term"), "title"))
     if use_anchor:
-        # anchor hits ride the same aggregation with score 0.0 exactly
-        # like title rows — the bm25 fold stays bit-identical
         anchor = catalog.read(spark, root, catalog.ANCHOR_INDEX)
-        ah = anchor.join(
-            F.broadcast(qt.select("query_id", "term").distinct()), "term"
-        ).select(
-            "query_id",
-            "doc_id",
-            "term",
-            F.lit(0.0).alias("score"),
-            F.lit(None).cast("int").alias("n_terms"),
-            F.lit(None).cast("string").alias("mode"),
-            F.lit(None).cast("int").alias("k"),
-            F.lit(0).alias("is_match"),
-            F.lit(0.0).alias("title"),
-            F.lit(1.0).alias("anchor"),
-        )
-        scored = scored.unionAll(ah)
+        scored = scored.unionAll(hits(anchor.join(hit_terms, "term"), "anchor"))
+    for q in queries:
+        if query_mode(q) == "PHRASE":
+            # token order and duplicates kept: parse_query dedups, which
+            # is right for bag-of-words scoring but wrong for a phrase
+            phrase = phrase_match(spark, root, java_tokens(q["query"].lower()))
+            scored = scored.unionAll(hits(phrase.select(
+                F.lit(int(q["query_id"])).alias("query_id"),
+                "doc_id",
+                F.lit("").alias("term"),
+            ), "phrase"))
 
     per_doc = scored.groupBy("query_id", "doc_id").agg(
         # deterministic fold order: sort per-term scores by term name
@@ -357,48 +365,23 @@ def score_exhaustive(
             lambda acc, x: acc + x["score"],
         ).alias("bm25"),
         F.sum("is_match").alias("n_hit"),
+        F.max("deny").alias("denied"),
         F.max("title").alias("title_hit"),
-        F.first("n_terms", ignorenulls=True).alias("n_terms"),
-        F.first("mode", ignorenulls=True).alias("mode"),
-        F.first("k", ignorenulls=True).alias("k"),
+        F.max("phrase").alias("phrased"),
         *([F.max("anchor").alias("anchor_hit")] if use_anchor else []),
+        *(F.first(c, ignorenulls=True).alias(c) for c in _REQUEST_COLS),
     )
-    # candidates = docs with at least one posting match (title-only rows
-    # are not candidates — reference oracle semantics)
+    # candidates = docs with at least one scoring-term posting (title-
+    # only rows are not candidates — reference oracle semantics)
     candidates = per_doc.filter(
         (F.col("n_hit") > 0)
+        & (F.col("denied") == 0)
         & ((F.col("mode") == "OR") | (F.col("n_hit") == F.col("n_terms")))
+        & ((F.col("mode") != "PHRASE") | (F.col("phrased") == 1))
     )
-    if restrict is not None:
-        # phrase serving: the allow-list is k-to-hundreds of rows —
-        # broadcast semi-join, the candidate side never shuffles for it
-        candidates = candidates.join(
-            F.broadcast(restrict.select("query_id", "doc_id")),
-            ["query_id", "doc_id"],
-            "left_semi",
-        )
-
-    # NOT semantics: drop docs containing any excluded term BEFORE the
-    # top-k window. The deny side can be head-term-sized, so this is a
-    # plain shuffled anti-join on (query_id, doc_id), never a broadcast.
-    ex_by_q = {int(q["query_id"]): parse_exclusions(q) for q in queries}
-    ex_rows = [(qid, t) for qid, ts in ex_by_q.items() for t in ts]
-    if ex_rows:
-        ex_terms = sorted({t for _, t in ex_rows})
-        eqt = catalog.local_df(spark, ex_rows, "query_id int, term string")
-        deny = (
-            decode_segments(load_segments(spark, root, ex_terms), positions=False)
-            .join(F.broadcast(eqt), "term")
-            .select("query_id", "doc_id")
-            .distinct()
-        )
-        candidates = candidates.join(
-            deny, ["query_id", "doc_id"], "left_anti"
-        )
 
     # blend: pagerank
-    pr_path = catalog.path(root, catalog.PAGERANKS)
-    if os.path.exists(pr_path):
+    if catalog.exists(root, catalog.PAGERANKS):
         pr = catalog.read(spark, root, catalog.PAGERANKS).select(
             "doc_id", F.col("rank").alias("pagerank")
         )
@@ -420,6 +403,6 @@ def score_exhaustive(
     )
     return (
         blended.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
+        .filter((F.col("rank") > F.col("off")) & (F.col("rank") <= F.col("k")))
         .select("query_id", "rank", "doc_id", "bm25", "blended")
     )

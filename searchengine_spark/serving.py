@@ -9,7 +9,10 @@ Reference parity:
 * paginate  = sort desc -> skip(offset).limit(limit), defaults offset=0,
               limit=15 (``Mainpage.java:48-51,121-132``)
 
-Physical shape: with a docstore built (``build_docstore``), the ranked
+Physical shape: a batch of requests is scored by ONE
+``query.score_exhaustive`` plan — every mode (OR, AND, PHRASE), every
+``-term`` exclusion and every offset rides it (``_topk_df`` only builds
+the request dicts). With a docstore built (``build_docstore``), the ranked
 top-k is collected and looked up in a doc-id-sorted forward index via a
 pushed ``In(doc_id)`` filter — O(k) row groups, the Spark analog of the
 reference's per-URL KVS point GET — in one job whose rows come back as
@@ -30,7 +33,7 @@ from pyspark.sql import types as T
 
 from . import catalog, checkpoint
 from .indexer import ingest
-from .query import phrase_match, score_exhaustive
+from .query import score_exhaustive
 from .textprep import _RE_P, _RE_TITLE, java_tokens
 
 SNIPPET_WORDS = 50
@@ -190,65 +193,13 @@ def _topk_df(
     """(query_id, rank, doc_id, bm25, blended) for a list of request
     dicts ``{query, mode, k, offset}``; query_id = list index; rank
     spans [offset+1, offset+k] (absolute ranks, one page per request).
-
-    PHRASE requests score in a separate ``score_exhaustive`` call:
-    its ``restrict`` allow-list must cover every query_id it scores
-    with, so phrase and non-phrase requests cannot share one."""
-    plain_qs: list[dict] = []
-    phrase_qs: list[dict] = []
-    restricts: list[DataFrame] = []
+    One ``score_exhaustive`` call scores the whole batch."""
+    qs = []
     for i, r in enumerate(reqs):
-        mode = str(r.get("mode", "OR")).upper()
         query, exclude = split_exclusions(r["query"])
-        k = int(r.get("k", DEFAULT_LIMIT))
-        offset = int(r.get("offset", 0) or 0)
-        q = {"query_id": i, "query": query, "k": offset + k,
-             "exclude": exclude}
-        if mode == "PHRASE":
-            # keep token order and duplicates — parse_query dedups,
-            # which is right for bag-of-words scoring but wrong for a
-            # phrase
-            toks = java_tokens(query.lower())
-            restricts.append(
-                phrase_match(spark, root, toks).select(
-                    F.lit(i).alias("query_id"), "doc_id"
-                )
-            )
-            # a phrase match contains every term, so AND == OR over the
-            # restricted candidates; AND is declared for plan clarity
-            q["mode"] = "AND"
-            phrase_qs.append(q)
-        else:
-            q["mode"] = mode
-            plain_qs.append(q)
-    parts: list[DataFrame] = []
-    if plain_qs:
-        parts.append(
-            score_exhaustive(spark, root, plain_qs, w_anchor=w_anchor)
-        )
-    if phrase_qs:
-        restrict = restricts[0]
-        for extra in restricts[1:]:
-            restrict = restrict.unionAll(extra)
-        parts.append(
-            score_exhaustive(
-                spark, root, phrase_qs, restrict=restrict,
-                w_anchor=w_anchor,
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    offs = catalog.local_df(
-        spark,
-        [(i, int(r.get("offset", 0) or 0)) for i, r in enumerate(reqs)],
-        "query_id int, off int",
-    )
-    return (
-        out.join(F.broadcast(offs), "query_id")
-        .filter(F.col("rank") > F.col("off"))
-        .drop("off")
-    )
+        qs.append({**r, "query_id": i, "query": query, "exclude": exclude,
+                   "k": r.get("k", DEFAULT_LIMIT)})
+    return score_exhaustive(spark, root, qs, w_anchor=w_anchor)
 
 
 ATTACHED_SCHEMA = (
@@ -363,7 +314,7 @@ def search_many(
     spark: SparkSession, root: str, pages_path: str, reqs: list[dict],
     w_anchor: float = 0.0,
 ) -> list[list]:
-    """Batched serving: one scoring job + one doc lookup for N
+    """Batched serving: one scoring plan + one doc lookup for N
     requests; returns per-request row lists (rank-ascending, ranks
     absolute as in :func:`search`). ``reqs``: ``{query, mode, k,
     offset}`` dicts. Results are identical to N independent
@@ -383,16 +334,18 @@ def search_many(
 
 
 class QueryBatcher:
-    """Micro-batches concurrent search requests into one Spark job.
+    """Micro-batches concurrent search requests into one scoring plan.
 
     The reference serves from a 100-thread pool over one shared backend
     (``webserver/Server.java:17``); the Spark analog is sharing one
-    *job*. On perfbench's ``serve`` index (4,000 pages, 4-vCPU VM) a
-    lone request takes ~2.3 s, most of it fixed cost (job scheduling,
-    segment reads, python decode spin-up), while a batch of four
-    answers in ~3.2 s: ~0.3 s per added query. The in-flight job is the
-    main window — requests arriving while a batch executes queue up and
-    all ship in the next one — plus a short gather window
+    *plan*. On perfbench's ``serve`` index (4,000 pages, 4-vCPU VM) a
+    lone request takes ~2.5 s, most of it fixed cost (job scheduling,
+    segment reads, python decode spin-up), while four concurrent
+    clients see ~2.7 s per request (10-run medians): every mode of a
+    batch rides one scoring plan, so a batch costs little more than
+    one request. The in-flight batch is the main window — requests
+    arriving while a batch executes queue up and all ship in the next
+    one — plus a short gather window
     (``GATHER_WINDOW_S``, 50 ms) before each batch, so the convoy of
     clients the previous batch released lands in one batch instead of
     trickling into 1-request batches (without it concurrent qps

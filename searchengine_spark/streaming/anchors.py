@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..anchors import anchor_occurrences
+from ..indexer import PAGES_SPARK_SCHEMA
 from . import batch_dir
-from .ingest import PAGES_SPARK_SCHEMA
 
 
 def stream_anchor_occurrences(

@@ -27,22 +27,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import catalog
-from ..indexer import _bucket, _ingest_filter, docs_with_scoring_text, tokenize
-from . import batch_dir
-
-PAGES_SPARK_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
+from ..indexer import (
+    PAGES_SPARK_SCHEMA,
+    _bucket,
+    _ingest_filter,
+    docs_with_scoring_text,
+    tokenize,
 )
+from . import batch_dir
 
 
 def stream_tokenize(

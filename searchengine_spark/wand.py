@@ -58,6 +58,7 @@ from .query import (
     load_segments,
     parse_exclusions,
     parse_query,
+    query_mode,
     term_idfs,
 )
 
@@ -476,7 +477,7 @@ def score_wand(
                 "query_id": int(q["query_id"]),
                 "terms": qterms,
                 "exclude": parse_exclusions(q),
-                "mode": q.get("mode", "OR"),
+                "mode": query_mode(q, ("OR", "AND")),
                 "k": int(q.get("k", 15)),
             }
         )

@@ -39,12 +39,13 @@ reproduced").
 
 Physical shape: the reference runs a bespoke 100-thread socket server
 (``webserver/Server.java:17``) doing one KVS HTTP fetch per term/url;
-here ``ThreadingHTTPServer`` supplies request threads and every request
-submits one Spark job on a shared ``SparkSession`` (thread-safe: Spark
-schedules concurrent actions from multiple threads). The per-request
-plan is the serving plan audited in SURVEY §8.3 — top-k via the salted
-index, broadcast of the k ranked rows into the corpus lookup; no
-full-corpus shuffle per request.
+here ``ThreadingHTTPServer`` supplies request threads, and every
+request goes through one :class:`searchengine_spark.serving.QueryBatcher`,
+which coalesces concurrent requests into one scoring plan and one
+docstore fetch per batch on a shared ``SparkSession``. The batch plan
+is the serving plan audited in SURVEY §8.3 — top-k via the salted
+index, a k-row lookup of the ranked docs; no full-corpus shuffle per
+request.
 """
 
 from __future__ import annotations
@@ -57,7 +58,7 @@ from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import SparkSession
 
-from .serving import DEFAULT_LIMIT, QueryBatcher, search
+from .serving import DEFAULT_LIMIT, QueryBatcher
 
 _FORM_PAGE = """<!DOCTYPE html>
 <html>
@@ -93,14 +94,10 @@ def format_search_results(rows) -> str:
 
 class SearchHandler(BaseHTTPRequestHandler):
     """One handler class per server instance (built by :func:`make_server`
-    so the Spark session and index paths ride on class attributes, the
+    so the server's :class:`QueryBatcher` rides on a class attribute, the
     stdlib's intended extension point)."""
 
-    spark: SparkSession = None  # type: ignore[assignment]
-    index_root: str = ""
-    pages_path: str = ""
-    batcher: "QueryBatcher | None" = None
-    w_anchor: float = 0.0  # server-level anchor blend weight (0 = reference parity)
+    batcher: QueryBatcher = None  # type: ignore[assignment]
 
     # quiet by default; tests flip this on via server attribute if needed
     def log_message(self, fmt, *args):  # noqa: D102
@@ -126,24 +123,10 @@ class SearchHandler(BaseHTTPRequestHandler):
         limit = int(params.get("limit", [str(DEFAULT_LIMIT)])[0])
         mode = (params.get("mode", ["OR"])[0] or "OR").upper()
         mode = mode if mode in ("AND", "OR", "PHRASE") else "OR"
-        if self.batcher is not None:
-            # concurrent requests coalesce into one Spark job — the
-            # per-job fixed cost amortizes across the pool exactly like
-            # the reference's shared-backend thread pool
-            rows = self.batcher.search(
-                query, mode=mode, k=offset + limit, offset=0
-            )
-        else:
-            rows = search(
-                self.spark,
-                self.index_root,
-                self.pages_path,
-                query,
-                mode=mode,
-                k=offset + limit,
-                offset=0,
-                w_anchor=self.w_anchor,
-            ).collect()
+        # concurrent requests coalesce into one batch — the per-job
+        # fixed cost amortizes across the pool exactly like the
+        # reference's shared-backend thread pool
+        rows = self.batcher.search(query, mode=mode, k=offset + limit, offset=0)
         return rows, offset, limit
 
     def do_GET(self):  # noqa: N802 (stdlib API name)
@@ -202,30 +185,15 @@ def make_server(
     pages_path: str,
     host: str = "127.0.0.1",
     port: int = 0,
-    batch: bool = True,
     w_anchor: float = 0.0,
 ) -> ThreadingHTTPServer:
     """Build (but don't start) the HTTP server; ``port=0`` binds an
     ephemeral port (read it back from ``server.server_address``).
-    ``batch=True`` (default) coalesces concurrent requests into shared
-    Spark jobs via :class:`searchengine_spark.serving.QueryBatcher`;
-    results are identical either way."""
-    batcher = (
-        QueryBatcher(spark, index_root, pages_path, w_anchor=w_anchor)
-        if batch
-        else None
-    )
-    handler = type(
-        "BoundSearchHandler",
-        (SearchHandler,),
-        {
-            "spark": spark,
-            "index_root": index_root,
-            "pages_path": pages_path,
-            "batcher": batcher,
-            "w_anchor": w_anchor,
-        },
-    )
+    Requests are answered through one
+    :class:`searchengine_spark.serving.QueryBatcher`, which coalesces
+    concurrent requests into shared Spark jobs."""
+    batcher = QueryBatcher(spark, index_root, pages_path, w_anchor=w_anchor)
+    handler = type("BoundSearchHandler", (SearchHandler,), {"batcher": batcher})
     server = ThreadingHTTPServer((host, port), handler)
     server.batcher = batcher  # so shutdown hooks can close it
     return server
@@ -237,14 +205,11 @@ def start_server(
     pages_path: str,
     host: str = "127.0.0.1",
     port: int = 0,
-    batch: bool = True,
     w_anchor: float = 0.0,
 ) -> tuple[ThreadingHTTPServer, threading.Thread]:
     """Start the server on a daemon thread; returns (server, thread).
     Stop with ``server.shutdown()``."""
-    server = make_server(
-        spark, index_root, pages_path, host, port, batch, w_anchor
-    )
+    server = make_server(spark, index_root, pages_path, host, port, w_anchor)
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()
     return server, thread

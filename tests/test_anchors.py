@@ -36,6 +36,25 @@ def test_extract_anchors_rules():
     ]
 
 
+def test_anchor_targets_are_edge_targets():
+    """Anchors and PageRank read the same links: on pages whose tags
+    carry an href-like attribute before the href, or leave a link
+    unclosed, every anchor target is an edge target, and the text is
+    credited to the href PageRank follows."""
+    from searchengine_spark.pagerank import extract_hrefs
+
+    pages = [
+        '<a data-href="/x" href="/y">go</a>',
+        '<p><a href="/y">dangling</p>',
+        '<a class="c" href="/p" data-href="/q">p text</A>',
+    ]
+    for page in pages:
+        edges = extract_hrefs(page)
+        assert [u for u, _ in extract_anchors(page)] == edges, page
+    assert extract_anchors(pages[0]) == [("/y", "go")]
+    assert extract_anchors(pages[2])[0] == ("/p", "p text")
+
+
 def test_anchor_terms_match_planted_edges(spark, tiny_pages_path):
     """The aggregated anchor field equals what the planted edge list
     implies: every edge contributes its anchor text's stemmed token set

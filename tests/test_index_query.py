@@ -132,6 +132,30 @@ def test_lineage_recomputes_on_input_change(spark, tiny_pages_path):
     assert len(metrics) == n_first + 2, "all groups must recompute on new input"
 
 
+def test_pages_read_with_declared_schema(spark, tiny_pages_path, tmp_path):
+    """The pages corpus is read with its declared schema: ingest runs no
+    schema-inference job, and a pages table lacking a declared column
+    (here html) is still refused, before any Spark job."""
+    from searchengine_spark.indexer import PAGES_SPARK_SCHEMA, ingest
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ingest-declared-schema", "ingest")
+    try:
+        pages = ingest(spark, tiny_pages_path)
+    finally:
+        sc.setJobGroup(None, None)
+    assert pages.schema == PAGES_SPARK_SCHEMA
+    assert not sc.statusTracker().getJobIdsForGroup("ingest-declared-schema")
+    no_html = tmp_path / "pages_no_html"
+    no_html.mkdir()
+    pq.write_table(
+        pq.read_table(tiny_pages_path).drop(["html"]),
+        str(no_html / "part-00000.parquet"),
+    )
+    with pytest.raises(ValueError, match="html"):
+        ingest(spark, str(no_html))
+
+
 def test_n_buckets_from_metadata(spark, tiny_pages_path):
     """Bucket count comes from persisted metadata, not directory counting:
     an index whose term hashes leave some buckets empty (partitionBy omits

@@ -7,6 +7,7 @@ AQE runtime decisions, which legitimately vary with stats."""
 
 import contextlib
 import io
+import itertools
 import os
 import re
 
@@ -515,11 +516,12 @@ def tiny_docstore(spark, tiny_index, tiny_pages_path):
 def test_request_tables_are_local_relations(
     spark, tiny_docstore, tiny_pages_path
 ):
-    """Driver-built tables on the request path — the query-term table,
-    the phrase slots and exclusion table, the offsets table and the
-    attached ranked rows — plan as LocalRelations. A LogicalRDD over a
-    PythonRDD (createDataFrame of a list) starts a Python-worker task
-    per core to unpickle a few rows."""
+    """Driver-built tables on the request path — the query-term table
+    (exclusions and offsets are its rows and columns), its title-hit
+    routing projection, the phrase slots and the attached ranked rows —
+    plan as LocalRelations. A LogicalRDD over a PythonRDD
+    (createDataFrame of a list) starts a Python-worker task per core to
+    unpickle a few rows."""
     from searchengine_spark.corpus import VOCAB
     from searchengine_spark.query import _query_terms_df
     from searchengine_spark.serving import _attach_docs, _topk_df
@@ -537,11 +539,39 @@ def test_request_tables_are_local_relations(
     ]
     topk = _topk_df(spark, tiny_docstore, reqs)
     lp = optimized(topk)
-    # query terms, offsets, phrase slots, exclusion terms
-    assert lp.count("LocalRelation") >= 4, lp
+    relations = sorted(
+        re.sub(r"#\d+L?", "", cols)
+        for cols in re.findall(r"LocalRelation \[([^\]]*)\]", lp)
+    )
+    # query terms, the title-hit routing, the phrase slots
+    assert relations == [
+        "query_id, term",
+        "query_id, term, idf, n_terms, mode, k, off, deny",
+        "term, slot",
+    ], lp
     assert "LogicalRDD" not in lp, lp
     attached = _attach_docs(spark, tiny_docstore, tiny_pages_path, topk)
     assert optimized(attached).lstrip().startswith("LocalRelation")
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def _warm_job_count(spark, root, pages_path, reqs):
+    """(rows, Spark jobs) of a warm search_many over ``reqs``."""
+    from searchengine_spark.serving import search_many
+
+    warm = search_many(spark, root, pages_path, reqs)
+    # a group of its own: the status tracker keeps earlier groups' jobs
+    group = f"search-many-job-count-{next(_JOB_GROUPS)}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "one warm search_many")
+    try:
+        got = search_many(spark, root, pages_path, reqs)
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == warm
+    return got, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_search_many_job_count(spark, tiny_docstore, tiny_pages_path):
@@ -550,18 +580,31 @@ def test_search_many_job_count(spark, tiny_docstore, tiny_pages_path):
     Python-worker job per driver-built table, no job for the corpus
     scalars (read from _meta.json), and one docstore fetch whose rows
     come back as a local table (18 jobs before, then 11 while n_docs and
-    avgdl came from a stats table)."""
+    avgdl came from a stats table, then 10 while offsets were a joined
+    table)."""
     from searchengine_spark.corpus import VOCAB
-    from searchengine_spark.serving import search_many
 
     reqs = [{"query": f"{VOCAB[0]} {VOCAB[1]}", "mode": "OR", "k": 5}]
-    warm = search_many(spark, tiny_docstore, tiny_pages_path, reqs)
-    group = "search-many-job-count"
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "one warm search_many")
-    try:
-        got = search_many(spark, tiny_docstore, tiny_pages_path, reqs)
-    finally:
-        sc.setJobGroup(None, None)
-    assert got == warm and got[0]
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10
+    got, jobs = _warm_job_count(spark, tiny_docstore, tiny_pages_path, reqs)
+    assert got[0]
+    assert jobs == 8
+
+
+def test_search_many_mixed_batch_job_count(spark, tiny_docstore, tiny_pages_path):
+    """A warm batch mixing every request shape — OR, AND, PHRASE and a
+    -term exclusion at an offset — is one scoring plan: exclusions ride
+    the scoring decode and PHRASE rides the scoring aggregation, so the
+    batch runs a pinned number of jobs, not one plan per shape (22
+    jobs while PHRASE requests were a second plan and exclusions a
+    second decode)."""
+    from searchengine_spark.corpus import VOCAB
+
+    reqs = [
+        {"query": f"{VOCAB[0]} {VOCAB[1]}", "mode": "OR", "k": 5},
+        {"query": f"{VOCAB[0]} {VOCAB[2]}", "mode": "AND", "k": 5},
+        {"query": f"{VOCAB[0]} {VOCAB[1]}", "mode": "PHRASE", "k": 5},
+        {"query": f"{VOCAB[1]} -{VOCAB[3]}", "mode": "OR", "k": 5, "offset": 2},
+    ]
+    got, jobs = _warm_job_count(spark, tiny_docstore, tiny_pages_path, reqs)
+    assert got[0] and got[3]
+    assert jobs == 10

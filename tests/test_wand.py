@@ -343,6 +343,22 @@ def test_score_wand_exclusions(spark, tiny_index):
     )
 
 
+def test_score_wand_mode_is_validated(spark, tiny_index):
+    """WAND reads a request's mode the way the exhaustive scorer does:
+    case-insensitively, and a junk mode raises instead of running OR."""
+    from searchengine_spark.corpus import VOCAB
+
+    q = {"query_id": 0, "query": f"{VOCAB[0]} {VOCAB[1]}", "k": 10**6}
+    upper = score_wand(spark, tiny_index, [{**q, "mode": "AND"}]).collect()
+    lower = score_wand(spark, tiny_index, [{**q, "mode": "and"}]).collect()
+    either = score_wand(spark, tiny_index, [{**q, "mode": "OR"}]).collect()
+    assert lower == upper
+    assert upper != either  # AND and OR differ on this query: non-vacuous
+    for junk in ("XOR", "PHRASE"):
+        with pytest.raises(ValueError):
+            score_wand(spark, tiny_index, [{**q, "mode": junk}])
+
+
 def test_score_exhaustive_exclusions(spark, tiny_index):
     """The blended exhaustive path honors the same NOT semantics: the
     excluded docs vanish and k fills from survivors, ranks re-numbered."""

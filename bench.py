@@ -547,9 +547,6 @@ def main() -> None:
             lambda: score_exhaustive(spark, idx_root, qs).count())
         timings["topk_wand"] = _best2(
             lambda: score_wand(spark, idx_root, qs).count())
-        # bounded-memory serving plan: doc-space range-parallel WAND
-        timings["topk_wand_ranged"] = _best2(
-            lambda: score_wand(spark, idx_root, qs, n_ranges=8).count())
 
         # serving-tier builds over the same index + corpus: the docstore
         # forward index (title/snippet extraction paid once, Arrow-

@@ -15,10 +15,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 _FIRST = "abcdefghijklmnopqrstuvwxyz"
 _SECOND = "acegikmoqs"
 # byte value v (0..255) -> 2-char code: letter (v % 26) + vowel-ish (v // 26)
@@ -37,12 +33,3 @@ def reference_hash(x: str) -> str:
     """Byte-identical replica of the reference's ``Hasher.hash``."""
     digest = hashlib.sha1(x.encode("utf-8")).digest()
     return "".join(_BYTE2CHARS[_java_byte_index(b)] for b in digest)
-
-
-def reference_hash_series(urls: pd.Series) -> pd.Series:
-    return urls.map(reference_hash)
-
-
-def doc_id_col(url_col: str = "url") -> Column:
-    """Engine doc_id: deterministic 64-bit hash of the url (JVM-side)."""
-    return F.xxhash64(F.col(url_col)).alias("doc_id")

@@ -72,7 +72,7 @@ def salt_expr(n_salts_col):
 
 
 def salt_of(doc_ids: np.ndarray, n_salts: int) -> np.ndarray:
-    """numpy twin of ``salt_expr`` (merge job / tests)."""
+    """numpy twin of ``salt_expr`` (tests)."""
     top32 = ((doc_ids.astype(np.int64) >> 32) + (1 << 31)).astype(np.int64)
     return ((top32 * n_salts) >> 32).astype(np.int32)
 
@@ -411,9 +411,7 @@ def _segments_kernel(avgdl: float):
     return kernel
 
 
-def encode_segments(
-    spark: SparkSession, toks: DataFrame, target_postings: int, avgdl: float
-) -> DataFrame:
+def encode_segments(toks: DataFrame, target_postings: int, avgdl: float) -> DataFrame:
     """Token rows (bucket, term, doc_id, tf, positions, doc_len) -> one
     ``POSTINGS_SCHEMA`` row per (bucket, term, salt) — the one segment
     writer of the batch build and the merge.
@@ -554,7 +552,7 @@ def build_postings_stage(
             F.col("bucket").isin(layout.buckets(g))
         )
         out = layout.group_dir(root, g)
-        encode_segments(spark, toks, target_postings, avgdl).write.mode(
+        encode_segments(toks, target_postings, avgdl).write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(out)
         n, nbytes = catalog.parquet_rows_bytes(out)

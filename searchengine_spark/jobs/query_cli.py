@@ -22,10 +22,6 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=15)
     ap.add_argument("--offset", type=int, default=0)
     ap.add_argument("--wand", action="store_true")
-    ap.add_argument(
-        "--n-ranges", type=int, default=1,
-        help="WAND doc-range parallelism (bounds per-task memory on head terms)",
-    )
     ap.add_argument("--pages", default=None)
     args = ap.parse_args()
 
@@ -38,7 +34,8 @@ def main() -> None:
                 "query_id": 0,
                 "query": args.query,
                 "mode": args.mode,
-                "k": args.offset + args.k,
+                "k": args.k,
+                "offset": args.offset,
             }
         ]
         if args.pages:
@@ -51,12 +48,12 @@ def main() -> None:
         elif args.wand:
             from searchengine_spark.wand import score_wand
 
-            df = score_wand(spark, args.root, qs, n_ranges=args.n_ranges)
+            df = score_wand(spark, args.root, qs)
         else:
             from searchengine_spark.query import score_exhaustive
 
             df = score_exhaustive(spark, args.root, qs)
-        df.show(args.k + args.offset, truncate=80)
+        df.show(args.k, truncate=80)
     finally:
         spark.stop()
 

@@ -229,9 +229,7 @@ def merge_tokens_stage(
         toks = toks.persist()
 
         def write(staged: str) -> None:
-            segments = encode_segments(
-                spark, toks, layout.target_postings, avgdl
-            )
+            segments = encode_segments(toks, layout.target_postings, avgdl)
             segments.drop("bucket").write.mode("overwrite").parquet(staged)
             # the marker rides inside the staged bucket, so the swap
             # makes the segments and the record of what they hold live

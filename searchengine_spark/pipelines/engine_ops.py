@@ -957,9 +957,10 @@ ORDER BY b.shard
 
 # --------------------------------------------------------------------------
 # q207: query decode-budget estimator — the per-term serving cost
-# model behind WAND's range planning (wand.py's n_ranges scales with
-# df): for each query term, the EXACT varbyte posting-list size from
-# the real doc-id gap distribution (delta + varbyte is the classic
+# model behind WAND's range planning (a query's range count is its
+# most-salted term's salts, so it scales with df): for each query
+# term, the EXACT varbyte posting-list size from the real doc-id gap
+# distribution (delta + varbyte is the classic
 # postings layout, q138's audit measures the corpus-wide version;
 # this is the per-QUERY-term view a query planner prices before
 # choosing ranges/caches). Bytes(gap) is the integer 7-bit-group

@@ -181,86 +181,104 @@ def decode_segments(segments: DataFrame, positions: bool) -> DataFrame:
     return segments.mapInArrow(kernel, schema)
 
 
-def phrase_match(spark: SparkSession, root: str, phrase: list[str]) -> DataFrame:
-    """Exact-phrase docs from the positional index: (doc_id, n_hits)
-    where the stemmed phrase terms occur at consecutive positions.
-    Adjacency is checked JVM-side on the decoded position arrays
-    (arrays_overlap of shifted positions via higher-order functions)."""
-    stemmed = [porter_stem(t) for t in phrase]
-    if not stemmed:
-        return catalog.local_df(spark, [], "doc_id long, n_hits int")
-    # ONE decode pass: the previous per-term join chain re-ran the
-    # bucket-pruned segment scan and the Python position decode once per
-    # phrase term. Each (term, slot) of the phrase is a row of a tiny
-    # broadcast table (a repeated term gets one row per slot), the
-    # decoded postings fan out to their slots in a single map-side join,
-    # and a phrase occurrence = one position present in EVERY slot's
-    # shifted set — an order-insensitive array-intersection fold, so the
-    # collect_list ordering cannot affect n_hits.
-    slots = catalog.local_df(
-        spark, [(t, i) for i, t in enumerate(stemmed)], "term string, slot int"
+def phrase_match(
+    spark: SparkSession, root: str, phrases: dict[int, list[str]]
+) -> DataFrame:
+    """Exact-phrase docs of every phrase of a batch from the positional
+    index: (query_id, doc_id, n_hits) where query ``query_id``'s stemmed
+    phrase terms occur at consecutive positions. One bucket-pruned scan
+    and one positions decode serve all phrases: each (query, term, slot)
+    of a phrase is a row of a tiny broadcast table (a repeated term gets
+    one row per slot), the decoded postings fan out to their slots in a
+    single map-side join, and a phrase occurrence = one position present
+    in EVERY slot's shifted set — an order-insensitive array-intersection
+    fold, so the collect_list ordering cannot affect n_hits. Adjacency is
+    checked JVM-side with higher-order functions."""
+    slots = [
+        (qid, porter_stem(t), i, len(phrase))
+        for qid, phrase in phrases.items()
+        for i, t in enumerate(phrase)
+    ]
+    slots_df = catalog.local_df(
+        spark, slots, "query_id int, term string, slot int, n_slots int"
     )
-    pos = decode_segments(load_segments(spark, root, stemmed), positions=True)
-    shifted = pos.join(F.broadcast(slots), "term").select(
+    terms = sorted({term for _, term, _, _ in slots})
+    pos = decode_segments(load_segments(spark, root, terms), positions=True)
+    shifted = pos.join(F.broadcast(slots_df), "term").select(
+        "query_id",
         "doc_id",
+        "n_slots",
         F.transform("positions", lambda pp: pp - F.col("slot")).alias("sp"),
     )
-    per_doc = shifted.groupBy("doc_id").agg(
-        F.count("*").alias("n_slots"),
+    per_doc = shifted.groupBy("query_id", "doc_id", "n_slots").agg(
+        F.count("*").alias("n"),
         F.collect_list("sp").alias("sets"),
     )
     inter = F.aggregate(
-        F.slice("sets", 2, len(stemmed)),
+        "sets",
         F.element_at("sets", 1),
         lambda acc, x: F.array_intersect(acc, x),
     )
     return (
-        per_doc.filter(F.col("n_slots") == len(stemmed))
-        .select("doc_id", F.size(inter).alias("n_hits"))
+        per_doc.filter(F.col("n") == F.col("n_slots"))
+        .select("query_id", "doc_id", F.size(inter).alias("n_hits"))
         .filter(F.col("n_hits") > 0)
     )
 
 
-def term_idfs(spark: SparkSession, root: str, terms: list[str], n_docs: int) -> dict[str, float]:
-    """Per-term idf, computed driver-side in Python float64 (one ln
-    definition for engine + oracle). A term's df is the exact integer
-    sum of ``n_postings`` over its salted segments: one collect of the
-    bucket-pruned (term, n_postings) rows."""
+def term_stats(
+    spark: SparkSession, root: str, terms: list[str], n_docs: int
+) -> dict[str, tuple[float, int]]:
+    """term -> (idf, n_salts) for every term with postings, from one
+    collect of the bucket-pruned (term, n_postings, n_salts) segment
+    rows. idf is computed driver-side in Python float64 (one ln
+    definition for engine + oracle) from df, the exact integer sum of
+    ``n_postings`` over the term's salted segments."""
     df: dict[str, int] = {}
-    for r in load_segments(spark, root, terms).select("term", "n_postings").collect():
+    salts: dict[str, int] = {}
+    rows = load_segments(spark, root, terms).select("term", "n_postings", "n_salts")
+    for r in rows.collect():
         df[r["term"]] = df.get(r["term"], 0) + r["n_postings"]
-    return {t: idf(n_docs, d) for t, d in df.items()}
+        salts[r["term"]] = max(salts.get(r["term"], 1), r["n_salts"])
+    return {t: (idf(n_docs, d), salts[t]) for t, d in df.items()}
+
+
+def term_idfs(spark: SparkSession, root: str, terms: list[str], n_docs: int) -> dict[str, float]:
+    """Per-term idf (``term_stats``)."""
+    return {t: i for t, (i, _) in term_stats(spark, root, terms, n_docs).items()}
 
 
 def _query_terms_df(
-    spark: SparkSession, queries: list[dict], idfs: dict[str, float]
+    spark: SparkSession, queries: list[dict], stats: dict[str, tuple[float, int]]
 ) -> DataFrame:
-    """(query_id, term, idf, n_terms, mode, k, off, deny): one row per
-    scoring term (absent terms are kept for the AND n_terms count but
-    carry no postings) and one ``deny`` row per exclusion term, whose
-    idf 0.0 makes its posting score exactly 0.0. ``k`` is the last rank
-    a request keeps, ``off`` the ranks it skips (its offset)."""
+    """(query_id, term, idf, n_terms, mode, k, off, deny, ranges): the
+    request rows both scorers read. One row per scoring term (absent
+    terms are kept for the AND n_terms count but carry no postings) and
+    one ``deny`` row per exclusion term, whose idf 0.0 makes its posting
+    score exactly 0.0. ``k`` is the last rank a request keeps, ``off``
+    the ranks it skips (its offset). ``ranges`` is the most salts any of
+    the request's scoring or exclusion terms has (``term_stats``; 1
+    when none is salted): the doc-id ranges WAND splits it into."""
     rows = []
     for q in queries:
         qid, mode = int(q["query_id"]), query_mode(q)
-        terms = parse_query(q["query"])
+        terms, excluded = parse_query(q["query"]), parse_exclusions(q)
         off = int(q.get("offset", 0) or 0)
+        ranges = max((stats.get(t, (0.0, 1))[1] for t in terms + excluded), default=1)
         req = (len(terms), mode, off + int(q.get("k", 15)), off)
-        rows += [(qid, t, float(idfs.get(t, 0.0)), *req, 0) for t in terms]
-        rows += [(qid, t, 0.0, *req, 1) for t in parse_exclusions(q)]
+        rows += [(qid, t, stats.get(t, (0.0, 1))[0], *req, 0, ranges) for t in terms]
+        rows += [(qid, t, 0.0, *req, 1, ranges) for t in excluded]
     schema = (
         "query_id int, term string, idf double, n_terms int, mode string, "
-        "k int, off int, deny int"
+        "k int, off int, deny int, ranges int"
     )
     return catalog.local_df(spark, rows, schema)
 
 
 def all_query_terms(queries: list[dict]) -> list[str]:
-    out: dict[str, None] = {}
-    for q in queries:
-        for t in parse_query(q["query"]):
-            out.setdefault(t, None)
-    return list(out)
+    """Every scoring and exclusion term of a batch, sorted: the terms a
+    scorer reads segments and stats for."""
+    return sorted({t for q in queries for t in parse_query(q["query"]) + parse_exclusions(q)})
 
 
 _REQUEST_COLS = ("n_terms", "mode", "k", "off")
@@ -302,13 +320,12 @@ def score_exhaustive(
 
     n_docs, avgdl = read_stats(spark, root)
     terms = all_query_terms(queries)
-    qt = _query_terms_df(spark, queries, term_idfs(spark, root, terms, n_docs))
-    ex_terms = {t for q in queries for t in parse_exclusions(q)}
+    qt = _query_terms_df(spark, queries, term_stats(spark, root, terms, n_docs))
     use_anchor = w_anchor != 0.0 and catalog.exists(root, catalog.ANCHOR_INDEX)
     hit_flags = ["title", "phrase"] + (["anchor"] if use_anchor else [])
 
     matches = decode_segments(
-        load_segments(spark, root, sorted(set(terms) | ex_terms)), positions=False
+        load_segments(spark, root, terms), positions=False
     )
     scored = matches.join(F.broadcast(qt), "term").select(
         "query_id",
@@ -346,16 +363,18 @@ def score_exhaustive(
     if use_anchor:
         anchor = catalog.read(spark, root, catalog.ANCHOR_INDEX)
         scored = scored.unionAll(hits(anchor.join(hit_terms, "term"), "anchor"))
-    for q in queries:
-        if query_mode(q) == "PHRASE":
-            # token order and duplicates kept: parse_query dedups, which
-            # is right for bag-of-words scoring but wrong for a phrase
-            phrase = phrase_match(spark, root, java_tokens(q["query"].lower()))
-            scored = scored.unionAll(hits(phrase.select(
-                F.lit(int(q["query_id"])).alias("query_id"),
-                "doc_id",
-                F.lit("").alias("term"),
-            ), "phrase"))
+    # token order and duplicates kept: parse_query dedups, which is
+    # right for bag-of-words scoring but wrong for a phrase
+    phrases = {
+        int(q["query_id"]): java_tokens(q["query"].lower())
+        for q in queries
+        if query_mode(q) == "PHRASE"
+    }
+    if phrases:
+        phrased = phrase_match(spark, root, phrases)
+        scored = scored.unionAll(hits(phrased.select(
+            "query_id", "doc_id", F.lit("").alias("term")
+        ), "phrase"))
 
     per_doc = scored.groupBy("query_id", "doc_id").agg(
         # deterministic fold order: sort per-term scores by term name

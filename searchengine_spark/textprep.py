@@ -109,17 +109,8 @@ def _decode(html: object) -> str:
     return str(html)
 
 
-def extract_title_series(html: pd.Series) -> pd.Series:
-    return html.map(lambda h: extract_text_title(_decode(h)))
-
-
 def extract_titlep_lower_series(html: pd.Series) -> pd.Series:
     return html.map(lambda h: extract_text_titlep_lower(_decode(h)))
-
-
-def stem_series(tokens: pd.Series) -> pd.Series:
-    """Stem a Series of single tokens (query-side)."""
-    return tokens.map(lambda t: porter_stem(t) if t is not None else None)
 
 
 def doc_term_stats(text: str) -> tuple[list[str], list[int], list[list[int]], int, int]:

@@ -7,10 +7,12 @@ of every term (``frontend/Mainpage.java:63-110``); WAND visits only
 documents that can still enter the top-k.
 
 Physical shape: one bucket-pruned segment scan for all query terms →
-broadcast-join the query-term table → ``applyInPandas`` grouped by
-query_id, so each query's WAND runs where its (few) segment rows land —
-queries parallelize across the cluster, posting data never leaves the
-executor that read it, and the driver sees only k rows per query.
+broadcast-join the request rows (``query._query_terms_df``, the table
+the exhaustive scorer reads) → ``applyInPandas`` grouped by (query_id,
+doc range), so each query's WAND runs where its (few) segment rows land
+— queries and ranges parallelize across the cluster, posting data never
+leaves the executor that read it, and the driver sees only k rows per
+query.
 
 Scoring: BM25 with the engine's constants — score(q,d) = Σ_t idf_t ·
 (k1+1) · tf_norm where tf_norm = tf/(tf + k1(1-b+b·dl/avgdl)) is
@@ -30,14 +32,16 @@ cursor actually visits the block (``_LazyTermList``). Skipped blocks
 are never decoded: at 100 TB decode/IO dominates, so the pruning must
 save bytes, not just float math.
 
-Bounded memory (``n_ranges > 1``): the doc-id space is split into
-``n_ranges`` equal slices; each (query, range) task receives only the
+Bounded memory: a query's doc-id space splits into as many equal
+ranges as its most-salted term (scoring or exclusion) has salts —
+n_salts = ceil(df / target_postings), read in the same driver-side
+collect that gives df. Each (query, range) task receives only the
 salted blobs overlapping its slice (JVM-side range arithmetic on
-(salt, n_salts)), computes a range-local top-k, and a final JVM window
-merges the partials — per-task compressed bytes are ~max(df/R,
-TARGET_POSTINGS) per term instead of the full head-term posting list.
-Results are rank-identical to n_ranges=1 (ranges partition the doc
-space; scores are computed with the same fold)."""
+(salt, n_salts)), so it holds about two blobs per term at most, and a
+query with no salted term runs as one task. A window merges the
+range-local top-ks; results are rank-identical to one task per query
+(ranges partition the doc space; scores are computed with the same
+fold)."""
 
 from __future__ import annotations
 
@@ -48,27 +52,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from . import catalog
 from .bm25 import K1, tf_norm
 from .compress import decode_segment_block
 from .query import (
+    _query_terms_df,
     all_query_terms,
     load_segments,
-    parse_exclusions,
-    parse_query,
     query_mode,
-    term_idfs,
-)
-
-TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.IntegerType()),
-        T.StructField("rank", T.IntegerType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("bm25", T.DoubleType()),
-    ]
+    term_stats,
 )
 
 
@@ -440,153 +432,108 @@ _SEG_COLS = [
 ]
 
 
-def _range_bounds(rng: int, n_ranges: int) -> tuple[int, int]:
+def _range_bounds(rng: int, ranges: int) -> tuple[int, int]:
     """[lo_doc, hi_doc] (signed int64, inclusive) of doc-id range slice
-    ``rng`` — the same top-32-bit quantile arithmetic as the salt."""
-    lo_top = -(-(rng << 32) // n_ranges)          # ceil(rng*2^32 / R)
-    hi_top_excl = -(-((rng + 1) << 32) // n_ranges)
+    ``rng`` of ``ranges`` — the same top-32-bit quantile arithmetic as
+    the salt."""
+    lo_top = -(-(rng << 32) // ranges)          # ceil(rng*2^32 / R)
+    hi_top_excl = -(-((rng + 1) << 32) // ranges)
     lo_doc = (lo_top << 32) - (1 << 63)
     hi_doc = (hi_top_excl << 32) - 1 - (1 << 63)
     return lo_doc, min(hi_doc, _INT64_MAX)
 
 
-def score_wand(
-    spark: SparkSession, root: str, queries: list[dict], n_ranges: int = 1
-) -> DataFrame:
-    """Distributed WAND: (query_id, rank, doc_id, bm25) for every query.
-    Pure-BM25 ranking (tie doc_id ASC); the blend path stays in
-    ``query.score_exhaustive``.
+_PARTIAL_SCHEMA = "query_id int, doc_id long, bm25 double, k int, off int"
 
-    ``n_ranges > 1`` bounds per-task memory for head terms: each
-    (query, doc-range) task receives only the salted blobs overlapping
-    its range slice (range salting makes a blob's doc interval a pure
-    function of (salt, n_salts), so the overlap set is computed
-    JVM-side), WANDs a range-local top-k, and a window merges partials
-    — rank-identical to the single-task plan."""
-    from .indexer import read_stats
 
-    n_docs, avgdl = read_stats(spark, root)
-    terms = all_query_terms(queries)
-    idfs = term_idfs(spark, root, terms, n_docs)
-
-    qmeta = []
-    for q in queries:
-        qterms = parse_query(q["query"])
-        qmeta.append(
-            {
-                "query_id": int(q["query_id"]),
-                "terms": qterms,
-                "exclude": parse_exclusions(q),
-                "mode": query_mode(q, ("OR", "AND")),
-                "k": int(q.get("k", 15)),
-            }
-        )
-    qmeta_b = spark.sparkContext.broadcast(qmeta)
-    idfs_b = spark.sparkContext.broadcast(idfs)
-
-    # deny-list segments ride the same bucket-pruned scan + per-query
-    # routing as the scoring terms; the kernel splits them back apart
-    ex_terms = sorted({t for qm in qmeta for t in qm["exclude"]})
-    segs = load_segments(
-        spark, root, sorted(set(terms) | set(ex_terms))
-    ).select(*_SEG_COLS, "n_salts")
-    qt_rows = [
-        (qm["query_id"], t)
-        for qm in qmeta
-        for t in dict.fromkeys(qm["terms"] + qm["exclude"])
-    ]
-    if not qt_rows:
-        return catalog.local_df(spark, [], TOPK_SCHEMA)
-    qt = catalog.local_df(spark, qt_rows, "query_id int, term string")
-    joined = segs.join(F.broadcast(qt), "term")
-
-    ranged = n_ranges > 1
-    if ranged:
-        # blob (salt, n_salts) covers top-32 interval
-        # [ceil(salt*2^32/n_salts), ceil((salt+1)*2^32/n_salts) - 1];
-        # replicate the row to every overlapping range slice
-        R = int(n_ranges)
-        lo_top = F.expr("(salt * 4294967296L + n_salts - 1) div n_salts")
-        hi_top = F.expr(
-            "((salt + 1) * 4294967296L + n_salts - 1) div n_salts - 1"
-        )
-        joined = joined.withColumn(
-            "rng",
-            F.explode(
-                F.sequence(
-                    F.shiftright(lo_top * F.lit(R), 32).cast("int"),
-                    F.shiftright(hi_top * F.lit(R), 32).cast("int"),
-                )
-            ),
-        )
-    else:
-        joined = joined.withColumn("rng", F.lit(0))
-        R = 1
+def _range_topk(avgdl: float):
+    """The (query, range) kernel: a range-local top-k over the request
+    rows that landed in the range — each one segment row joined to a
+    ``query._query_terms_df`` row."""
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         qid, rng = int(key[0]), int(key[1])
-        lo_doc, hi_doc = (_range_bounds(rng, R) if ranged else (None, None))
-        qm = next(m for m in qmeta_b.value if m["query_id"] == qid)
-        by_term: dict[str, list[dict]] = {}
+        req = pdf.iloc[0]
+        lo_doc, hi_doc = _range_bounds(rng, int(req["ranges"]))
+        by_term: dict[tuple[int, str], list[dict]] = {}
         for r in pdf.to_dict("records"):
-            by_term.setdefault(r["term"], []).append(r)
-        tls = []
-        present = sorted(set(qm["terms"]))
-        for order, t in enumerate(present):
-            if t in by_term:
-                tls.append(
-                    merge_salted(
-                        by_term[t], idfs_b.value.get(t, 0.0), avgdl,
-                        lo_doc=lo_doc, hi_doc=hi_doc, field_order=order,
-                    )
-                )
-        deny = [
+            by_term.setdefault((r["deny"], r["term"]), []).append(r)
+        scoring = sorted(t for d, t in by_term if not d)
+        excluded = sorted(t for d, t in by_term if d)
+        # AND needs every term in the range: a term that has no blob
+        # overlapping it (or no postings at all) empties the slice
+        if req["mode"] == "AND" and len(scoring) < req["n_terms"]:
+            scoring = []
+        tls = [
             merge_salted(
-                by_term[t], 0.0, avgdl,
-                lo_doc=lo_doc, hi_doc=hi_doc,
+                by_term[0, t], by_term[0, t][0]["idf"], avgdl,
+                lo_doc=lo_doc, hi_doc=hi_doc, field_order=order,
             )
-            for t in sorted(set(qm["exclude"]))
-            if t in by_term
+            for order, t in enumerate(scoring)
         ]
-        # an absent term empties a conjunction — but only GLOBALLY
-        # absent terms count: in a range task a term may simply have no
-        # blob overlapping this slice, which is fine for AND because
-        # the intersection within the slice is then empty anyway
-        if qm["mode"] == "AND" and any(
-            t not in by_term for t in set(qm["terms"])
-        ):
-            tls = []
-        hits = wand_topk(tls, qm["k"], qm["mode"], excluded=deny)
+        deny = [
+            merge_salted(by_term[1, t], 0.0, avgdl, lo_doc=lo_doc, hi_doc=hi_doc)
+            for t in excluded
+        ]
+        hits = wand_topk(tls, int(req["k"]), req["mode"], excluded=deny)
         return pd.DataFrame(
             {
                 "query_id": pd.Series([qid] * len(hits), dtype="int32"),
-                "rank": pd.Series(range(1, len(hits) + 1), dtype="int32"),
                 "doc_id": pd.Series([d for d, _ in hits], dtype="int64"),
                 "bm25": pd.Series([s for _, s in hits], dtype="float64"),
+                "k": pd.Series([req["k"]] * len(hits), dtype="int32"),
+                "off": pd.Series([req["off"]] * len(hits), dtype="int32"),
             }
         )
 
-    partial = joined.groupBy("query_id", "rng").applyInPandas(
-        kernel, TOPK_SCHEMA
+    return kernel
+
+
+def score_wand(spark: SparkSession, root: str, queries: list[dict]) -> DataFrame:
+    """Distributed WAND: (query_id, rank, doc_id, bm25) for every query.
+    Pure-BM25 ranking (tie doc_id ASC); the blend path stays in
+    ``query.score_exhaustive``. A query is ``{query_id, query, mode, k,
+    offset, exclude}`` as there, with ``mode`` OR or AND; ranks
+    ``offset+1 .. offset+k`` are kept.
+
+    Each query runs as ``ranges`` (query, doc-range) tasks, the most
+    salts any of its terms has (``query._query_terms_df``): each task
+    receives only the salted blobs overlapping its slice (range salting
+    makes a blob's doc interval a pure function of (salt, n_salts), so
+    the overlap set is computed JVM-side), WANDs a range-local top-k,
+    and a window merges the partials — rank-identical to one task per
+    query."""
+    from .indexer import read_stats
+
+    for q in queries:
+        query_mode(q, ("OR", "AND"))
+    n_docs, avgdl = read_stats(spark, root)
+    terms = all_query_terms(queries)
+    qt = _query_terms_df(spark, queries, term_stats(spark, root, terms, n_docs))
+    # deny-list segments ride the same bucket-pruned scan and per-query
+    # routing as the scoring terms; the kernel splits them back apart
+    segs = load_segments(spark, root, terms).select(*_SEG_COLS, "n_salts")
+    # blob (salt, n_salts) covers top-32 interval
+    # [ceil(salt*2^32/n_salts), ceil((salt+1)*2^32/n_salts) - 1]; the
+    # row goes to every range slice of its query that it overlaps
+    lo_top = F.expr("(salt * 4294967296L + n_salts - 1) div n_salts")
+    hi_top = F.expr("((salt + 1) * 4294967296L + n_salts - 1) div n_salts - 1")
+    rng = F.sequence(
+        F.shiftright(lo_top * F.col("ranges"), 32).cast("int"),
+        F.shiftright(hi_top * F.col("ranges"), 32).cast("int"),
     )
-    if ranged:
-        # merge range-local top-ks: global top-k under the same total
-        # tie-break; k varies per query, so re-join the per-query k
-        kdf = catalog.local_df(
-            spark, [(m["query_id"], m["k"]) for m in qmeta], "query_id int, k int"
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("bm25"), F.asc("doc_id")
-        )
-        partial = (
-            partial.join(F.broadcast(kdf), "query_id")
-            .withColumn("grank", F.row_number().over(w))
-            .filter(F.col("grank") <= F.col("k"))
-            .select(
-                "query_id",
-                F.col("grank").cast("int").alias("rank"),
-                "doc_id",
-                "bm25",
-            )
-        )
-    return partial.orderBy("query_id", "rank")
+    partial = (
+        segs.join(F.broadcast(qt), "term")
+        .withColumn("rng", F.explode(rng))
+        .drop("n_salts")
+        .groupBy("query_id", "rng")
+        .applyInPandas(_range_topk(avgdl), _PARTIAL_SCHEMA)
+    )
+    # merge range-local top-ks under the same total tie-break
+    w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
+    return (
+        partial.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter((F.col("rank") > F.col("off")) & (F.col("rank") <= F.col("k")))
+        .select("query_id", "rank", "doc_id", "bm25")
+        .orderBy("query_id", "rank")
+    )

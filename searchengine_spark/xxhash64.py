@@ -2,9 +2,11 @@
 matching Spark's ``xxhash64`` SQL function (seed 42 over UTF-8 bytes for
 strings, little-endian 64-bit words for longs).
 
-Used ONLY by the Spark-free oracle to derive the same deterministic
-doc_id = xxhash64(url) the engine computes JVM-side; equality with
-Spark's builtin is asserted in tests/test_ids.py.
+Wherever Python must reproduce a hash the JVM computes: the Spark-free
+oracle's doc_id = xxhash64(url), the query-side term bucket
+(``indexer.term_buckets``), and the doc ids that the Python kernels of
+``pagerank.extract_edges`` and ``anchors.anchor_occurrences`` derive
+from urls. Equality with Spark's builtin is asserted in tests/test_ids.py.
 """
 
 from __future__ import annotations

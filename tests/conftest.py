@@ -52,6 +52,26 @@ def tiny_index(spark, tiny_pages_path):
 
 
 @pytest.fixture(scope="session")
+def salted_index(spark, tiny_pages_path):
+    """The tiny corpus at 16 postings per segment: its head terms carry
+    many salts, so WAND splits their queries into many doc ranges. The
+    same postings as ``tiny_index``, so answers must be equal."""
+    from searchengine_spark.catalog import INDEX_FORMAT
+    from searchengine_spark.indexer import build_index
+
+    root = os.path.join(FIXDIR, "index_salted")
+    marker = os.path.join(root, "_TEST_BUILD_OK")
+    fmt = f"ok-v{INDEX_FORMAT}-t16"
+    if not (os.path.exists(marker) and open(marker).read() == fmt):
+        shutil.rmtree(root, ignore_errors=True)
+        build_index(
+            spark, tiny_pages_path, root, n_chunks=2, n_buckets=4, target_postings=16
+        )
+        open(marker, "w").write(fmt)
+    return root
+
+
+@pytest.fixture(scope="session")
 def tiny_oracle(tiny_pages_path):
     import pyarrow.parquet as pq
 

@@ -287,7 +287,7 @@ def test_segment_kernel_matches_per_run_oracle(spark, tmp_path):
             spark.conf.set(k, v)
         for n_parts in (1, 3):
             spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-            segs = encode_segments(spark, toks, target, avgdl)
+            segs = encode_segments(toks, target, avgdl)
             got = [
                 {k: bytes(v) if isinstance(v, bytearray) else v
                  for k, v in r.asDict().items()}
@@ -354,7 +354,7 @@ def test_positional_phrase_match(spark, tiny_index, tiny_pages_path):
     assert [porter_stem(t) for t in phrase] == phrase
     got = {
         r["doc_id"]: r["n_hits"]
-        for r in phrase_match(spark, tiny_index, phrase).collect()
+        for r in phrase_match(spark, tiny_index, {0: phrase}).collect()
     }
     assert got == expected
     assert expected, "fixture phrase should occur at least once"

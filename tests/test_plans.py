@@ -469,7 +469,7 @@ def test_encode_segments_is_one_arrow_kernel_over_one_shuffle(
     BroadcastExchange that feeds it to the salting join."""
     from searchengine_spark.indexer import encode_segments, read_tokens
 
-    segs = encode_segments(spark, read_tokens(spark, tiny_index), 4, 10.0)
+    segs = encode_segments(read_tokens(spark, tiny_index), 4, 10.0)
     lines = plan(segs, mode="simple").splitlines()
     depth = [len(line) - len(line.lstrip(" :+-|")) for line in lines]
     tree = [re.sub(r"#\d+L?", "", line.lstrip(" :+-|")) for line in lines]
@@ -547,7 +547,7 @@ def test_request_tables_are_local_relations(
     assert relations == [
         "query_id, term",
         "query_id, term, idf, n_terms, mode, k, off, deny",
-        "term, slot",
+        "query_id, term, slot, n_slots",
     ], lp
     assert "LogicalRDD" not in lp, lp
     attached = _attach_docs(spark, tiny_docstore, tiny_pages_path, topk)
@@ -608,3 +608,20 @@ def test_search_many_mixed_batch_job_count(spark, tiny_docstore, tiny_pages_path
     got, jobs = _warm_job_count(spark, tiny_docstore, tiny_pages_path, reqs)
     assert got[0] and got[3]
     assert jobs == 10
+
+
+def test_search_many_phrase_batch_job_count(spark, tiny_docstore, tiny_pages_path):
+    """Every PHRASE request of a batch shares one positions scan and
+    decode: three PHRASE requests run as many jobs as one (two more
+    jobs per PHRASE request while each ran its own phrase match)."""
+    from searchengine_spark.corpus import VOCAB
+
+    def phrase(a, b):
+        return {"query": f"{VOCAB[a]} {VOCAB[b]}", "mode": "PHRASE", "k": 5}
+
+    one = [phrase(0, 1)]
+    three = [phrase(0, 1), phrase(1, 2), phrase(0, 2)]
+    got_one, jobs_one = _warm_job_count(spark, tiny_docstore, tiny_pages_path, one)
+    got_three, jobs_three = _warm_job_count(spark, tiny_docstore, tiny_pages_path, three)
+    assert got_three[0] == got_one[0]
+    assert jobs_three == jobs_one

@@ -62,16 +62,16 @@ def test_wand_rank_identical_to_oracle(spark, tiny_index, tiny_oracle):
     assert n_nonempty > 10  # the fixture query set is non-trivial
 
 
-def test_wand_degenerate_queries(spark, tiny_index):
+def test_wand_degenerate_queries(spark, tiny_index, salted_index):
     qs = [
         {"query_id": 0, "query": "", "mode": "OR", "k": 10},
         {"query_id": 1, "query": "zzznotaterm", "mode": "OR", "k": 10},
         {"query_id": 2, "query": "zzznotaterm merge", "mode": "AND", "k": 10},
         {"query_id": 3, "query": "merge", "mode": "OR", "k": 0},
     ]
-    assert score_wand(spark, tiny_index, qs).collect() == []
-    assert score_wand(spark, tiny_index, qs, n_ranges=4).collect() == []
-    assert score_wand(spark, tiny_index, [], n_ranges=4).collect() == []
+    for root in (tiny_index, salted_index):
+        assert score_wand(spark, root, qs).collect() == []
+        assert score_wand(spark, root, []).collect() == []
 
 
 def _random_termlists(rng, n_terms, n_docs, full_range=False):
@@ -253,20 +253,47 @@ def test_lazy_skips_block_decode():
     )
 
 
-def test_score_wand_ranged_equals_single(spark, tiny_index):
+def _max_ranges(spark, root, queries):
+    """The most doc ranges score_wand splits any of ``queries`` into."""
+    from searchengine_spark.indexer import read_stats
+    from searchengine_spark.query import _query_terms_df, all_query_terms, term_stats
+
+    n_docs, _ = read_stats(spark, root)
+    stats = term_stats(spark, root, all_query_terms(queries), n_docs)
+    return max(r["ranges"] for r in _query_terms_df(spark, queries, stats).collect())
+
+
+def test_score_wand_ranged_equals_single(spark, tiny_index, salted_index):
     """Range-parallel serving (bounded per-task memory) is rank-identical
-    to the single-task plan."""
+    to the single-task plan: the same corpus at 16 postings per segment
+    splits its queries into many doc ranges, where the default segment
+    size keeps every query in one."""
     qs = reference_queries()
-    one = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["bm25"], 9))
-        for r in score_wand(spark, tiny_index, qs, n_ranges=1).collect()
-    }
-    four = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["bm25"], 9))
-        for r in score_wand(spark, tiny_index, qs, n_ranges=4).collect()
-    }
-    assert one == four
+    assert _max_ranges(spark, tiny_index, qs) == 1
+    assert _max_ranges(spark, salted_index, qs) > 8
+    one = score_wand(spark, tiny_index, qs).collect()
+    many = score_wand(spark, salted_index, qs).collect()
+    assert one == many
     assert len(one) > 100
+
+
+def test_score_wand_offset(spark, tiny_index, salted_index):
+    """WAND keeps ranks offset+1 .. offset+k, as the exhaustive scorer
+    does: the same rows as the first offset+k ranks less the first
+    offset, with one or many ranges, for OR, AND and -term requests."""
+    from searchengine_spark.corpus import VOCAB
+
+    qs = reference_queries()[:12] + [
+        {"query_id": 100, "query": f"{VOCAB[0]} {VOCAB[1]}", "mode": "AND"},
+        {"query_id": 101, "query": f"{VOCAB[0]} {VOCAB[1]}", "exclude": VOCAB[2]},
+    ]
+    for root in (tiny_index, salted_index):
+        full = score_wand(spark, root, [{**q, "k": 10} for q in qs]).collect()
+        paged = score_wand(
+            spark, root, [{**q, "k": 5, "offset": 5} for q in qs]
+        ).collect()
+        assert paged == [r for r in full if r["rank"] > 5]
+        assert len(paged) > 20
 
 
 @pytest.mark.parametrize("mode", ["OR", "AND"])
@@ -296,11 +323,11 @@ def test_wand_excluded_randomized(mode):
     assert n_bit > 3  # exclusion actually changed results, not vacuous
 
 
-def test_score_wand_exclusions(spark, tiny_index):
+def test_score_wand_exclusions(spark, tiny_index, salted_index):
     """Distributed NOT: score_wand with exclude == unexcluded full
-    ranking minus the excluded term's posting docs, identical for
-    n_ranges=1 and n_ranges=4; exclusion-only and junk-exclusion edge
-    cases stay sane."""
+    ranking minus the excluded term's posting docs, identical with one
+    doc range (tiny_index) and many (salted_index); exclusion-only and
+    junk-exclusion edge cases stay sane."""
     from searchengine_spark.corpus import VOCAB
 
     q, ex = f"{VOCAB[0]} {VOCAB[1]}", VOCAB[2]
@@ -316,15 +343,13 @@ def test_score_wand_exclusions(spark, tiny_index):
     }
     want = [r for r in base if r["doc_id"] not in deny_docs][:15]
     assert want != base[:15]  # head words co-occur: non-vacuous
-    for n_ranges in (1, 4):
-        got = score_wand(
-            spark, tiny_index,
-            [{"query_id": 0, "query": q, "k": 15, "exclude": ex}],
-            n_ranges=n_ranges,
-        ).collect()
+    excluding = [{"query_id": 0, "query": q, "k": 15, "exclude": ex}]
+    assert _max_ranges(spark, salted_index, excluding) > 1
+    for root in (tiny_index, salted_index):
+        got = score_wand(spark, root, excluding).collect()
         assert [(r["doc_id"], r["bm25"]) for r in got] == [
             (r["doc_id"], r["bm25"]) for r in want
-        ], f"n_ranges={n_ranges}"
+        ], root
     # excluding a junk term is a no-op; a query that is ONLY an
     # exclusion returns nothing (no positive terms to score)
     noop = score_wand(

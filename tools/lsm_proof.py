@@ -94,7 +94,7 @@ def main() -> None:
 
     qs = corpus.reference_queries()
     t0 = time.time()
-    n_rows_before = score_wand(spark, root, qs, n_ranges=8).count()
+    n_rows_before = score_wand(spark, root, qs).count()
     wand_before_s = time.time() - t0
     print(f"WAND refset before ingest: {wand_before_s:.1f}s "
           f"({n_rows_before} rows)")
@@ -138,7 +138,7 @@ def main() -> None:
           f"{'MERGED' if not rep['deferred'] else 'no-op'} {drain_s:.1f}s")
 
     t0 = time.time()
-    n_rows_after = score_wand(spark, root, qs, n_ranges=8).count()
+    n_rows_after = score_wand(spark, root, qs).count()
     wand_after_s = time.time() - t0
     amp = merged_bytes / max(delta_merged, 1)  # policy-fired merges only
     print(f"WAND refset after +{N_STREAM_BATCHES * N_PAGES_PER_BATCH} "
@@ -155,7 +155,7 @@ def main() -> None:
     t0 = time.time()
     vrep = vacuum_tokens(root)
     t0 = time.time() - t0
-    n_after = score_wand(spark, root, qs, n_ranges=8).count()
+    n_after = score_wand(spark, root, qs).count()
     assert n_after == n_rows_after, "vacuum changed serving results"
     print(f"vacuum: reclaimed {vrep['bytes_reclaimed'] >> 20} MiB of "
           f"merged token substrate in {t0:.1f}s "

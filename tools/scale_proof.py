@@ -1,12 +1,13 @@
 """One-order-of-magnitude scale datapoint (VERDICT r2 item 4).
 
 Builds the index over an sf1 corpus (2M pages — 10x the per-round bench)
-on local[$SPARK_GRAFT_CPUS], serves the reference query set via ranged
-WAND, and reports the empirical evidence behind the plan-level scale
+on local[$SPARK_GRAFT_CPUS], serves the reference query set via WAND
+(each query split into as many doc ranges as its most-salted term has
+salts), and reports the empirical evidence behind the plan-level scale
 claims:
 
 * build wall + docs/sec at 10x the bench corpus;
-* WAND serving wall at n_ranges=1 vs 8 (bounded per-task memory);
+* WAND serving wall over the reference query set;
 * the head term's salt plan: n_salts and the per-salt posting-count
   histogram (range salting must keep slices near-uniform);
 * the largest single blob's bytes = the per-task decode bound.
@@ -67,12 +68,8 @@ def main() -> None:
 
     qs = corpus.reference_queries()
     t0 = time.time()
-    n1 = score_wand(spark, root, qs).count()
-    wand1_s = time.time() - t0
-    t0 = time.time()
-    n8 = score_wand(spark, root, qs, n_ranges=8).count()
-    wand8_s = time.time() - t0
-    assert n1 == n8, f"ranged WAND row count drifted: {n1} vs {n8}"
+    n_topk = score_wand(spark, root, qs).count()
+    wand_s = time.time() - t0
 
     # head-term salt histogram: biggest-df term (df = sum of its
     # segments' n_postings), then per-(salt) posting counts from its
@@ -114,9 +111,8 @@ def main() -> None:
         "n_buckets": n_buckets,
         "build_sec": round(build_s, 1),
         "docs_per_sec": round(N_PAGES / build_s, 1),
-        "wand_refset_sec": round(wand1_s, 2),
-        "wand_refset_ranged8_sec": round(wand8_s, 2),
-        "topk_rows": n1,
+        "wand_refset_sec": round(wand_s, 2),
+        "topk_rows": n_topk,
         "head_term": head["term"],
         "head_term_df": int(head["df"]),
         "head_term_n_salts": int(head["n_salts"]),
